@@ -33,6 +33,7 @@ from cs186_query_optimization_project_spark.errors import (
     DatabaseException,
     DeadlockException,
 )
+from cs186_query_optimization_project_spark.transactions import Transaction
 
 S = "S"
 X = "X"
@@ -236,117 +237,55 @@ class LockManager:
         return out
 
 
-class PessimisticTransaction:
+class PessimisticTransaction(Transaction):
     """Blocking-2PL twin of ``transactions.Transaction``: same verbs
     (``table`` / ``query`` / ``insert_rows`` / ``update_rows`` /
     ``delete_rows`` / ``commit`` / ``rollback``), but isolation comes
     from locks instead of snapshot validation — reads take S, writes
-    upgrade to X, everything releases at end, commits never conflict."""
+    upgrade to X, everything releases at end, commits never conflict
+    with a writer of the same catalog."""
+
+    _ENDED = "committed, rolled back, or aborted"
 
     def __init__(self, db, lock_manager: LockManager) -> None:
-        self._db = db
+        super().__init__(db)
         self._lm = lock_manager
         self.txn_id = next_txn_id()
-        self._writes: dict[str, list] = {}
-        self._active = True
 
-    # ---- reads ------------------------------------------------------- #
-    def table(self, name: str) -> DataFrame:
-        self._check_active()
+    # ---- reads: S lock, then the pinned snapshot ---------------------- #
+    def _pin(self, name: str) -> tuple:
         self._lm.acquire(self.txn_id, name, S)
-        df = self._db._entry(name).df
-        for transform in self._writes.get(name, ()):
-            df = transform(df)
-        return df
-
-    def query(self, table: str, alias: str | None = None):
-        self._check_active()
-        from cs186_query_optimization_project_spark.plans.builder import (
-            Query,
-        )
-
-        return Query(self._view(), table, alias)
+        return super()._pin(name)
 
     # ---- buffered DML (applied at commit, under the X lock) ---------- #
     def insert_rows(self, name: str, rows: DataFrame):
-        self._check_active()
-        self._lm.acquire(self.txn_id, name, X)
-        from cs186_query_optimization_project_spark.transactions import (
-            verify_insert_schema,
-        )
-
-        verify_insert_schema(self.table(name), rows, name)
-        self._writes.setdefault(name, []).append(
-            lambda df, rows=rows: df.unionByName(rows))
-        return self
+        self._x(name)
+        return super().insert_rows(name, rows)
 
     def delete_rows(self, name: str, condition):
-        self._check_active()
-        self._lm.acquire(self.txn_id, name, X)
-        self._writes.setdefault(name, []).append(
-            lambda df, c=condition: df.filter(~c | c.isNull()))
-        return self
+        self._x(name)
+        return super().delete_rows(name, condition)
 
     def update_rows(self, name: str, condition,
                     assignments: dict[str, Any]):
+        self._x(name)
+        return super().update_rows(name, condition, assignments)
+
+    def _x(self, name: str) -> None:
         self._check_active()
         self._lm.acquire(self.txn_id, name, X)
-        from cs186_query_optimization_project_spark.transactions import (
-            make_update_applier,
-        )
-
-        base_cols = self.table(name).columns
-        for col_name in assignments:
-            if col_name not in base_cols:
-                raise DatabaseException(
-                    f"update '{name}': unknown column '{col_name}'")
-        self._writes.setdefault(name, []).append(
-            make_update_applier(condition, assignments))
-        return self
 
     # ---- outcome ----------------------------------------------------- #
     def commit(self) -> None:
         """Apply the intent log under the held X locks, then release.
-        No validation step: the X lock held since the first write IS the
-        guarantee that no concurrent writer interleaved.
-
-        Two-phase apply for multi-table atomicity: every table's new
-        version is STAGED first (the failure-prone parquet writes, no
-        catalog change), then all catalog pointers swap in a publish
-        loop that performs no I/O.  A failure mid-staging aborts with
-        the catalog untouched — no other transaction can ever observe
-        a half-committed state (the only residue is an orphaned,
-        never-registered version directory)."""
+        No validation wait: the X lock held since the first write IS
+        the guarantee that no writer of this catalog interleaved."""
         self._check_active()
         try:
-            staged = [self._db._stage(self._db._entry(name),
-                                      self.table(name))
-                      for name in self._writes]
-            for st in staged:
-                self._db._publish(st)
+            self._commit_writes()
         finally:
-            self._finish()
+            self._lm.release_all(self.txn_id)
 
     def rollback(self) -> None:
-        self._finish()
-        self._writes.clear()
-
-    # ------------------------------------------------------------------ #
-    def _finish(self) -> None:
-        self._active = False
+        super().rollback()
         self._lm.release_all(self.txn_id)
-
-    def _view(self):
-        # the same facade both protocols need: table()/schema() through
-        # the transaction, everything else through the parent catalog
-        from cs186_query_optimization_project_spark.transactions import (
-            _SnapshotView,
-        )
-
-        return _SnapshotView(self)
-
-    def _check_active(self) -> None:
-        if not self._active:
-            raise DatabaseException(
-                "transaction is no longer active (committed, rolled "
-                "back, or aborted)")

@@ -13,6 +13,9 @@ pushed range filters into Parquet row-group (min/max) skipping, the
 scale-out analog of an index range scan.  ``Database.create_table`` with
 ``index_columns`` sorts on write accordingly, and the optimizer's access-path
 report (plans/optimizer.py) treats those columns as index-eligible.
+
+Every writable table is a manifest table (``partitioned.PartitionedTable``),
+so its versions live in storage, seen by every catalog on the path.
 """
 
 from __future__ import annotations
@@ -25,7 +28,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from cs186_query_optimization_project_spark.errors import DatabaseException
+from cs186_query_optimization_project_spark import metaio
+from cs186_query_optimization_project_spark.errors import (
+    ConflictException,
+    DatabaseException,
+)
+from cs186_query_optimization_project_spark.partitioned import (
+    PartitionedTable,
+    commit_together,
+    merge_payload,
+    merge_source,
+)
+from cs186_query_optimization_project_spark.transactions import (
+    make_update_applier,
+    verify_insert_schema,
+)
 
 
 def ensure_private_dir(path: str) -> str:
@@ -114,20 +131,6 @@ def _restore_nanos_timestamps(df: DataFrame, path: str) -> DataFrame:
                 F.timestamp_micros(F.expr(f"`{fld.name}` div 1000")))
     return df
 
-#: Tables the driver's testdata directories always contain.
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 @dataclass
 class TableEntry:
@@ -138,6 +141,10 @@ class TableEntry:
     its own table's queries, not every query on the Database (a
     ``register_directory`` over 10 tables must not die because one
     unrelated parquet is poisoned).
+
+    ``table`` is a writable entry's manifest table and ``version`` the
+    manifest version its frame reads (a DataFrame entry counts swaps
+    there); a plain parquet or CSV entry is read-only.
     """
 
     name: str
@@ -148,12 +155,8 @@ class TableEntry:
     _df: DataFrame | None = field(default=None, repr=False)
     #: zero-arg callable producing the DataFrame; used when _df is None
     _loader: object | None = field(default=None, repr=False)
-    #: PUBLISHED version paths, oldest first (history[-1] is current).
-    #: Only commits that reached _publish appear — orphaned staged
-    #: ``.vN`` dirs from failed commits are never listed.  Catalog-
-    #: scoped, like the transaction boundary: history spans this
-    #: process's publishes, while the parquet trail on disk is durable.
-    history: list = field(default_factory=list, repr=False)
+    table: PartitionedTable | None = field(default=None, repr=False)
+    version: int = 0
 
     @property
     def df(self) -> DataFrame:
@@ -200,9 +203,6 @@ class Database:
         )
 
         self._lock_manager = LockManager()
-        #: names registered via register_partitioned — catalog DML on
-        #: them is refused (their own API owns mutations)
-        self._partitioned_names: set[str] = set()
         if data_dir is not None:
             self.register_directory(data_dir)
 
@@ -210,15 +210,24 @@ class Database:
     # registration (DDL surface: Database.createTable / deleteTable)
     # ------------------------------------------------------------------ #
     def register_directory(self, data_dir: str) -> "Database":
-        """Register every ``<name>.parquet`` under ``data_dir``."""
+        """Register every ``<name>.parquet`` and manifest table root
+        ``<name>`` under ``data_dir`` (how a catalog reopens)."""
         for fname in sorted(os.listdir(data_dir)):
+            path = os.path.join(data_dir, fname)
             if fname.endswith(".parquet"):
-                self.register_parquet(fname[: -len(".parquet")],
-                                      os.path.join(data_dir, fname))
+                self.register_parquet(fname[: -len(".parquet")], path)
+            elif metaio.IO.is_dir(os.path.join(path, "_manifests")):
+                self.register_parquet(fname, path)
         return self
 
     def register_parquet(self, name: str, path: str,
                          index_columns: tuple[str, ...] = ()) -> "Database":
+        """Register parquet: a manifest table root (writable) through
+        its newest committed manifest, anything else read-only."""
+        if metaio.IO.is_dir(os.path.join(path, "_manifests")):
+            return self._register_table(
+                name, PartitionedTable(self.spark, path), index_columns)
+
         def _load(spark=self.spark, name=name, path=path) -> DataFrame:
             try:
                 df = spark.read.parquet(path)
@@ -231,7 +240,7 @@ class Database:
             return _restore_nanos_timestamps(df, path)
 
         self._tables[name] = TableEntry(name, path, index_columns,
-                                        _loader=_load, history=[path])
+                                        _loader=_load)
         return self
 
     def register_csv(self, name: str, path: str, schema: T.StructType,
@@ -251,62 +260,71 @@ class Database:
         return self
 
     def register_partitioned(self, name: str, root: str) -> "Database":
-        """Register a ``PartitionedTable`` (partitioned.py manifests)
-        for QUERYING through this catalog — ``db.query(name)`` and the
-        optimizer see its current version like any other table.  The
-        entry pins the manifest resolved at first read (a consistent
-        MVCC snapshot; re-register to advance).  Catalog-level DML on
-        it is refused: mutations go through the PartitionedTable API,
-        whose partition-level copy-on-write supersedes this catalog's
-        whole-table rewrites."""
-        from cs186_query_optimization_project_spark.partitioned import (
-            PartitionedTable,
-        )
+        """Register a ``PartitionedTable`` root like a created table.
+        The entry reads the version current at registration until this
+        catalog commits to it; re-register to see other writers'."""
+        return self._register_table(name, PartitionedTable(self.spark, root))
 
-        pt = PartitionedTable(self.spark, root)
-        self._tables[name] = TableEntry(name, None,
-                                        _loader=lambda pt=pt: pt.read())
-        self._partitioned_names.add(name)
+    def _register_table(self, name: str, table: PartitionedTable,
+                        index_columns: tuple[str, ...] = ()) -> "Database":
+        man = table._manifest()
+        entry = TableEntry(
+            name, table.root,
+            tuple(index_columns) or tuple(man.get("sort_cols", ())),
+            table=table, version=man["version"])
+        entry._loader = lambda: table.read(version=entry.version)
+        self._tables[name] = entry
         return self
 
     def create_table(self, name: str, df: DataFrame, path: str,
                      index_columns: tuple[str, ...] = (),
                      partition_by: tuple[str, ...] = (),
                      mode: str = "error") -> "Database":
-        """Materialize ``df`` as a Parquet table.
+        """Materialize ``df`` as a manifest table at ``path``
+        (``PartitionedTable``, version 0).
 
-        ``index_columns`` → sorted-on-write inside each partition so pushed
-        filters on them skip row groups (the B+-tree analog, SURVEY.md §2.11).
-        ``partition_by`` → hive-style directory partitioning for partition
-        pruning.  At 100 TB this is the difference between a full scan and
-        reading a handful of files.
+        ``index_columns`` → sorted on every write inside each partition
+        so pushed filters on them skip row groups (the B+-tree analog,
+        SURVEY.md §2.11).  ``partition_by`` → hive-style directory
+        partitioning for partition pruning.  At 100 TB this is the
+        difference between a full scan and reading a handful of files.
+        An existing ``path`` is replaced under ``mode="overwrite"`` and
+        refused otherwise.
         """
-        writer = df
-        if index_columns:
-            writer = df.sortWithinPartitions(*index_columns)
-        out = writer.write.mode(mode)
-        if partition_by:
-            out = out.partitionBy(*partition_by)
-        out.parquet(path)
+        if metaio.IO.exists(path):
+            if mode != "overwrite":
+                raise DatabaseException(
+                    f"create_table '{name}': '{path}' already exists "
+                    f"(mode={mode!r})")
+            metaio.IO.remove_tree(path)
+        PartitionedTable._create(self.spark, df, path, list(partition_by),
+                                 None, list(index_columns))
         return self.register_parquet(name, path, index_columns)
 
     def drop_table(self, name: str) -> None:
         """Catalog-level delete (files are left in place)."""
         self._entry(name)
         del self._tables[name]
-        self._partitioned_names.discard(name)
 
     # ------------------------------------------------------------------ #
     # DML (Transaction.addRecord / updateRecord / deleteRecord,
-    # db/Database.java:317–401) — copy-on-write batch semantics
+    # db/Database.java:317–401)
     # ------------------------------------------------------------------ #
-    # The reference mutates slotted pages in place under 2PL.  The Spark
-    # analog without a table format (Delta/Iceberg) is copy-on-write: build
-    # the post-DML DataFrame declaratively, materialize it to a NEW
-    # versioned path, then swap the catalog entry.  Old versions are left
-    # on disk (simple MVCC; a vacuum is a directory delete).  At 100 TB
-    # copy-on-write is exactly what Delta does per touched file — here it
-    # is per table, the honest cost of DML without file-level metadata.
+    # The reference mutates slotted pages in place under 2PL.  Here each
+    # statement is one manifest commit (partitioned.py): it rewrites only
+    # the partitions it touches (an insert only appends), and its
+    # exclusive manifest create makes it atomic, durable and
+    # first-committer-wins for every catalog and process on the path.
+    # A DataFrame table has no storage: its DML swaps the DataFrame.
+    # Plain parquet and CSV registrations are read-only.
+
+    def _writable(self, name: str) -> TableEntry:
+        entry = self._entry(name)
+        if entry.table is None and entry.path is not None:
+            raise DatabaseException(
+                f"table '{name}' is a read-only scan of '{entry.path}'; "
+                f"create_table a writable copy to modify it")
+        return entry
 
     @contextmanager
     def _autocommit_x(self, *names: str):
@@ -320,12 +338,7 @@ class Database:
         from cs186_query_optimization_project_spark import concurrency
 
         for name in names:
-            if name in self._partitioned_names:
-                raise DatabaseException(
-                    f"table '{name}' is a partitioned-manifest table "
-                    f"(register_partitioned); catalog DML would bypass "
-                    f"its manifests — mutate through the "
-                    f"PartitionedTable API instead")
+            self._writable(name)
         tid = concurrency.next_txn_id()
         try:
             for name in sorted(names):  # global order: no lock-order cycles
@@ -334,18 +347,35 @@ class Database:
         finally:
             self._lock_manager.release_all(tid)
 
+    def _write(self, name: str, on_table, on_frame) -> "Database":
+        """One statement: ``on_table(PartitionedTable)`` commits it,
+        or ``on_frame(df)`` is a DataFrame table's new content."""
+        entry = self._entry(name)
+        if entry.table is not None:
+            on_table(entry.table)
+            self._refresh(entry)
+        else:
+            self._swap(entry, on_frame(entry.df))
+        return self
+
+    @staticmethod
+    def _refresh(entry: TableEntry) -> None:
+        """Point a manifest entry at its table's newest version."""
+        entry.version = entry.table._manifest()["version"]
+        entry.df, entry.stats = None, None
+
+    @staticmethod
+    def _swap(entry: TableEntry, df: DataFrame) -> None:
+        entry.df, entry.stats = df, None
+        entry.version += 1
+
     def insert_rows(self, name: str, rows: DataFrame) -> "Database":
         """Append rows (schema-verified like ``Schema.verify``,
         ``db/table/Schema.java:45–64``)."""
         with self._autocommit_x(name):
-            entry = self._entry(name)
-            expected = [(f.name, f.dataType) for f in entry.schema.fields]
-            got = [(f.name, f.dataType) for f in rows.schema.fields]
-            if expected != got:
-                raise DatabaseException(
-                    f"insert into '{name}': schema mismatch; table has "
-                    f"{expected}, rows have {got}")
-            return self._rewrite(entry, entry.df.unionByName(rows))
+            verify_insert_schema(self._entry(name).df, rows, name)
+            return self._write(name, lambda t: t.insert(rows),
+                               lambda df: df.unionByName(rows))
 
     def delete_rows(self, name: str, condition) -> "Database":
         """Delete rows matching ``condition`` (a boolean Column).  SQL
@@ -354,9 +384,9 @@ class Database:
         the row, which a bare ``filter(~condition)`` would silently
         drop (NOT NULL is NULL, and filter keeps only TRUE)."""
         with self._autocommit_x(name):
-            entry = self._entry(name)
-            return self._rewrite(
-                entry, entry.df.filter(~condition | condition.isNull()))
+            return self._write(
+                name, lambda t: t.delete(condition),
+                lambda df: df.filter(~condition | condition.isNull()))
 
     def update_rows(self, name: str, condition,
                     assignments: dict[str, object]) -> "Database":
@@ -364,19 +394,15 @@ class Database:
         ``condition``; other rows unchanged.  All assignments and the
         condition evaluate against the PRE-update row (one projection —
         see make_update_applier), exactly like SQL UPDATE."""
-        from cs186_query_optimization_project_spark.transactions import (
-            make_update_applier,
-        )
-
         with self._autocommit_x(name):
-            entry = self._entry(name)
-            df = entry.df
+            columns = self._entry(name).df.columns
             for col_name in assignments:
-                if col_name not in df.columns:
+                if col_name not in columns:
                     raise DatabaseException(
                         f"update '{name}': unknown column '{col_name}'")
-            return self._rewrite(
-                entry, make_update_applier(condition, assignments)(df))
+            return self._write(
+                name, lambda t: t.update(condition, assignments),
+                make_update_applier(condition, assignments))
 
     def merge_rows(self, name: str, source: DataFrame,
                    on: str | tuple[str, ...],
@@ -393,113 +419,59 @@ class Database:
         columns matched rows take from the source (default: all).
         Duplicate keys in the source raise — each target row must match
         at most one source row (Delta's multiple-match error) or the
-        join would fan rows out.  Declarative copy-on-write: one
-        left-outer join + one anti join, no driver-side rows."""
+        join would fan rows out.  ``PartitionedTable.merge`` runs it:
+        one left-outer join + one anti join, no driver-side rows."""
         keys = [on] if isinstance(on, str) else list(on)
         with self._autocommit_x(name):
-            entry = self._entry(name)
-            expected = [(f.name, f.dataType) for f in entry.schema.fields]
+            schema = self._entry(name).schema
+            expected = [(f.name, f.dataType) for f in schema.fields]
             got = [(f.name, f.dataType) for f in source.schema.fields]
             if expected != got:
                 raise DatabaseException(
                     f"merge into '{name}': schema mismatch; table has "
                     f"{expected}, source has {got}")
             for k in keys:
-                if k not in entry.schema.fieldNames():
+                if k not in schema.fieldNames():
                     raise DatabaseException(
                         f"merge into '{name}': unknown key column '{k}'")
-            # materialize the source once: the dup check, the matched
-            # rewrite and the insert anti-join all read it, and without
-            # the checkpoint each re-executes the caller's source plan
-            # (the same Delta-style source materialization
-            # PartitionedTable.merge does).  The dup check is one
-            # aggregation — row count vs distinct key-struct count
-            # (struct, so NULL keys group as equal exactly like the old
-            # groupBy) — instead of a groupBy + limit probe.
-            source = source.localCheckpoint()
-            dup = source.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count_distinct(F.struct(*[F.col(k) for k in keys]))
-                .alias("d")).first()
-            if dup["n"] != dup["d"]:
-                raise DatabaseException(
-                    f"merge into '{name}': source has duplicate keys on "
-                    f"{keys}; each target row must match at most one "
-                    f"source row")
-            # `is not None`: an explicit empty tuple means "update no
-            # columns on match" (insert-only merge), not "update all"
-            upd = [c for c in (update_cols if update_cols is not None
-                               else entry.df.columns)
-                   if c not in keys]
-            src = source.select(
-                *[F.col(k).alias(f"__mk_{k}") for k in keys],
-                *[F.col(c).alias(f"__mv_{c}") for c in upd],
-                F.lit(True).alias("__matched"))
-            cond = None
-            for k in keys:
-                eq = F.col(k) == F.col(f"__mk_{k}")
-                cond = eq if cond is None else (cond & eq)
-            updated = (entry.df.join(src, cond, "left_outer")
-                       .select(*[
-                           (F.when(F.col("__matched").isNotNull(),
-                                   F.col(f"__mv_{c}"))
-                            .otherwise(F.col(c)).alias(c)
-                            if c in upd else F.col(c))
-                           for c in entry.df.columns]))
-            result = updated
-            if insert_unmatched:
-                new_rows = source.join(entry.df.select(*keys), keys,
-                                       "left_anti")
-                result = updated.unionByName(new_rows)
-            return self._rewrite(entry, result)
 
-    def _rewrite(self, entry: TableEntry, new_df: DataFrame) -> "Database":
-        self._publish(self._stage(entry, new_df))
-        return self
+            def on_frame(df):
+                src = merge_source(source, keys, name)
+                upd = [c for c in (update_cols if update_cols is not None
+                                   else df.columns) if c not in keys]
+                return merge_payload(df, df, src, keys, upd,
+                                     insert_unmatched)
+            return self._write(
+                name, lambda t: t.merge(source, keys, update_cols,
+                                        insert_unmatched), on_frame)
 
-    def _stage(self, entry: TableEntry, new_df: DataFrame) -> tuple:
-        """Phase 1 of a two-phase rewrite: materialize the new version
-        WITHOUT touching the catalog.  All the failure-prone work (the
-        parquet write) happens here; a multi-table commit stages every
-        table first and only then publishes, so a mid-commit failure
-        leaves the catalog entirely on the old versions (an orphaned
-        ``.vN`` directory is the only residue — it just consumes a
-        version number, it is never registered)."""
-        if entry.path is None:
-            return ("mem", entry.name, new_df)
-        import re
-
-        base = entry.path.rstrip("/")
-        # strip only OUR version suffix (.v<digits> at the end) — a '.v'
-        # elsewhere in the path (e.g. /srv/corpus.v2024/t) must survive
-        root = re.sub(r"\.v\d+$", "", base)
-        version = 1
-        while os.path.exists(f"{root}.v{version}"):
-            version += 1
-        new_path = f"{root}.v{version}"
-        writer = new_df
-        if entry.index_columns:
-            writer = new_df.sortWithinPartitions(*entry.index_columns)
-        writer.write.mode("error").parquet(new_path)
-        return ("parquet", entry.name, new_path, entry.index_columns)
-
-    def _publish(self, staged: tuple) -> None:
-        """Phase 2: point the catalog at a staged version — pure
-        in-memory pointer swaps (no I/O, nothing to fail), so a loop of
-        publishes over pre-staged versions is effectively atomic."""
-        if staged[0] == "mem":
-            _, name, new_df = staged
-            entry = self._entry(name)
-            entry.df = new_df
-            entry.stats = None
-        else:
-            _, name, new_path, index_columns = staged
-            prior = (self._tables[name].history
-                     if name in self._tables else [])
-            self.register_parquet(name, new_path, index_columns)
-            # register_parquet starts a fresh history; splice the prior
-            # published chain back in so time travel sees every commit
-            self._tables[name].history = [*prior, new_path]
+    def _commit_frames(self, frames: dict) -> None:
+        """Publish a transaction's ``{name: (pinned entry, pinned
+        version, new content)}``: a table moved since its pin raises
+        ConflictException; manifest tables stage their content and
+        publish as ONE commit (``partitioned.commit_together``, atomic
+        on disk), then DataFrame tables swap."""
+        staged, swaps = [], []
+        for name, (entry, version, df) in frames.items():
+            if self._writable(name) is not entry or entry.version != version:
+                raise ConflictException(
+                    f"write-write conflict on '{name}': version "
+                    f"advanced since this transaction's snapshot; "
+                    f"retry on a fresh snapshot")
+            if entry.table is None:
+                swaps.append((entry, df))
+            else:
+                staged.append((entry, entry.table._prepare(df, version)))
+        if staged:
+            try:
+                commit_together([(e.table, args) for e, args in staged])
+            finally:
+                # a retry must pin the newest committed version, also
+                # after a conflict with another catalog's commit
+                for e, _ in staged:
+                    self._refresh(e)
+        for entry, df in swaps:
+            self._swap(entry, df)
 
     # ------------------------------------------------------------------ #
     # lookup
@@ -514,75 +486,53 @@ class Database:
         return self._entry(name).df
 
     def table_versions(self, name: str) -> list[int]:
-        """RETAINED published version numbers for a disk-backed table,
-        oldest first (0 = as first registered; each copy-on-write DML
-        commit appends one).  Delta-style ``DESCRIBE HISTORY``, scoped
-        to this catalog's publishes — see ``TableEntry.history``.
-        Version numbers are stable across ``vacuum``: vacuumed versions
-        simply drop out of the list, they are never renumbered."""
-        return [i for i, p in enumerate(self._entry(name).history)
-                if p is not None]
+        """RETAINED committed version numbers, oldest first (0 = as
+        created; stable across ``vacuum``) — Delta-style ``DESCRIBE
+        HISTORY`` from the manifests.  A plain parquet or CSV table has
+        the one version 0, a DataFrame table none."""
+        entry = self._entry(name)
+        if entry.table is not None:
+            return entry.table.versions()
+        return [0] if entry.path is not None else []
 
     def table_at_version(self, name: str, version: int) -> DataFrame:
-        """Time-travel read: the table exactly as published at
-        ``version`` (``VERSION AS OF``).  Copy-on-write DML leaves every
-        prior version's parquet in place, so this is a plain scan of the
-        old path — no log replay, and the current table is untouched."""
-        hist = self._entry(name).history
-        if not hist:
+        """Time-travel read: the table as committed at ``version``
+        (``VERSION AS OF``)."""
+        entry = self._entry(name)
+        vs = self.table_versions(name)
+        if version not in vs:
+            if not vs:
+                raise DatabaseException(
+                    f"table '{name}' is not disk-backed; no version "
+                    f"history")
+            if 0 <= version < vs[-1]:
+                raise DatabaseException(
+                    f"table '{name}' version {version} has been "
+                    f"vacuumed (or was never committed); retained "
+                    f"versions: {vs}")
             raise DatabaseException(
-                f"table '{name}' is not disk-backed; no version history")
-        if not 0 <= version < len(hist):
-            raise DatabaseException(
-                f"table '{name}' has versions 0..{len(hist) - 1}, "
-                f"not {version}")
-        path = hist[version]
-        if path is None:
-            raise DatabaseException(
-                f"table '{name}' version {version} has been vacuumed; "
-                f"retained versions: {self.table_versions(name)}")
-        return _restore_nanos_timestamps(
-            self.spark.read.parquet(path), path)
+                f"table '{name}' has versions 0..{vs[-1]}, not "
+                f"{version}")
+        if entry.table is None:
+            return entry.df
+        return entry.table.read(version=version)
 
     def vacuum(self, name: str, keep_last: int = 1) -> list[str]:
-        """Reclaim storage for old published versions (Delta's
-        ``VACUUM``): delete the parquet directories of all but the
-        newest ``keep_last`` retained versions and mark their history
-        slots vacuumed.  The current version is never deleted
-        (``keep_last`` is floored at 1 by validation), version numbers
-        stay stable, and a time-travel read of a vacuumed version
-        raises a named error instead of a raw missing-path failure.
-
-        Deletion goes through the Hadoop ``FileSystem`` API resolved
-        from each path, so it works identically for local paths and
-        remote URIs (s3a://, hdfs://) — at 100 TB this is the call that
-        keeps copy-on-write DML from doubling storage per commit.
-        Returns the deleted paths (oldest first)."""
+        """Reclaim storage for old versions (Delta's ``VACUUM``,
+        ``PartitionedTable.vacuum``): keep the newest ``keep_last``
+        versions (numbers stay stable) and delete every data directory
+        none of them references.  Returns the deleted directories."""
         if keep_last < 1:
             raise DatabaseException(
                 f"vacuum '{name}': keep_last must be >= 1 (the current "
                 f"version is never deleted), got {keep_last}")
         with self._autocommit_x(name):
             entry = self._entry(name)
-            if not entry.history:
+            if entry.table is None:
                 raise DatabaseException(
                     f"table '{name}' is not disk-backed; nothing to "
                     f"vacuum")
-            retained = [i for i, p in enumerate(entry.history)
-                        if p is not None]
-            to_drop = retained[:-keep_last]
-            removed: list[str] = []
-            jvm = self.spark._jvm
-            hconf = self.spark._jsc.hadoopConfiguration()
-            for i in to_drop:
-                path = entry.history[i]
-                if path == entry.path:  # paranoia: never the current
-                    continue
-                jpath = jvm.org.apache.hadoop.fs.Path(path)
-                jpath.getFileSystem(hconf).delete(jpath, True)
-                entry.history[i] = None
-                removed.append(path)
-            return removed
+            return entry.table.vacuum(keep_last)
 
     def table_names(self) -> list[str]:
         return sorted(self._tables)
@@ -615,20 +565,23 @@ class Database:
     _STATS_CACHE_DIR = f"/tmp/spark_graft_stats_cache_{os.getuid()}"
 
     def _stats_cache_key(self, entry: TableEntry) -> str | None:
-        if entry.path is None or not os.path.exists(entry.path):
+        # a manifest version is immutable: its file names the content
+        path = (entry.table._manifest_path(entry.version)
+                if entry.table is not None else entry.path)
+        if path is None or not os.path.exists(path):
             return None
         import hashlib
 
-        st = os.stat(entry.path)
-        raw = f"{entry.path}|{st.st_mtime_ns}|{st.st_size}"
-        if os.path.isdir(entry.path):
+        st = os.stat(path)
+        raw = f"{path}|{st.st_mtime_ns}|{st.st_size}"
+        if os.path.isdir(path):
             # a directory's own mtime/size don't change when files
             # inside a SUBDIRECTORY are rewritten in place (partitioned
             # tables): fold every data file's identity in.  Metadata
             # walk only — cost is one listing, the same one the scan's
             # file index pays.
             parts = []
-            for dirpath, _dirnames, filenames in os.walk(entry.path):
+            for dirpath, _dirnames, filenames in os.walk(path):
                 for fn in filenames:
                     if fn.startswith(("_", ".")):
                         continue
@@ -700,7 +653,7 @@ class Database:
         return bool(self.lookup(table, column, value).take(1))
 
     # ------------------------------------------------------------------ #
-    # transactions (§2.12: two protocols over the copy-on-write
+    # transactions (§2.12: two protocols over the manifest
     # versions — optimistic snapshot (transactions.py, the cluster
     # default) and blocking strict 2PL with waits-for prevention
     # (concurrency.py, full-fidelity reference parity for

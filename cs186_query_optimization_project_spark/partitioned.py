@@ -1,15 +1,14 @@
-"""Partition-level copy-on-write MVCC tables ("delta-lite").
+"""Manifest-versioned MVCC tables ("delta-lite") — the engine's one
+writable table format.
 
-The engine's table-level DML (`database.py`) rewrites the WHOLE table
-per statement — correct, but O(table) however small the change.  This
-module is the scale upgrade the SCALE.md DML section names: a managed
-table whose versions are JSON *manifests* mapping partition values to
+A table's versions are JSON *manifests* mapping partition values to
 data directories, so a DML statement rewrites only the partitions it
 touches and every untouched partition's directory is SHARED between
 versions.  This is the storage model of Delta/Iceberg re-expressed at
 partition granularity with manifests instead of a transaction log
 (reference DML surface: ``db/Database.java:317–401``; the reference has
 no partitioned storage — its tables are heap files of slotted pages).
+An unpartitioned table is one manifest key, ``""``.
 
 Costs at 100 TB:
 
@@ -27,8 +26,11 @@ Costs at 100 TB:
 - commit — atomic first-committer-wins: the manifest file is created
   with ``open(..., "x")`` after all data directories are fully
   written, so a concurrent committer of the same next-version loses
-  with a named conflict and no torn state is ever readable (the same
-  optimistic-commit contract as ``transactions.py``).
+  with a named conflict and no torn state is ever readable.  A
+  multi-table commit (:func:`commit_together`) makes its manifests
+  count only once one shared record says ``committed``; a writer that
+  finds the record missing claims it ``aborted`` with the same
+  exclusive create (Percolator's primary record).
 
 Insert appends a NEW directory per touched partition (manifest values
 are directory LISTS), so pure appends never rewrite existing data;
@@ -38,6 +40,7 @@ directory, which doubles as incremental compaction.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re as _re
@@ -249,6 +252,120 @@ def _coalesce_tombstone(existing: list[str], cond: str) -> tuple[
     return list(existing) + [cond], True
 
 
+def listed_versions(root: str) -> list[int]:
+    """Every manifest version under ``root``, committed or not."""
+    out = []
+    for name in metaio.IO.list_dir(os.path.join(root, "_manifests")):
+        if name.startswith("v") and name.endswith(".json"):
+            out.append(int(name[1:-len(".json")]))
+    return sorted(out)
+
+
+def load_manifest(root: str, version: int) -> dict | None:
+    """Manifest ``version`` under ``root``; None (invisible) while the
+    multi-table commit that wrote it has not committed."""
+    man = json.loads(metaio.IO.read_text(
+        os.path.join(root, "_manifests", f"v{version}.json")))
+    record = man.get("commit")
+    if record is None:
+        return man
+    try:
+        state = metaio.IO.read_text(record)
+    except FileNotFoundError:
+        return None
+    return man if state == "committed" else None
+
+
+def _abort(record: str) -> bool:
+    """Claim a multi-table commit aborted unless it committed; True
+    when it is aborted."""
+    try:
+        metaio.IO.write_new(record, "aborted")
+        return True
+    except FileExistsError:
+        return metaio.IO.read_text(record) == "aborted"
+
+
+def commit_together(commits: list) -> None:
+    """Publish ``(table, commit_args)`` pairs from
+    :meth:`PartitionedTable._prepare` as ONE commit.  Several tables
+    each get a manifest naming one record under the first table's
+    ``_commits/``; creating it as ``committed`` is the commit point, so
+    a crash before leaves every table on its old version.  A lost race
+    on any table raises ConflictException."""
+    if len(commits) == 1:
+        table, args = commits[0]
+        table._commit(**args)
+        return
+    record = os.path.join(commits[0][0].root, "_commits",
+                          f"{uuid.uuid4().hex}.json")
+    metaio.IO.make_dirs(os.path.dirname(record), exist_ok=True)
+    try:
+        for table, args in commits:
+            table._commit(**args, commit=record)
+    except Exception:
+        with contextlib.suppress(Exception):
+            _abort(record)   # best effort: the next writer claims it
+        raise
+    try:
+        metaio.IO.write_new(record, "committed")
+    except FileExistsError:
+        raise ConflictException(
+            "multi-table commit was claimed aborted by a concurrent "
+            "writer of one of its tables; retry on a fresh "
+            "snapshot") from None
+
+
+def merge_source(source: DataFrame, keys: list[str],
+                 target: str) -> DataFrame:
+    """MERGE's source, materialized once (every later step reads it;
+    Delta merge materializes its source too) and checked by one
+    aggregation — row count vs distinct key structs, so NULL keys group
+    as equal — for duplicate keys, which would fan target rows out."""
+    source = source.localCheckpoint()
+    dup = source.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count_distinct(F.struct(*[F.col(k) for k in keys]))
+        .alias("d")).first()
+    if dup["n"] != dup["d"]:
+        raise DatabaseException(
+            f"merge into '{target}': source has duplicate keys on "
+            f"{keys}; each target row must match at most one source "
+            f"row")
+    return source
+
+
+def merge_payload(rewrite: DataFrame | None, current: DataFrame,
+                  source: DataFrame, keys: list[str],
+                  update_cols: list[str],
+                  insert_unmatched: bool) -> DataFrame | None:
+    """The rows one MERGE writes: ``rewrite`` (the slice of ``current``
+    it rewrites, or None) with matched rows' ``update_cols`` from
+    ``source``, plus the unmatched source rows if ``insert_unmatched``
+    — one left-outer join and one anti join.  None: nothing to write."""
+    out = None
+    if rewrite is not None:
+        src = source.select(
+            *[F.col(k).alias(f"__mk_{k}") for k in keys],
+            *[F.col(c).alias(f"__mv_{c}") for c in update_cols],
+            F.lit(True).alias("__matched"))
+        cond = None
+        for k in keys:
+            eq = F.col(k) == F.col(f"__mk_{k}")
+            cond = eq if cond is None else (cond & eq)
+        out = (rewrite.join(src, cond, "left_outer")
+               .select(*[
+                   (F.when(F.col("__matched").isNotNull(),
+                           F.col(f"__mv_{c}"))
+                    .otherwise(F.col(c)).alias(c)
+                    if c in update_cols else F.col(c))
+                   for c in rewrite.columns]))
+    if insert_unmatched:
+        new = source.join(current.select(*keys), keys, "left_anti")
+        out = new if out is None else out.unionByName(new)
+    return out
+
+
 class PartitionedTable:
     """A manifest-versioned, hive-partitioned parquet table.
 
@@ -268,8 +385,9 @@ class PartitionedTable:
     regardless of how many partitions it lands in.  A manifest is
     ``{"version": N, "partition_cols": [c, ...], "schema": ddl,
     "parts": {key: [dir, ...]}}`` where ``key`` is the hive path
-    encoding of the value tuple ('/'-joined components).  Directories
-    are immutable once published; versions share them.
+    encoding of the value tuple ('/'-joined components; ``""`` and
+    ``parts/<uuid>/data`` when unpartitioned).  Directories are
+    immutable once published; versions share them.
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -280,6 +398,8 @@ class PartitionedTable:
         #: create, never replaced); without it every skipping loop
         #: re-reads the same sidecar once per DIRECTORY per query
         self._stats_cache: dict[str, dict] = {}
+        #: versions known to count (a committed one stays committed)
+        self._counted: set[int] = set()
         if not metaio.IO.is_dir(self._manifest_dir()):
             raise DatabaseException(
                 f"no partitioned table at '{self.root}' "
@@ -310,51 +430,71 @@ class PartitionedTable:
         (the standard 100 TB shape, e.g. ``["o_orderdate", "source"]``
         → ``date=.../source=.../``): manifest keys become the hive
         path tuple, and every partition-aware read prunes exactly on
-        any key prefix or component."""
+        any key prefix or component.  An EMPTY list makes an
+        unpartitioned table: one manifest key, every statement
+        rewrites (or appends to) the whole table."""
+        return cls._create(spark, df, root, partition_col, bloom_cols, ())
+
+    @classmethod
+    def _create(cls, spark: SparkSession, df: DataFrame, root: str,
+                partition_col, bloom_cols, sort_cols) -> "PartitionedTable":
+        """:meth:`create` plus ``sort_cols``, a sort order every write
+        keeps inside each file (manifest policy, like ``bloom_cols``) —
+        the catalog's ``index_columns``."""
         root = root.rstrip("/")
         pcols = [partition_col] if isinstance(partition_col, str) \
             else list(partition_col)
-        if not pcols or len(set(pcols)) != len(pcols):
-            raise DatabaseException(
-                f"partition columns {pcols} must be non-empty and "
-                f"distinct")
-        for c in pcols:
+        cls._check_partition_cols(pcols, df.schema, f"create '{root}'")
+        for c in [*(bloom_cols or []), *sort_cols]:
             if c not in df.columns:
                 raise DatabaseException(
-                    f"partition column '{c}' not in {df.columns}")
-            ptype = df.schema[c].dataType
-            if not isinstance(ptype, _KEYABLE):
-                raise DatabaseException(
-                    f"partition column '{c}' has type {ptype}; "
-                    f"only string/integral/boolean/date columns "
-                    f"partition (float keys are not stable manifest "
-                    f"keys)")
-        for c in bloom_cols or []:
-            if c not in df.columns:
-                raise DatabaseException(
-                    f"bloom column '{c}' not in {df.columns}")
+                    f"column '{c}' not in {df.columns}")
         metaio.IO.make_dirs(os.path.join(root, "_manifests"),
                             exist_ok=False)
         metaio.IO.make_dirs(os.path.join(root, "parts"),
                             exist_ok=True)
-        self_stub = object.__new__(cls)
-        self_stub.spark = spark
-        self_stub.root = root
-        self_stub._stats_cache = {}
-        self_stub._pending_bloom_cols = list(bloom_cols or [])
+        pt = cls(spark, root)
+        # no manifest yet: the write reads the table policy from here
+        pt._pending = {"bloom_cols": list(bloom_cols or []),
+                       "sort_cols": list(sort_cols)}
         try:
             # NULL partition values are detected from the staged
             # layout inside _write_partitions (no pre-write pass over
             # df); a failed create retracts the fresh _manifests dir
             # so a corrected retry can re-create the table
-            parts = self_stub._write_partitions(df, pcols, op="create")
-            self_stub._commit(0, pcols, df.schema, parts,
-                              bloom_cols=list(bloom_cols or []),
-                              op="CREATE")
+            parts = pt._write_partitions(df, pcols, op="create")
+            pt._commit(0, pcols, df.schema, parts, op="CREATE",
+                       **pt._pending)
         except Exception:
             metaio.IO.remove_tree(os.path.join(root, "_manifests"))
             raise
         return cls(spark, root)
+
+    @staticmethod
+    def _check_partition_cols(pcols: list[str], schema: T.StructType,
+                              what: str) -> None:
+        if len(set(pcols)) != len(pcols):
+            raise DatabaseException(
+                f"{what}: partition columns {pcols} must be distinct")
+        for c in pcols:
+            if c not in schema.fieldNames():
+                raise DatabaseException(
+                    f"{what}: no column '{c}' (not in "
+                    f"{schema.fieldNames()})")
+            if not isinstance(schema[c].dataType, _KEYABLE):
+                raise DatabaseException(
+                    f"{what}: column '{c}' has type {schema[c].dataType}; "
+                    f"only string/integral/boolean/date columns "
+                    f"partition (float keys are not stable manifest "
+                    f"keys)")
+
+    def _check_schema(self, schema: T.StructType, got: T.StructType,
+                      what: str) -> None:
+        if [(f.name, f.dataType) for f in schema.fields] != \
+                [(f.name, f.dataType) for f in got.fields]:
+            raise DatabaseException(
+                f"{what} into '{self.root}': schema mismatch; table has "
+                f"{schema.simpleString()}, rows have {got.simpleString()}")
 
     # ------------------------------------------------------------------ #
     # manifest plumbing
@@ -366,30 +506,33 @@ class PartitionedTable:
         return os.path.join(self._manifest_dir(), f"v{version}.json")
 
     def versions(self) -> list[int]:
-        """Retained (non-vacuumed) version numbers, oldest first.
-        Numbers are stable across vacuum, like ``Database
-        .table_versions``."""
-        out = []
-        for name in metaio.IO.list_dir(self._manifest_dir()):
-            if name.startswith("v") and name.endswith(".json"):
-                out.append(int(name[1:-len(".json")]))
-        return sorted(out)
+        """Retained (non-vacuumed) committed version numbers, oldest
+        first.  Numbers are stable across vacuum."""
+        return [v for v in listed_versions(self.root)
+                if v in self._counted or self._load(v) is not None]
+
+    def _load(self, version: int) -> dict | None:
+        man = load_manifest(self.root, version)
+        if man is not None:
+            self._counted.add(version)
+        return man
 
     def _manifest(self, version: int | None = None) -> dict:
+        listed = listed_versions(self.root)
+        for v in (reversed(listed) if version is None
+                  else [version] if version in listed else []):
+            man = self._load(v)
+            if man is not None:
+                return man
         vs = self.versions()
         if not vs:
             raise DatabaseException(
                 f"partitioned table '{self.root}' has no retained "
                 f"versions")
-        if version is None:
-            version = vs[-1]
-        if version not in vs:
-            raise DatabaseException(
-                f"partitioned table '{self.root}' version {version} is "
-                f"not retained (vacuumed or never published); retained: "
-                f"{vs}")
-        return json.loads(
-            metaio.IO.read_text(self._manifest_path(version)))
+        raise DatabaseException(
+            f"partitioned table '{self.root}' version {version} is "
+            f"not retained (vacuumed or never published); retained: "
+            f"{vs}")
 
     def _commit(self, version: int, partition_cols,
                 schema: T.StructType, parts: dict[str, list[str]],
@@ -398,48 +541,47 @@ class PartitionedTable:
                 constraints: dict[str, str] | None = None,
                 bloom_cols: list[str] | None = None,
                 tomb_counts: dict[str, int] | None = None,
-                op: str = "WRITE") -> None:
+                op: str = "WRITE", sort_cols: list[str] | None = None,
+                commit: str | None = None) -> None:
         """Publish: create v<version>.json atomically-exclusively.  All
         data dirs are already fully written, so the manifest's
         appearance IS the commit point; a concurrent committer of the
         same version number hits FileExistsError → first-committer-wins
-        (optimistic, like ``transactions.py``).  ``txns`` is the
-        exactly-once watermark map for streaming sinks (Delta's ``txn``
-        action): highest committed batch id per sink id — DML commits
-        must carry the caller's manifest's map forward or replay
-        protection would be lost."""
+        (optimistic, like ``transactions.py``) — unless that version's
+        multi-table commit never committed: then it is claimed aborted
+        and the next number tried.  ``commit``: see
+        :func:`commit_together`.  ``txns`` is the exactly-once
+        watermark map for streaming sinks (Delta's ``txn`` action):
+        highest committed batch id per sink id — DML commits must carry
+        the caller's manifest's map forward or replay protection would
+        be lost."""
+        try:
+            cur = self._manifest()
+        except DatabaseException:
+            cur = {}  # first commit of a fresh table
+        # table POLICY — CHECK constraints, bloom-index and sort-order
+        # declarations — carries forward unless a caller explicitly
+        # changes it (add/drop/clone pass their own)
         if constraints is None:
-            # CHECK constraints are table POLICY: every commit carries
-            # the current set forward unless a caller explicitly
-            # changes it (add/drop/clone pass their own dict)
-            try:
-                constraints = self._manifest().get("constraints", {})
-            except DatabaseException:
-                constraints = {}  # first commit of a fresh table
+            constraints = cur.get("constraints", {})
         if bloom_cols is None:
-            # bloom-index declarations are table POLICY like
-            # constraints: carried forward unless explicitly changed
-            try:
-                bloom_cols = self._manifest().get("bloom_cols", [])
-            except DatabaseException:
-                bloom_cols = []
+            bloom_cols = cur.get("bloom_cols", [])
+        if sort_cols is None:
+            sort_cols = cur.get("sort_cols", [])
         if tomb_counts is None:
             # per-directory masked-row cardinalities travel WITH their
             # tombstones: carried forward by default (a dir's tombstone
             # set only changes via delete_soft, which passes updated
             # counts, or a rewrite, which drops the dir and prunes
             # both); restore/clone pass the source manifest's counts
-            try:
-                tomb_counts = self._manifest().get("tomb_counts", {})
-            except DatabaseException:
-                tomb_counts = {}
+            tomb_counts = cur.get("tomb_counts", {})
         pcols = [partition_cols] if isinstance(partition_cols, str) \
             else list(partition_cols)
         referenced = {d for ds in parts.values() for d in ds}
         live_tombs = {d: list(ts) for d, ts in
                       sorted((tombstones or {}).items())
                       if ts and d in referenced}
-        payload = json.dumps({
+        payload = {
             "version": version,
             # single-column manifests keep the legacy scalar field
             # (readable by pre-multi-column code and tests); the list
@@ -462,17 +604,43 @@ class PartitionedTable:
                             if d in live_tombs},
             "constraints": dict(sorted(constraints.items())),
             "bloom_cols": sorted(bloom_cols),
+            **({"sort_cols": list(sort_cols)} if sort_cols else {}),
+            **({"commit": commit} if commit else {}),
             # audit fields (DESCRIBE HISTORY): never read by any
             # correctness path, so the wall-clock stamp is harmless
             "op": op,
             "ts": _time.time(),
-        })
-        try:
-            metaio.IO.write_new(self._manifest_path(version), payload)
-        except FileExistsError:
-            raise ConflictException(
-                f"partitioned table '{self.root}': version {version} "
-                f"was published concurrently; retry on a fresh read")
+        }
+        while True:
+            try:
+                metaio.IO.write_new(self._manifest_path(version),
+                                    json.dumps(payload))
+                return
+            except FileExistsError:
+                try:
+                    record = json.loads(metaio.IO.read_text(
+                        self._manifest_path(version))).get("commit")
+                except ValueError:
+                    record = None   # still being written: it is live
+                if record is None or not _abort(record):
+                    raise ConflictException(
+                        f"partitioned table '{self.root}': version "
+                        f"{version} was published concurrently; retry "
+                        f"on a fresh read") from None
+                version = payload["version"] = version + 1
+
+    def _prepare(self, df: DataFrame, version: int) -> dict:
+        """Stage ``df`` as the whole content of the version after
+        ``version``; returns :meth:`_commit`'s arguments for
+        :func:`commit_together`."""
+        man = self._manifest(version)
+        pcols = self._pcols_of(man)
+        parts = self._write_partitions(
+            df, pcols, op="commit", enforce=man.get("constraints", {}))
+        return {"version": version + 1, "partition_cols": pcols,
+                "schema": T._parse_datatype_string(man["schema"]),
+                "parts": parts, "txns": man.get("txns", {}),
+                "op": "TRANSACTION"}
 
     @staticmethod
     def _pcols_of(man: dict) -> list[str]:
@@ -480,7 +648,7 @@ class PartitionedTable:
         modern ``partition_cols`` field, falling back to the legacy
         scalar ``partition_col`` (pre-multi-column manifests)."""
         pc = man.get("partition_cols")
-        return list(pc) if pc else [man["partition_col"]]
+        return list(pc) if pc is not None else [man["partition_col"]]
 
     def partition_cols(self) -> list[str]:
         return self._pcols_of(self._manifest())
@@ -574,7 +742,8 @@ class PartitionedTable:
                           partition_cols,
                           allowed_keys: set | None = None,
                           op: str = "write",
-                          enforce: dict | None = None) \
+                          enforce: dict | None = None,
+                          sort_cols: list[str] | None = None) \
             -> dict[str, list[str]]:
         """Write every partition of ``df`` in ONE Spark job:
         ``partitionBy`` on duplicated columns (``__p`` / ``__p0..n``),
@@ -607,7 +776,9 @@ class PartitionedTable:
         observe() metrics over the rows being written — previously a
         separate pre-write aggregation job per constrained commit —
         and a violation discards the staging before raising, so the
-        published table never sees the batch."""
+        published table never sees the batch.
+
+        Files keep ``sort_cols`` order (default: the declared one)."""
         from urllib.parse import unquote
 
         from pyspark.sql import Observation
@@ -627,7 +798,21 @@ class PartitionedTable:
                                  .cast("bigint")), F.lit(0))
                 .alias(f"__viol_{n}")
                 for n, e in sorted(enforce.items())])
-        tmp.write.mode("error").partitionBy(*names).parquet(staging)
+        if sort_cols is None:
+            sort_cols = self._policy("sort_cols")
+        if sort_cols:
+            # routing columns first: that is the order the partitioned
+            # writer needs, so Spark adds no sort of its own on top
+            tmp = tmp.sortWithinPartitions(*names, *sort_cols)
+        out: dict[str, list[str]] = {}
+        leaf_name: dict[str, str] = {}
+        leaf_parent: dict[str, str] = {}
+        if names:
+            tmp.write.mode("error").partitionBy(*names).parquet(staging)
+        else:
+            out[""] = [os.path.join(staging, "data")]
+            leaf_name[""], leaf_parent[""] = "data", staging
+            tmp.write.mode("error").parquet(out[""][0])
         if obs is not None:
             metrics = obs.get
             for n in sorted(enforce):
@@ -638,9 +823,6 @@ class PartitionedTable:
                         f"{op} into '{self.root}' violates CHECK "
                         f"constraint '{n}' ({enforce[n]}): {viol} "
                         f"rows")
-        out: dict[str, list[str]] = {}
-        leaf_name: dict[str, str] = {}
-        leaf_parent: dict[str, str] = {}
         hive_default = []
 
         def walk(cur: str, level: int, key_parts: list[str]) -> None:
@@ -666,7 +848,8 @@ class PartitionedTable:
                 else:
                     walk(child, level + 1, kp)
 
-        walk(staging, 0, [])
+        if names:
+            walk(staging, 0, [])
         if hive_default:
             # disambiguate (error path only — one job nothing healthy
             # pays): Spark writes NULL, '' and the literal string
@@ -702,9 +885,9 @@ class PartitionedTable:
         for key, ds in out.items():
             by_parent.setdefault(leaf_parent[key], {})[
                 leaf_name[key]] = self._dir_stats(ds[0])
-        bloom_cols = [c for c in self._active_bloom_cols()
+        bloom_cols = [c for c in self._policy("bloom_cols")
                       if c in df.columns]  # fail-open when absent
-        if bloom_cols and out:
+        if bloom_cols and names and out:
             for (key, c), bloom in self._compute_blooms(
                     staging, bloom_cols, set(out), names).items():
                 by_parent[leaf_parent[key]][leaf_name[key]] \
@@ -717,11 +900,12 @@ class PartitionedTable:
                                 json.dumps(stats))
         return out
 
-    def _active_bloom_cols(self) -> list[str]:
-        if hasattr(self, "_pending_bloom_cols"):
-            return self._pending_bloom_cols  # create() path: no manifest
+    def _policy(self, key: str) -> list[str]:
+        """A declared column list (``bloom_cols``, ``sort_cols``)."""
+        if hasattr(self, "_pending"):
+            return self._pending[key]  # create() path: no manifest
         try:
-            return self._manifest().get("bloom_cols", [])
+            return self._manifest().get(key, [])
         except DatabaseException:
             return []
 
@@ -1785,9 +1969,13 @@ class PartitionedTable:
     def _touched(self, df: DataFrame, condition, pcols) -> list:
         """Partition values owning at least one row matching
         ``condition`` — |partitions|-bounded collect.  Scalars for
-        single-column tables, full tuples for hierarchical ones."""
+        single-column tables, full tuples for hierarchical ones.  An
+        unpartitioned table's one partition counts as touched without
+        a probe: its rewrite is the whole statement anyway."""
         if isinstance(pcols, str):
             pcols = [pcols]
+        if not pcols:
+            return [()]
         rows = (df.filter(condition)
                 .select(*pcols).distinct().collect())
         return [r[0] for r in rows] if len(pcols) == 1 \
@@ -1805,7 +1993,6 @@ class PartitionedTable:
         reconcile them with NULLs via a mergeSchema scan), but may
         never drop, retype, or reorder existing columns."""
         man = self._manifest()
-        pcols = self._pcols_of(man)
         expected = T._parse_datatype_string(man["schema"])
         got = rows.schema
         if merge_schema:
@@ -1818,23 +2005,25 @@ class PartitionedTable:
                     f"{expected.simpleString()}, rows have "
                     f"{got.simpleString()}")
             expected = got  # widened schema published with this commit
-        elif [(f.name, f.dataType) for f in expected.fields] != \
-                [(f.name, f.dataType) for f in got.fields]:
-            raise DatabaseException(
-                f"insert into '{self.root}': schema mismatch; table "
-                f"has {expected.simpleString()}, rows have "
-                f"{got.simpleString()}")
+        else:
+            self._check_schema(expected, got, "insert")
+        self._append(man, rows, expected, man.get("txns", {}), "INSERT")
+        return self
+
+    def _append(self, man: dict, rows: DataFrame, schema: T.StructType,
+                txns: dict, op: str) -> None:
+        """Commit ``rows`` as new directories appended to their
+        partitions' lists.  NULL-partition and CHECK-constraint guards
+        ride the write job inside _write_partitions — no pre-write pass
+        over rows."""
+        pcols = self._pcols_of(man)
         parts = {k: list(v) for k, v in man["parts"].items()}
-        # NULL-partition and CHECK-constraint guards ride the write
-        # job inside _write_partitions — no pre-write pass over rows
         for key, ds in self._write_partitions(
-                rows, pcols, op="insert",
+                rows, pcols, op=op.lower(),
                 enforce=man.get("constraints", {})).items():
             parts.setdefault(key, []).extend(ds)
-        self._commit(man["version"] + 1, pcols, expected, parts,
-                     man.get("txns", {}),
-                     man.get("tombstones", {}), op="INSERT")
-        return self
+        self._commit(man["version"] + 1, pcols, schema, parts, txns,
+                     man.get("tombstones", {}), op=op)
 
     def overwrite_partitions(self, rows: DataFrame,
                              partition_values: list) \
@@ -1852,12 +2041,7 @@ class PartitionedTable:
         man = self._manifest()
         pcols = self._pcols_of(man)
         expected = T._parse_datatype_string(man["schema"])
-        if [(f.name, f.dataType) for f in expected.fields] != \
-                [(f.name, f.dataType) for f in rows.schema.fields]:
-            raise DatabaseException(
-                f"overwrite_partitions into '{self.root}': schema "
-                f"mismatch; table has {expected.simpleString()}, rows "
-                f"have {rows.schema.simpleString()}")
+        self._check_schema(expected, rows.schema, "overwrite_partitions")
         parts = {k: list(v) for k, v in man["parts"].items()}
         # mistyped scalars (5.0 naming a long partition) coerce via the
         # JVM's own cast — the same rule read_point applies — instead
@@ -1912,24 +2096,31 @@ class PartitionedTable:
         ``Database.delete_rows``), rewriting only partitions that own a
         matching row; each touched partition's dir-list collapses to
         one directory (incremental compaction for free)."""
-        man = self._manifest()
+        return self._replace_matching(
+            self._manifest(), condition,
+            lambda df: df.filter(~condition | condition.isNull()),
+            "DELETE")
+
+    def _replace_matching(self, man: dict, condition, rewrite,
+                          op: str) -> "PartitionedTable":
+        """Commit ``rewrite(rows)`` in place of every partition owning
+        a row matching ``condition``, in ONE job; untouched partitions
+        re-link, and a partition the rewrite empties maps to an empty
+        dir-list."""
         pcols = self._pcols_of(man)
         parts = {k: list(v) for k, v in man["parts"].items()}
         touched = self._touched(self.read(), condition, pcols)
         if touched:
-            # ONE job rewrites every touched partition's survivors; a
-            # partition whose rows all matched writes nothing and maps
-            # to an empty dir-list
-            survivors = (self.read(partition_values=touched)
-                         .filter(~condition | condition.isNull()))
-            new_parts = self._write_partitions(survivors, pcols)
+            new_parts = self._write_partitions(
+                rewrite(self.read(partition_values=touched)), pcols,
+                op=op.lower(), enforce=man.get("constraints", {}))
             for v in touched:
                 parts[self._ckey(v, pcols)] = new_parts.get(
                     self._ckey(v, pcols), [])
         self._commit(man["version"] + 1, pcols,
                      T._parse_datatype_string(man["schema"]), parts,
                      man.get("txns", {}),
-                     man.get("tombstones", {}), op="DELETE")
+                     man.get("tombstones", {}), op=op)
         return self
 
     def delete_soft(self, condition_sql: str,
@@ -2174,125 +2365,75 @@ class PartitionedTable:
                 raise DatabaseException(
                     f"update '{self.root}': unknown column "
                     f"'{col_name}'")
-        parts = {k: list(v) for k, v in man["parts"].items()}
-        touched = self._touched(self.read(), condition, pcols)
-        if touched:
-            rewritten = make_update_applier(condition, assignments)(
-                self.read(partition_values=touched))
-            new_parts = self._write_partitions(
-                rewritten, pcols, op="update",
-                enforce=man.get("constraints", {}))
-            for v in touched:
-                parts[self._ckey(v, pcols)] = new_parts.get(
-                    self._ckey(v, pcols), [])
-        self._commit(man["version"] + 1, pcols, schema, parts,
-                     man.get("txns", {}),
-                     man.get("tombstones", {}), op="UPDATE")
-        return self
+        return self._replace_matching(
+            man, condition, make_update_applier(condition, assignments),
+            "UPDATE")
 
-    def merge(self, source: DataFrame,
-              on: str | tuple[str, ...]) -> "PartitionedTable":
-        """MERGE upsert at partition granularity (the ``Database
-        .merge_rows`` analog): matched target rows take the source's
-        values, unmatched source rows append.  Touched partitions are
-        those owning a MATCHED TARGET row (the key match decides where
-        the rewrite happens — a source row may update a target row
-        living in a different partition than the source row's own
-        value, as long as the update doesn't move it); unmatched source
-        rows land as appended directories in their own partitions.  Two
+    def merge(self, source: DataFrame, on: str | tuple[str, ...],
+              update_cols: tuple[str, ...] | None = None,
+              insert_unmatched: bool = True) -> "PartitionedTable":
+        """MERGE upsert at partition granularity (``Database
+        .merge_rows``, whose ``update_cols`` / ``insert_unmatched``
+        it takes): matched target rows take the source's values,
+        unmatched source rows append.  Touched partitions are those
+        owning a MATCHED TARGET row (the key match decides where the
+        rewrite happens — a source row may update a target row living
+        in a different partition than the source row's own value, as
+        long as the update doesn't move it); unmatched source rows land
+        as appended directories in their own partitions.  Two
         |partitions|-bounded distincts plan the statement; two jobs
         execute it."""
         keys = [on] if isinstance(on, str) else list(on)
         man = self._manifest()
         pcols = self._pcols_of(man)
         schema = T._parse_datatype_string(man["schema"])
-        expected = [(f.name, f.dataType) for f in schema.fields]
-        got = [(f.name, f.dataType) for f in source.schema.fields]
-        if expected != got:
-            raise DatabaseException(
-                f"merge into '{self.root}': schema mismatch; table has "
-                f"{expected}, source has {got}")
+        self._check_schema(schema, source.schema, "merge")
         for k in keys:
             if k not in schema.fieldNames():
                 raise DatabaseException(
                     f"merge into '{self.root}': unknown key column "
                     f"'{k}'")
-        # materialize the source once: the dup-key check, the moved-row
-        # guard, the matched rewrite and the insert anti-join all read
-        # it, and without the checkpoint each would re-execute the
-        # caller's source plan (Delta merge materializes its source for
-        # the same reason).  The dup check is one aggregation — row
-        # count vs distinct key-struct count (struct, so NULL keys
-        # group as equal exactly like the old groupBy shape) — instead
-        # of a groupBy + take(1) probe whose empty healthy path
-        # escalates through full-scan job retries.
-        source = source.localCheckpoint()
-        dup = source.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_distinct(F.struct(*[F.col(k) for k in keys]))
-            .alias("d")).first()
-        if dup["n"] != dup["d"]:
-            raise DatabaseException(
-                f"merge into '{self.root}': source has duplicate keys "
-                f"on {keys}")
+        # an empty tuple means an insert-only merge, not "update all"
+        upd_cols = [c for c in (update_cols if update_cols is not None
+                                else schema.fieldNames())
+                    if c not in keys]
+        source = merge_source(source, keys, self.root)
         cur = self.read()
-        # ONE bounded job plans the statement: the matched target rows'
-        # partitions (the rewrite set) AND the moved-row guard (a
-        # matched row must not change partition value — same
-        # restriction as update()) come out of a single
-        # target⋈source join + per-partition aggregate.  The dup check
-        # above guarantees unique source keys, so the inner join keeps
-        # exactly the semi-join's target rows.  The guard flag uses
-        # the same non-null-safe != the old filter used (a NULL
-        # comparison contributes nothing to max()).
-        loose = [c for c in pcols if c not in keys]
-        s_pref = source.select(
-            *[F.col(k) for k in keys],
-            *[F.col(c).alias(f"__s_{c}") for c in loose])
-        moved_flag = F.lit(False)
-        for c in loose:
-            moved_flag = moved_flag | (F.col(c) != F.col(f"__s_{c}"))
-        touched_rows = (cur.join(s_pref, keys, "inner")
-                        .groupBy(*pcols)
-                        .agg(F.max(moved_flag).alias("__moved"))
-                        .collect())
-        if any(r["__moved"] for r in touched_rows):
-            raise DatabaseException(
-                f"merge into '{self.root}': a matched source row "
-                f"changes a partition column ({loose}) — express "
-                f"a move as delete + insert")
-        touched = [r[0] for r in touched_rows] if len(pcols) == 1 \
-            else [tuple(r[:len(pcols)]) for r in touched_rows]
+        touched: list = []
+        if upd_cols and not pcols:
+            touched = [()]  # the one partition; no planning job
+        elif upd_cols:
+            # ONE bounded job plans the statement: the matched target
+            # rows' partitions (the rewrite set) AND the moved-row
+            # guard (a matched row must not change partition value —
+            # same restriction as update()) come out of a single
+            # target⋈source join + per-partition aggregate.
+            loose = [c for c in pcols if c not in keys and c in upd_cols]
+            s_pref = source.select(
+                *[F.col(k) for k in keys],
+                *[F.col(c).alias(f"__s_{c}") for c in loose])
+            moved_flag = F.lit(False)
+            for c in loose:
+                moved_flag = moved_flag | (F.col(c) != F.col(f"__s_{c}"))
+            touched_rows = (cur.join(s_pref, keys, "inner")
+                            .groupBy(*pcols)
+                            .agg(F.max(moved_flag).alias("__moved"))
+                            .collect())
+            if any(r["__moved"] for r in touched_rows):
+                raise DatabaseException(
+                    f"merge into '{self.root}': a matched source row "
+                    f"changes a partition column ({loose}) — express "
+                    f"a move as delete + insert")
+            touched = [r[0] for r in touched_rows] if len(pcols) == 1 \
+                else [tuple(r[:len(pcols)]) for r in touched_rows]
         parts = {k: list(v) for k, v in man["parts"].items()}
-        upd_cols = [c for c in schema.fieldNames() if c not in keys]
-        # ONE staged write executes the statement: the touched-
-        # partition rewrite and the unmatched-source inserts union into
-        # a single job (previously two _write_partitions jobs — two
-        # staged writes, two commit floors).  Staged keys that were
-        # touched REPLACE their partition's directory list (the rewrite
-        # kept every surviving row of that partition, and any inserts
-        # into it rode the same staged directory); all other staged
-        # keys append, exactly as the old insert write did.
-        payload = source.join(cur.select(*keys), keys, "left_anti")
-        if touched:
-            src = source.select(
-                *[F.col(k).alias(f"__mk_{k}") for k in keys],
-                *[F.col(c).alias(f"__mv_{c}") for c in upd_cols],
-                F.lit(True).alias("__matched"))
-            cond = None
-            for k in keys:
-                eq = F.col(k) == F.col(f"__mk_{k}")
-                cond = eq if cond is None else (cond & eq)
-            rewritten = (self.read(partition_values=touched)
-                         .join(src, cond, "left_outer")
-                         .select(*[
-                             (F.when(F.col("__matched").isNotNull(),
-                                     F.col(f"__mv_{c}"))
-                              .otherwise(F.col(c)).alias(c)
-                              if c in upd_cols else F.col(c))
-                             for c in schema.fieldNames()]))
-            payload = rewritten.unionByName(payload)
-        staged = self._write_partitions(
+        # ONE staged write executes the statement.  Staged keys that
+        # were touched REPLACE their partition's directory list; all
+        # other staged keys append.
+        payload = merge_payload(
+            self.read(partition_values=touched) if touched else None,
+            cur, source, keys, upd_cols, insert_unmatched)
+        staged = {} if payload is None else self._write_partitions(
             payload, pcols, op="merge",
             enforce=man.get("constraints", {}))
         replaced = {self._ckey(v, pcols) for v in touched}
@@ -2543,27 +2684,12 @@ class PartitionedTable:
             done = man.get("txns", {}).get(sink_id)
             if done is not None and batch_id <= done:
                 return False
-            pcols = self._pcols_of(man)
             expected = T._parse_datatype_string(man["schema"])
-            if [(f.name, f.dataType) for f in expected.fields] != \
-                    [(f.name, f.dataType) for f in rows.schema.fields]:
-                raise DatabaseException(
-                    f"append into '{self.root}': schema mismatch; "
-                    f"table has {expected.simpleString()}, batch has "
-                    f"{rows.schema.simpleString()}")
-            parts = {k: list(v) for k, v in man["parts"].items()}
-            # NULL-partition and CHECK-constraint guards ride the
-            # write job inside _write_partitions — no pre-write jobs
-            for key, ds in self._write_partitions(
-                    rows, pcols, op="append",
-                    enforce=man.get("constraints", {})).items():
-                parts.setdefault(key, []).extend(ds)
-            txns = dict(man.get("txns", {}))
-            txns[sink_id] = batch_id
+            self._check_schema(expected, rows.schema, "append")
             try:
-                self._commit(man["version"] + 1, pcols, expected, parts,
-                             txns, man.get("tombstones", {}),
-                             op="STREAMING APPEND")
+                self._append(man, rows, expected,
+                             {**man.get("txns", {}), sink_id: batch_id},
+                             "STREAMING APPEND")
                 return True
             except ConflictException:
                 if attempt:
@@ -2614,20 +2740,8 @@ class PartitionedTable:
             else list(partition_cols)
         man = self._manifest()
         schema = T._parse_datatype_string(man["schema"])
-        if not pcols or len(set(pcols)) != len(pcols):
-            raise DatabaseException(
-                f"repartition_table '{self.root}': partition columns "
-                f"{pcols} must be non-empty and distinct")
-        for c in pcols:
-            if c not in schema.fieldNames():
-                raise DatabaseException(
-                    f"repartition_table '{self.root}': no column "
-                    f"'{c}' in {schema.fieldNames()}")
-            if not isinstance(schema[c].dataType, _KEYABLE):
-                raise DatabaseException(
-                    f"repartition_table '{self.root}': column '{c}' "
-                    f"has type {schema[c].dataType}; only string/"
-                    f"integral/boolean/date columns partition")
+        self._check_partition_cols(pcols, schema,
+                                   f"repartition_table '{self.root}'")
         df = self.read()  # current version, tombstones applied
         # NULLs in a NEW partition column are caught from the staged
         # layout inside _write_partitions — the old take(1) probe was
@@ -2734,7 +2848,9 @@ class PartitionedTable:
             shaped = (df.repartitionByRange(n_out,
                                             *[F.col(c) for c in cols])
                       .sortWithinPartitions(*cols))
-        new_parts = self._write_partitions(shaped, pcols)
+        new_parts = self._write_partitions(
+            shaped, pcols, sort_cols=list(sort_by) if sort_by or
+            zorder_by else None)
         for k in touched:
             parts[k] = new_parts.get(k, [])
         self._commit(man["version"] + 1, pcols,
@@ -2948,16 +3064,14 @@ class PartitionedTable:
                             exist_ok=False)
         metaio.IO.make_dirs(os.path.join(dest_root, "parts"),
                             exist_ok=True)
-        stub = object.__new__(PartitionedTable)
-        stub.spark = self.spark
-        stub.root = dest_root
+        stub = PartitionedTable(self.spark, dest_root)
         stub._commit(0, self._pcols_of(man),
                      T._parse_datatype_string(man["schema"]),
                      man["parts"], tombstones=man.get("tombstones"),
                      constraints=man.get("constraints", {}),
                      bloom_cols=man.get("bloom_cols", []),
                      tomb_counts=man.get("tomb_counts", {}),
-                     op="CLONE")
+                     sort_cols=man.get("sort_cols", []), op="CLONE")
         self._register_clone(dest_root)
         return PartitionedTable(self.spark, dest_root)
 
@@ -3037,11 +3151,16 @@ class PartitionedTable:
                 f"vacuum '{self.root}': keep_last must be >= 1, got "
                 f"{keep_last}")
         vs = self.versions()
-        for v in vs[:-keep_last] if len(vs) > keep_last else []:
-            metaio.IO.remove(self._manifest_path(v))
+        oldest = vs[max(len(vs) - keep_last, 0)]
+        # every manifest from the oldest kept one up stays referenced:
+        # a multi-table commit's pending one may still commit
         referenced = self._clone_referenced()
-        for v in self.versions():
-            for ds in self._manifest(v)["parts"].values():
+        for v in listed_versions(self.root):
+            if v < oldest:
+                metaio.IO.remove(self._manifest_path(v))
+                continue
+            man = json.loads(metaio.IO.read_text(self._manifest_path(v)))
+            for ds in man["parts"].values():
                 referenced.update(os.path.normpath(d) for d in ds)
         removed = []
         parts_root = os.path.join(self.root, "parts")

@@ -32,9 +32,6 @@ replays every retained version's appends first.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
@@ -49,20 +46,23 @@ class _DirPartition(InputPartition):
 
 
 def _read_manifest(root: str, version: int) -> dict:
-    from cs186_query_optimization_project_spark import metaio
+    from cs186_query_optimization_project_spark.partitioned import (
+        load_manifest,
+    )
 
-    return json.loads(metaio.IO.read_text(
-        os.path.join(root, "_manifests", f"v{version}.json")))
+    return load_manifest(root, version)
 
 
 def _versions(root: str) -> list[int]:
-    from cs186_query_optimization_project_spark import metaio
+    """The committed versions (a manifest of a multi-table commit that
+    never committed is not part of the table's history)."""
+    from cs186_query_optimization_project_spark.partitioned import (
+        listed_versions,
+        load_manifest,
+    )
 
-    out = []
-    for name in metaio.IO.list_dir(os.path.join(root, "_manifests")):
-        if name.startswith("v") and name.endswith(".json"):
-            out.append(int(name[1:-len(".json")]))
-    return sorted(out)
+    return [v for v in listed_versions(root)
+            if load_manifest(root, v) is not None]
 
 
 class ManifestStreamReader(DataSourceStreamReader):

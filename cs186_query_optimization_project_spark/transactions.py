@@ -1,4 +1,4 @@
-"""Optimistic snapshot transactions over the copy-on-write catalog.
+"""Optimistic snapshot transactions over the catalog's manifest tables.
 
 The reference serializes with strict table-level 2PL plus waits-for
 deadlock *prevention* (``db/concurrency/LockManager.java:49–85``,
@@ -7,21 +7,22 @@ writers and a transaction that would close a cycle is refused. A Spark
 cluster has no shared lock manager to translate that design onto — the
 scale-out expression of the same guarantees (table-granularity
 isolation, no lost updates) is *optimistic concurrency* over the
-versioned copy-on-write tables ``database.py`` already writes, the same
-protocol a Delta/Iceberg commit uses per table:
+manifest-versioned tables ``database.py`` keeps, the same protocol a
+Delta/Iceberg commit uses per table:
 
-- ``begin()`` pins each touched table's current version — snapshot
-  reads; readers never block and never see a concurrent writer's
-  half-published state (a version directory is immutable once written).
+- the first read of a table pins its catalog version — snapshot reads;
+  readers never block and never see a concurrent writer's
+  half-published state (a manifest version is immutable once written).
 - DML buffers *intentions* as declarative transforms with
   read-your-writes: ``txn.table()`` replays the buffer over the pinned
   snapshot, so a transaction sees its own inserts/updates/deletes while
   the outside world sees nothing until commit.
-- ``commit()`` validates first-committer-wins: if any *written* table's
-  published version moved past the pinned one, raise
-  :class:`ConflictException` (the deadlock-victim analog — retry on a
-  fresh snapshot instead of blocking), else publish each table through
-  the normal copy-on-write rewrite.
+- ``commit()`` validates first-committer-wins: if any *written* table
+  advanced past the pinned version, raise :class:`ConflictException`
+  (the deadlock-victim analog — retry on a fresh snapshot instead of
+  blocking), else publish every written table as one all-or-nothing
+  commit (``Database._commit_frames``); the manifests' exclusive
+  create catches a commit made through another catalog or process.
 
 Read-only tables are not validated (snapshot isolation, not full
 serializability — same granularity trade the reference makes by locking
@@ -88,14 +89,6 @@ def make_update_applier(condition, assignments: dict[str, Any]):
     return _apply
 
 
-def _version_token(entry) -> object:
-    """Identity of a table's current published version.  On-disk tables
-    get a new path per rewrite (``Database._rewrite``), so the path IS
-    the version; in-memory tables swap the DataFrame object, so object
-    identity serves."""
-    return entry.path if entry.path is not None else id(entry.df)
-
-
 class _SnapshotView:
     """Database facade serving a transaction's snapshot: ``table()`` /
     ``schema()`` replay the intent log over the pinned versions, and
@@ -124,10 +117,12 @@ class Transaction:
     ``updateRecord`` / ``deleteRecord`` / ``query``) under optimistic
     snapshot semantics."""
 
+    _ENDED = "committed, rolled back, or aborted on conflict"
+
     def __init__(self, db) -> None:
         self._db = db
-        #: name -> (version token at pin time, pinned DataFrame)
-        self._pins: dict[str, tuple[object, DataFrame]] = {}
+        #: name -> (catalog entry, its version, DataFrame) at pin time
+        self._pins: dict[str, tuple] = {}
         #: name -> ordered DataFrame->DataFrame transforms (the intent log)
         self._writes: dict[str, list] = {}
         self._active = True
@@ -139,7 +134,7 @@ class Transaction:
         """Snapshot read + read-your-writes: the pinned version with this
         transaction's buffered mutations replayed on top."""
         self._check_active()
-        df = self._pin(name)[1]
+        df = self._pin(name)[2]
         for transform in self._writes.get(name, ()):
             df = transform(df)
         return df
@@ -162,16 +157,13 @@ class Transaction:
     def insert_rows(self, name: str, rows: DataFrame) -> "Transaction":
         self._check_active()
         verify_insert_schema(self.table(name), rows, name)
-        self._writes.setdefault(name, []).append(
-            lambda df, rows=rows: df.unionByName(rows))
-        return self
+        return self._buffer(name, lambda df, rows=rows: df.unionByName(rows))
 
     def delete_rows(self, name: str, condition) -> "Transaction":
         self._check_active()
         self._pin(name)
-        self._writes.setdefault(name, []).append(
-            lambda df, c=condition: df.filter(~c | c.isNull()))
-        return self
+        return self._buffer(
+            name, lambda df, c=condition: df.filter(~c | c.isNull()))
 
     def update_rows(self, name: str, condition,
                     assignments: dict[str, Any]) -> "Transaction":
@@ -181,8 +173,12 @@ class Transaction:
             if col_name not in base_cols:
                 raise DatabaseException(
                     f"update '{name}': unknown column '{col_name}'")
-        self._writes.setdefault(name, []).append(
-            make_update_applier(condition, assignments))
+        return self._buffer(name, make_update_applier(condition,
+                                                      assignments))
+
+    def _buffer(self, name: str, transform) -> "Transaction":
+        self._db._writable(name)
+        self._writes.setdefault(name, []).append(transform)
         return self
 
     # ------------------------------------------------------------------ #
@@ -201,9 +197,7 @@ class Transaction:
         only the commit instant blocks, and only against a concurrent
         writer of the same table.  A lock acquisition the waits-for
         graph refuses surfaces as :class:`ConflictException` (the
-        optimistic retry signal), not a deadlock.  (Multi-process
-        publication would move this CAS into a shared catalog service —
-        the Delta-log role.)"""
+        optimistic retry signal), not a deadlock."""
         self._check_active()
         from cs186_query_optimization_project_spark import concurrency
         from cs186_query_optimization_project_spark.errors import (
@@ -226,31 +220,19 @@ class Transaction:
                     f"commit lock refused or timed out (concurrent "
                     f"writer holds a written table): {exc}; retry on a "
                     f"fresh snapshot") from exc
-            for name in self._writes:
-                entry = self._db._entry(name)
-                if _version_token(entry) != self._pins[name][0]:
-                    self._active = False
-                    raise ConflictException(
-                        f"write-write conflict on '{name}': version "
-                        f"advanced since this transaction's snapshot; "
-                        f"retry on a fresh snapshot")
-            # two-phase apply: stage every table's new version (the
-            # failure-prone writes), then publish all catalog pointers
-            # (pure swaps, no I/O) — a mid-staging failure aborts the
-            # transaction with the catalog untouched, so a fresh
-            # transaction's retry never conflicts with a half-publish
-            try:
-                staged = [self._db._stage(self._db._entry(name),
-                                          self.table(name))
-                          for name in self._writes]
-            except Exception:
-                self._active = False
-                raise
-            for st in staged:
-                self._db._publish(st)
-            self._active = False
+            self._commit_writes()
         finally:
             lm.release_all(tid)
+
+    def _commit_writes(self) -> None:
+        """Commit every written table at once; the transaction ends
+        either way."""
+        try:
+            self._db._commit_frames({
+                name: (*self._pins[name][:2], self.table(name))
+                for name in self._writes})
+        finally:
+            self._active = False
 
     def rollback(self) -> None:
         """Discard the intent log; nothing was published."""
@@ -259,15 +241,14 @@ class Transaction:
         self._pins.clear()
 
     # ------------------------------------------------------------------ #
-    def _pin(self, name: str) -> tuple[object, DataFrame]:
+    def _pin(self, name: str) -> tuple:
         if name not in self._pins:
             entry = self._db._entry(name)
-            df = entry.df  # resolves lazy loader; immutable once produced
-            self._pins[name] = (_version_token(entry), df)
+            # entry.df resolves the lazy loader; immutable once produced
+            self._pins[name] = (entry, entry.version, entry.df)
         return self._pins[name]
 
     def _check_active(self) -> None:
         if not self._active:
             raise DatabaseException(
-                "transaction is no longer active (committed, rolled "
-                "back, or aborted on conflict)")
+                f"transaction is no longer active ({self._ENDED})")

@@ -21,6 +21,9 @@ from cs186_query_optimization_project_spark.errors import (
     ConflictException,
     DatabaseException,
 )
+from cs186_query_optimization_project_spark.partitioned import (
+    PartitionedTable,
+)
 
 
 def test_db_dml_blocks_behind_2pl_writer(db, tmp_path):
@@ -178,15 +181,16 @@ def test_grant_keeps_live_edges_real_deadlock_still_caught():
 
 
 def _failing_second_stage(db, fail_on):
-    """Monkeypatch helper: Database._stage that raises on one table."""
-    from cs186_query_optimization_project_spark.database import Database
+    """Monkeypatch helper: PartitionedTable._prepare (a commit's
+    staging write) that raises on one table."""
+    import os
 
-    orig = Database._stage
+    orig = PartitionedTable._prepare
 
-    def stage(self, entry, new_df, _orig=orig):
-        if entry.name == fail_on:
+    def stage(self, df, version, _orig=orig):
+        if os.path.basename(self.root) == fail_on:
             raise RuntimeError("simulated disk-full during staging")
-        return _orig(self, entry, new_df)
+        return _orig(self, df, version)
 
     return orig, stage
 
@@ -195,8 +199,6 @@ def test_2pl_commit_all_or_nothing(db, tmp_path, monkeypatch):
     """A mid-commit staging failure must leave EVERY table on its old
     version (two-phase stage-then-publish) — not publish the tables
     staged before the failure — and must release the locks."""
-    from cs186_query_optimization_project_spark.database import Database
-
     for t in ("atom_a", "atom_b"):
         db.create_table(t, db.table("nation"),
                         str(tmp_path / t), mode="overwrite")
@@ -208,10 +210,10 @@ def test_2pl_commit_all_or_nothing(db, tmp_path, monkeypatch):
         txn.insert_rows("atom_a", extra)
         txn.insert_rows("atom_b", extra)
         orig, failing = _failing_second_stage(db, "atom_b")
-        monkeypatch.setattr(Database, "_stage", failing)
+        monkeypatch.setattr(PartitionedTable, "_prepare", failing)
         with pytest.raises(RuntimeError):
             txn.commit()
-        monkeypatch.setattr(Database, "_stage", orig)
+        monkeypatch.setattr(PartitionedTable, "_prepare", orig)
         # atomicity: atom_a was staged BEFORE atom_b failed, but must
         # not have been published
         assert db.table("atom_a").count() == before_a
@@ -228,7 +230,6 @@ def test_optimistic_commit_all_or_nothing(db, tmp_path, monkeypatch):
     """Same atomicity contract on the optimistic path: staging failure
     aborts with the catalog untouched and the transaction dead (a
     retry starts fresh instead of self-conflicting on a half-publish)."""
-    from cs186_query_optimization_project_spark.database import Database
     from cs186_query_optimization_project_spark.errors import (
         DatabaseException,
     )
@@ -243,10 +244,10 @@ def test_optimistic_commit_all_or_nothing(db, tmp_path, monkeypatch):
         txn.insert_rows("atom_c", extra)
         txn.insert_rows("atom_d", extra)
         orig, failing = _failing_second_stage(db, "atom_d")
-        monkeypatch.setattr(Database, "_stage", failing)
+        monkeypatch.setattr(PartitionedTable, "_prepare", failing)
         with pytest.raises(RuntimeError):
             txn.commit()
-        monkeypatch.setattr(Database, "_stage", orig)
+        monkeypatch.setattr(PartitionedTable, "_prepare", orig)
         assert db.table("atom_c").count() == before
         assert db.table("atom_d").count() == before
         # txn is dead; a FRESH transaction commits cleanly

@@ -1,64 +1,99 @@
-"""Cross-process commit honesty probe.
-
-The transaction surface (2PL + optimistic, concurrency.py /
-transactions.py) serializes writers through ONE in-process LockManager
-and ONE in-memory catalog per ``Database`` — the documented boundary:
-multi-process publication would move the commit CAS into a shared
-catalog service (the Delta-log role, transactions.py:204).
+"""Cross-catalog commit honesty probes.
 
 Two ``Database`` instances on the same warehouse path model two driver
-processes.  This test PINS the limitation: their commits do NOT
-serialize — each instance's writes are invisible to the other, and the
-second writer's lineage silently omits the first's committed update (a
-lost update across instances).  If this test ever starts failing
-because the anomaly disappeared, the single-process documentation is
-stale and must be rewritten — cross-process safety must never be
-claimed while this probe passes.
+processes: each has its own in-process LockManager and catalog, so
+what orders their writes is the storage itself — the catalog tables'
+manifests, created exclusively (partitioned.py).  Each statement
+re-reads the newest manifest, so no commit is lost across instances,
+and a true same-version race loses with ConflictException.  A fresh
+``Database`` over the path (what a restarted process opens) sees every
+commit.
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from cs186_query_optimization_project_spark import Database
+from cs186_query_optimization_project_spark.errors import ConflictException
+
+from tests.conftest import rows
 
 
 def _vals(db) -> dict:
     return {r["k"]: r["x"] for r in db.table("t").collect()}
 
 
-def test_cross_instance_commits_do_not_serialize(spark, tmp_path):
+def test_cross_instance_commits_serialize(spark, tmp_path):
     path = str(tmp_path / "t")
-    (spark.createDataFrame([(1, 10), (2, 20)], ["k", "x"])
-     .write.parquet(path))
+    Database(spark).create_table(
+        "t", spark.createDataFrame([(1, 10), (2, 20)], "k long, x long"),
+        path)
     db1 = Database(spark).register_parquet("t", path)
     db2 = Database(spark).register_parquet("t", path)
 
     db1.update_rows("t", F.col("k") == 1, {"x": F.lit(111)})
-    assert _vals(db1) == {1: 111, 2: 20}
-    # db1's COMMITTED update is invisible to db2: no shared catalog
-    assert _vals(db2) == {1: 10, 2: 20}
-
     db2.update_rows("t", F.col("k") == 2, {"x": F.lit(222)})
-    # the cross-instance lost update, pinned: db2's new version derives
-    # from the ORIGINAL table, silently dropping db1's k=1 write —
-    # exactly what a shared lock table prevents within one process
-    # (test_transactions.py) and what a shared catalog service would
-    # prevent across processes
-    assert _vals(db2) == {1: 10, 2: 222}
-    # and the instances have permanently diverged
-    assert _vals(db1) == {1: 111, 2: 20}
+    # db2's statement derived from db1's committed version: no lost
+    # update, in db2 and in any catalog that opens the path
+    assert _vals(db2) == {1: 111, 2: 222}
+    assert _vals(Database(spark).register_parquet("t", path)) == \
+        {1: 111, 2: 222}
+
+    # a race for the same version: both transactions pin version 2,
+    # the first commit wins and the second raises
+    a = Database(spark).register_parquet("t", path).begin()
+    b = Database(spark).register_parquet("t", path).begin()
+    a.update_rows("t", F.col("k") == 1, {"x": F.lit(1)})
+    b.update_rows("t", F.col("k") == 1, {"x": F.lit(2)})
+    a.commit()
+    with pytest.raises(ConflictException):
+        b.commit()
+    fresh = Database(spark).register_parquet("t", path)
+    assert _vals(fresh) == {1: 1, 2: 222}
+    assert fresh.table_versions("t") == [0, 1, 2, 3]
+
+
+def test_reopened_catalog_sees_every_commit(spark, tmp_path):
+    """Commit through each catalog verb and a two-table transaction,
+    then open a new ``Database`` over the directory, as a restarted
+    process does: it registers both tables (a ``.parquet``-named and a
+    plain manifest directory) and reads exactly the committed rows."""
+    d = str(tmp_path)
+    schema = "k long, x long"
+    db = Database(spark)
+    db.create_table("a", spark.createDataFrame([(1, 10), (2, 20)], schema),
+                    f"{d}/a.parquet", index_columns=("k",))
+    db.create_table("b", spark.createDataFrame([(1, 5)], schema),
+                    f"{d}/b")
+    db.insert_rows("a", spark.createDataFrame([(3, 30)], schema))
+    db.update_rows("a", F.col("k") == 1, {"x": F.lit(11)})
+    db.delete_rows("a", F.col("k") == 2)
+    db.merge_rows("a", spark.createDataFrame([(3, 33), (4, 40)], schema),
+                  on="k")
+    txn = db.begin()
+    txn.update_rows("a", F.col("k") == 4, {"x": F.lit(44)})
+    txn.insert_rows("b", spark.createDataFrame([(2, 6)], schema))
+    txn.commit()
+
+    fresh = Database(spark, d)
+    assert rows(fresh.table("a")) == rows(db.table("a")) == \
+        [(1, 11), (3, 33), (4, 44)]
+    assert rows(fresh.table("b")) == rows(db.table("b")) == [(1, 5), (2, 6)]
+    assert fresh.table_versions("a") == db.table_versions("a") == \
+        [0, 1, 2, 3, 4, 5]
+    assert fresh.index_columns("a") == ("k",)
 
 
 def test_partitioned_manifest_commits_serialize_across_instances(
         spark, tmp_path):
-    """The partitioned manifest layer (partitioned.py) CLOSES the gap
-    pinned above: its commit CAS lives in the FILESYSTEM (exclusive
-    manifest create), not in per-instance memory, so two independent
-    instances over the same root serialize — each statement re-reads
-    the latest manifest, and a true same-version race loses with
-    ConflictException (tests/test_partitioned_table.py) instead of
-    silently deriving from a stale snapshot."""
+    """The same guarantee one layer down: the commit CAS lives in the
+    FILESYSTEM (exclusive manifest create), not in per-instance memory,
+    so two independent PartitionedTable instances over the same root
+    serialize — each statement re-reads the latest manifest, and a
+    true same-version race loses with ConflictException
+    (tests/test_partitioned_table.py)."""
     from cs186_query_optimization_project_spark.partitioned import (
         PartitionedTable,
     )
@@ -72,8 +107,7 @@ def test_partitioned_manifest_commits_serialize_across_instances(
     t2 = PartitionedTable(spark, root)
 
     t1.update(F.col("k") == 1, {"x": F.lit(111)})
-    # unlike the Database case above, instance 2 SEES instance 1's
-    # committed version immediately...
+    # instance 2 SEES instance 1's committed version immediately...
     assert {r["k"]: r["x"] for r in t2.read().collect()} == \
         {1: 111, 2: 20}
     t2.update(F.col("k") == 2, {"x": F.lit(222)})

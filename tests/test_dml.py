@@ -1,5 +1,6 @@
-"""Copy-on-write DML surface (reference Transaction.addRecord /
-updateRecord / deleteRecord, db/Database.java:317-401)."""
+"""Catalog DML surface over manifest tables (reference
+Transaction.addRecord / updateRecord / deleteRecord,
+db/Database.java:317-401)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -49,17 +50,17 @@ def test_update_unknown_column_rejected(mutable_db):
 
 
 def test_delete_rows_and_versioning(mutable_db):
-    import os
     before = mutable_db.table("nation").count()
     n0 = mutable_db.table("nation").filter(F.col("n_regionkey") == 0).count()
     mutable_db.delete_rows("nation", F.col("n_regionkey") == 0)
     t = mutable_db.table("nation")
     assert t.count() == before - n0
     assert t.filter(F.col("n_regionkey") == 0).count() == 0
-    # copy-on-write left the previous version on disk
-    assert ".v" in mutable_db._entry("nation").path
+    # the commit added a version; the previous one stays readable
+    assert mutable_db.table_versions("nation") == [0, 1]
+    assert mutable_db.table_at_version("nation", 0).count() == before
     mutable_db.delete_rows("nation", F.col("n_regionkey") == 1)
-    assert mutable_db._entry("nation").path.endswith(".v2")
+    assert mutable_db.table_versions("nation") == [0, 1, 2]
 
 
 def test_dml_on_in_memory_table(spark):
@@ -70,16 +71,13 @@ def test_dml_on_in_memory_table(spark):
     assert [tuple(r) for r in mdb.table("t").collect()] == [(2, "b")]
 
 
-def test_rewrite_preserves_dotted_dir_names(spark, db, tmp_path):
-    from cs186_query_optimization_project_spark import Database
-    base = tmp_path / "corpus.v2024"
-    base.mkdir()
-    mdb = Database(spark)
-    mdb.create_table("nation", db.table("nation"), str(base / "nation"))
-    mdb.delete_rows("nation", F.col("n_regionkey") == 0)
-    path = mdb._entry("nation").path
-    assert path.startswith(str(base))       # stayed inside corpus.v2024/
-    assert path.endswith("nation.v1")
+def test_dml_on_plain_parquet_is_refused(db):
+    """A plain parquet registration has no manifests to commit to: DML
+    and transaction writes on it raise, naming the way out."""
+    with pytest.raises(DatabaseException, match="create_table a writable"):
+        db.delete_rows("nation", F.lit(True))
+    with pytest.raises(DatabaseException, match="read-only"):
+        db.begin().update_rows("nation", F.lit(True), {"n_name": "x"})
 
 
 def test_dml_lifecycle_contract_entry(spark):
@@ -229,8 +227,8 @@ def test_constraint_checks(spark):
 
 
 def test_time_travel_version_chain(spark, tmp_path):
-    """Every published copy-on-write commit appends one readable
-    version; version 0 is the table as created; out-of-range and
+    """Every DML commit appends one readable manifest version;
+    version 0 is the table as created; out-of-range and
     in-memory reads raise engine errors."""
     import pytest
     from cs186_query_optimization_project_spark import Database
@@ -262,10 +260,11 @@ def test_time_travel_version_chain(spark, tmp_path):
 
 
 def test_vacuum_reclaims_old_versions(spark, tmp_path):
-    """vacuum(keep_last=N) deletes all but the newest N retained
-    versions' directories, keeps version numbering stable, raises the
-    named vacuumed error on time-travel reads of reclaimed versions,
-    and never touches the current version."""
+    """vacuum(keep_last=N) drops all but the newest N retained
+    versions and the data directories only they referenced, keeps
+    version numbering stable, raises the named vacuumed error on
+    time-travel reads of reclaimed versions, and never touches the
+    current version."""
     import os
     from cs186_query_optimization_project_spark import Database
     from cs186_query_optimization_project_spark.errors import (
@@ -279,11 +278,11 @@ def test_vacuum_reclaims_old_versions(spark, tmp_path):
                                                "id long, s string"))
     db.delete_rows("vt", F.col("id") == 2)
     db.update_rows("vt", F.col("id") == 1, {"s": F.lit("z")})
-    hist_before = list(db._entry("vt").history)
     assert db.table_versions("vt") == [0, 1, 2, 3]
 
     removed = db.vacuum("vt", keep_last=2)
-    assert removed == hist_before[:2]
+    # v0's directory and v1's appended one: v2's delete rewrote the table
+    assert len(removed) == 2
     for p in removed:
         assert not os.path.exists(p)
     # numbering stable: 2 and 3 survive under their old numbers
@@ -295,7 +294,7 @@ def test_vacuum_reclaims_old_versions(spark, tmp_path):
     assert {r["s"] for r in db.table("vt").collect()} == {"z", "c", "d"}
 
     # idempotent at the floor: keep_last=1 drops v2, keeps current only
-    assert db.vacuum("vt", keep_last=1) == [hist_before[2]]
+    assert len(db.vacuum("vt", keep_last=1)) == 1
     assert db.table_versions("vt") == [3]
     assert db.vacuum("vt", keep_last=1) == []   # nothing left to drop
     assert os.path.exists(db._entry("vt").path)

@@ -301,6 +301,84 @@ for _m in ("read_text", "list_dir", "exists", "is_dir", "write_new",
     setattr(RecordingIO, _m, _record(_m))
 
 
+class CrashingIO(LocalMetadataIO):
+    """Pass-through that counts seam calls and, once ``at`` is reached,
+    fails that call and every later one — a process dying mid-commit."""
+
+    def __init__(self, at=None):
+        self.at, self.calls = at, 0
+
+
+def _crashing(name):
+    def wrapper(self, path, *a, **kw):
+        self.calls += 1
+        if self.at is not None and self.calls >= self.at:
+            raise RuntimeError(f"crash at metadata call {self.calls}")
+        return getattr(LocalMetadataIO, name)(self, path, *a, **kw)
+    return wrapper
+
+
+for _m in ("read_text", "list_dir", "exists", "is_dir", "file_size",
+           "write_new", "replace_text", "publish_lock", "make_dirs",
+           "remove", "remove_tree"):
+    setattr(CrashingIO, _m, _crashing(_m))
+
+
+def test_two_table_commit_atomic_at_every_crash_point(spark, tmp_path,
+                                                      monkeypatch):
+    """A two-table ``begin()`` commit crashed at each of its metadata
+    calls in turn, and once at its Spark write: a fresh ``Database``
+    over the directory then reads both tables before the commit or
+    both after it, never a mix, and a retry from a fresh catalog
+    converges to the after state."""
+    from cs186_query_optimization_project_spark import Database
+
+    d = str(tmp_path)
+    for n in ("a", "b"):
+        Database(spark).create_table(
+            n, spark.createDataFrame([(1, 0)], "k long, x long"),
+            f"{d}/{n}")
+
+    def state():
+        fresh = Database(spark, d)
+        return tuple(fresh.table(n).collect()[0]["x"] for n in ("a", "b"))
+
+    def commit(x, io=None):
+        txn = Database(spark, d).begin()
+        for n in ("a", "b"):
+            txn.update_rows(n, F.lit(True), {"x": F.lit(x)})
+        if io is not None:
+            monkeypatch.setattr(metaio, "IO", io)
+        try:
+            txn.commit()
+        finally:
+            monkeypatch.setattr(metaio, "IO", LocalMetadataIO())
+
+    probe = CrashingIO()
+    commit(1, probe)
+    assert state() == (1, 1)
+    real_write = PartitionedTable._write_partitions
+
+    def failing_write(self, df, *a, **kw):
+        if self.root.endswith("/b"):
+            raise RuntimeError("crash in the Spark write")
+        return real_write(self, df, *a, **kw)
+
+    x = 1
+    for at in [*range(1, probe.calls + 1), "spark"]:
+        if at == "spark":
+            monkeypatch.setattr(PartitionedTable, "_write_partitions",
+                                failing_write)
+        with pytest.raises(RuntimeError, match="crash"):
+            commit(x + 1, None if at == "spark" else CrashingIO(at))
+        monkeypatch.setattr(PartitionedTable, "_write_partitions",
+                            real_write)
+        assert state() in ((x, x), (x + 1, x + 1)), at
+        x += 1
+        commit(x)
+        assert state() == (x, x), at
+
+
 def test_lakehouse_lifecycle_on_hadoop_backend(spark, tmp_path,
                                                monkeypatch):
     """The SAME create→insert→read→point-lookup→delete→time-travel→

@@ -384,8 +384,8 @@ def test_optimize_zorder_clusters_two_columns(spark, tmp_path):
 
 def test_register_partitioned_in_catalog(pt, spark):
     """A PartitionedTable registers into the Database catalog for
-    querying (builder + predicates work over its current version);
-    catalog-level DML on it is refused, pointing at the owning API."""
+    querying (builder + predicates work over its current version), and
+    catalog DML on it commits to its manifests."""
     from cs186_query_optimization_project_spark import Database
 
     db = Database(spark)
@@ -394,11 +394,27 @@ def test_register_partitioned_in_catalog(pt, spark):
                       .where("grp", EQ_OP, "B")
                       .select("id", "amt").execute())
     assert got == [(3, 30.0), (4, 40.0)]
-    with pytest.raises(DatabaseException, match="PartitionedTable API"):
-        db.delete_rows("pt_nation", F.col("id") == 1)
-    with pytest.raises(DatabaseException, match="PartitionedTable API"):
-        db.insert_rows("pt_nation", pt.read())
+    db.delete_rows("pt_nation", F.col("id") == 1)
+    assert pt.versions() == [0, 1]
+    assert sorted(r["id"] for r in pt.read().collect()) == [2, 3, 4, 5]
+    assert db.table("pt_nation").count() == 4
+    # one partition rewritten, the others' directories shared
+    assert _dirs(pt)["B"] == _dirs(pt, 0)["B"]
     db.drop_table("pt_nation")
+
+
+def test_register_parquet_on_manifest_root(pt, spark):
+    """register_parquet (and register_directory) read a PartitionedTable
+    root through its newest committed manifest — not as a raw scan of
+    every version's files under the root."""
+    from cs186_query_optimization_project_spark import Database
+
+    pt.delete(F.col("grp") == "C")
+    db = Database(spark).register_parquet("t", pt.root)
+    assert rows_sorted(db.table("t")) == rows_sorted(pt.read())
+    assert db.table_versions("t") == [0, 1]
+    reopened = Database(spark, os.path.dirname(pt.root))
+    assert rows_sorted(reopened.table("t")) == rows_sorted(pt.read())
 
 
 def rows_sorted(df):

@@ -3644,10 +3644,11 @@ _ANN_PARAMS = {"lsh": {"n_planes": 4}, "ivf": {"n_cells": 16},
 
 #: bump when the index CONTENT semantics change without a parameter
 #: change (e.g. v2: ivf_centroids switched from xxhash64 to the portable
-#: md5 pick; v3: the ivfpq code table moved onto PartitionedTable) —
+#: md5 pick; v3: the ivfpq code table moved onto PartitionedTable; v4:
+#: the header moved to a write-once ``_ann_meta/`` log) —
 #: keeps a stale on-disk index from silently serving the old layout to
 #: a probe whose oracle assumes the new one
-_ANN_INDEX_VERSION = 3
+_ANN_INDEX_VERSION = 4
 
 #: bump to invalidate the shared lakehouse skipping fixture below
 _LAKE_FIXTURE_VERSION = 1
@@ -3702,11 +3703,8 @@ def _orders_bloom_table(spark, sf_dir):
     # source fingerprint → private per-uid /tmp dir); the loader
     # contract differs (a PartitionedTable has no fingerprint field —
     # the fingerprint-keyed PATH is the staleness check)
+    import fcntl
     import hashlib
-    import time as _time
-
-    from cs186_query_optimization_project_spark import metaio
-    from cs186_query_optimization_project_spark.mview import _pid_alive
 
     fp = similarity.source_fingerprint(f"{sf_dir}/orders.parquet")
     parent = _ensure_private_dir(f"/tmp/spark_graft_lake_{os.getuid()}")
@@ -3717,40 +3715,15 @@ def _orders_bloom_table(spark, sf_dir):
     pt = load(path)
     if pt is not None:
         return pt
-    # cross-process build lock (pid-content, dead-holder reclaim —
-    # the mview refresh-lock discipline): without it a second process
-    # that loads mid-build sees an incomplete version trail and
-    # rmtrees the directory out from under the first builder
-    lock = path + ".lock"
-    deadline = _time.time() + 600
-    while True:
-        try:
-            metaio.IO.publish_lock(lock, str(os.getpid()))
-            break
-        except FileExistsError:
-            try:
-                holder = int(metaio.IO.read_text(lock).strip())
-            except (OSError, ValueError):
-                holder = None  # mid-publish: treat as held
-            if holder is not None and not _pid_alive(holder):
-                try:
-                    metaio.IO.remove(lock)
-                except FileNotFoundError:
-                    pass
-                continue
-            if _time.time() > deadline:
-                raise RuntimeError(
-                    f"fixture build lock '{lock}' stuck (held by "
-                    f"pid {holder})")
-            _time.sleep(0.5)
-    try:
+    # cross-process build lock: without it a second process that
+    # loads mid-build sees an incomplete version trail and rmtrees the
+    # directory out from under the first builder.  flock is released
+    # by the kernel when its holder dies, so a crashed builder never
+    # leaves a lock to reclaim
+    with open(path + ".lock", "a") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
         pt = load(path)  # double-checked: the lock winner built it
         return pt if pt is not None else build(path, fp)
-    finally:
-        try:
-            metaio.IO.remove(lock)
-        except FileNotFoundError:
-            pass
 
 
 def _build_or_load_index(sf_dir, src_file: str, family: str, kind: str,
@@ -4271,7 +4244,7 @@ def q_phrase_search(spark, sf_dir):
                                    "slow hash batch")
 
 
-_POSTINGS_INDEX_VERSION = 2   # v2: manifest-versioned PartitionedTables
+_POSTINGS_INDEX_VERSION = 3   # v3: meta is a write-once _postings_meta/ log
 
 
 def _postings_index(spark, sf_dir):
@@ -4465,18 +4438,21 @@ def q_hadoop_lifecycle(spark, sf_dir):
     the cluster deployment configuration, round 14): create a
     partitioned table, versioned insert + delete commits, snapshot
     read, version-0 time travel, and (round 15) a shallow CLONE —
-    whose registry publish exercises the backend's ``replace_text``
-    (tmp + ``FileContext.rename(OVERWRITE)`` with pre-rename checksum
-    -sidecar cleanup) — all with manifests / stats sidecars /
+    whose registration is one exclusive create of its own entry in
+    the source's ``_clones/`` registry, the backend's only write —
+    all with manifests / stats sidecars /
     tombstones flowing through the JVM
     ``org.apache.hadoop.fs.FileSystem`` instead of POSIX calls.  The
     local seam is restored in ``finally`` (other entries are
     untouched even if this one throws).  In-entry contracts raise
     (must survive ``python -O``): the swap really happened (the seam
     instance is the Hadoop class during the lifecycle), three
-    versions committed, and version-0 time travel still reads the
-    pre-DML snapshot.  The oracle replays the insert + delete in SQL
+    versions committed, version-0 time travel still reads the
+    pre-DML snapshot, and the clone is registered and reads the
+    source's snapshot.  The oracle replays the insert + delete in SQL
     — identical final content through either backend is the claim."""
+    import os
+
     from cs186_query_optimization_project_spark import metaio
     from cs186_query_optimization_project_spark.partitioned import (
         PartitionedTable,
@@ -4507,12 +4483,13 @@ def q_hadoop_lifecycle(spark, sf_dir):
             if pt.read(version=0).count() != n0:
                 raise RuntimeError("hadoop-backend time travel lost "
                                    "the pre-DML snapshot")
-            # shallow clone through the backend: registering the
-            # clone publishes the source's _clones.json via
-            # replace_text — the FileContext.rename(OVERWRITE) +
-            # checksum-sidecar-cleanup path — and the clone must
+            # shallow clone through the backend: the clone registers
+            # with one write_new of its own _clones/ entry, and must
             # read the full post-DML snapshot back (round 15)
             cl = pt.clone(f"{base}/c")
+            if os.path.normpath(cl.root) not in pt.registered_clones():
+                raise RuntimeError("hadoop-backend clone registration "
+                                   "was not published")
             if cl.read().count() != pt.read().count():
                 raise RuntimeError("hadoop-backend shallow clone "
                                    "diverged from its source snapshot")
@@ -4772,7 +4749,7 @@ def q_partition_overwrite(spark, sf_dir):
 
 def q_clone_vacuum_guard(spark, sf_dir):
     """The Delta vacuum-after-shallow-clone data-loss hazard, closed:
-    ``clone()`` registers the dest in the source's ``_clones.json``
+    ``clone()`` registers the dest in the source's ``_clones/`` registry
     and the source's ``vacuum`` treats clone-referenced directories as
     reachable (``partitioned.py``).  In-entry contract raises (must
     survive ``python -O``): after the source deletes EVERYTHING and

@@ -19,9 +19,8 @@ Shapes at scale:
 
 from __future__ import annotations
 
-import json
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -188,7 +187,7 @@ def similar_docs(df: DataFrame, query_id, text_col: str = "text",
 # (sketches._H60), so the driver routes a literal term to its bucket in
 # plain Python and external oracles can replay the layout.
 
-_POSTINGS_META = "_postings_index_meta.json"
+_POSTINGS_META = "_postings_meta"   # write-once v<N>.json log
 
 
 @dataclass(frozen=True)
@@ -197,14 +196,16 @@ class PostingsIndex:
     :class:`~cs186_query_optimization_project_spark.partitioned
     .PartitionedTable`\\ s (postings keyed on token bucket, doc
     lengths keyed on an id-hash bucket) plus the BM25 corpus
-    constants, bound together by a meta file that PINS the table
-    versions this handle reads.
+    constants, bound together by a meta entry that PINS the table
+    versions this handle reads.  The meta is a write-once
+    ``v<N>.json`` log read newest-first; ``meta_version`` is this
+    handle's entry, and a handle's successor publishes entry N+1.
 
     The pinned versions are the torn-read protection: a reader
     resolves the meta once and then scans both tables at the recorded
     versions, so an in-flight append (which commits new table versions
     FIRST and publishes the meta LAST) is invisible until its meta
-    swap — new postings can never be scored against stale
+    publish — new postings can never be scored against stale
     n_docs/avgdl.  ``append_epoch`` drives the exactly-once append
     watermark (:meth:`PartitionedTable.idempotent_append`), making a
     crashed append safely retryable with no duplicate postings."""
@@ -217,6 +218,7 @@ class PostingsIndex:
     postings_version: int = 0      # pinned commit of postings/
     doclen_version: int = 0        # pinned commit of doclen/
     append_epoch: int = 0          # idempotent-append watermark
+    meta_version: int = 0          # this handle's meta log entry
 
     @property
     def postings_path(self) -> str:
@@ -254,18 +256,41 @@ def _doclen_bucket_col(id_col: str):
 
 
 def _write_postings_meta(idx: PostingsIndex) -> None:
-    """Atomic meta publish — the ONE commit point binding both table
-    versions and the corpus constants (readers load it exactly once)."""
-    from cs186_query_optimization_project_spark import metaio
+    """Publish ``idx`` as meta entry ``idx.meta_version`` — the ONE
+    commit point binding both table versions and the corpus constants
+    (readers load it exactly once).  The entry taken with other
+    content means another writer published from the same handle."""
+    from cs186_query_optimization_project_spark.partitioned import (
+        log_publish,
+    )
 
-    metaio.IO.replace_text(
-        os.path.join(idx.path, _POSTINGS_META),
-        json.dumps({"format": 2, "n_buckets": idx.n_buckets,
-                    "n_docs": idx.n_docs, "avgdl": idx.avgdl,
-                    "source_fingerprint": idx.source_fingerprint,
-                    "postings_version": idx.postings_version,
-                    "doclen_version": idx.doclen_version,
-                    "append_epoch": idx.append_epoch}))
+    if not log_publish(
+            os.path.join(idx.path, _POSTINGS_META), idx.meta_version,
+            {"format": 2, "n_buckets": idx.n_buckets,
+             "n_docs": idx.n_docs, "avgdl": idx.avgdl,
+             "source_fingerprint": idx.source_fingerprint,
+             "postings_version": idx.postings_version,
+             "doclen_version": idx.doclen_version,
+             "append_epoch": idx.append_epoch}):
+        raise ValueError(
+            f"stale PostingsIndex handle: meta entry "
+            f"v{idx.meta_version} at {idx.path!r} was published by "
+            "another writer since this handle loaded; reload via "
+            "load_postings_index() and re-issue")
+
+
+def _publish_successor(index: PostingsIndex, pt_post, pt_len,
+                       n_docs: int, avgdl: float,
+                       append_epoch: int) -> PostingsIndex:
+    """Publish the handle after ``index``: both tables' newest
+    versions with the given constants, as meta entry N+1."""
+    out = replace(index, n_docs=n_docs, avgdl=avgdl,
+                  postings_version=max(pt_post.versions()),
+                  doclen_version=max(pt_len.versions()),
+                  append_epoch=append_epoch,
+                  meta_version=index.meta_version + 1)
+    _write_postings_meta(out)
+    return out
 
 
 def build_postings_index(df: DataFrame, path: str, text_col: str = "text",
@@ -285,17 +310,18 @@ def build_postings_index(df: DataFrame, path: str, text_col: str = "text",
         _bucket_partitioned,
     )
     from cs186_query_optimization_project_spark.partitioned import (
-        PartitionedTable,
+        PartitionedTable, log_newest,
     )
 
     spark = df.sparkSession
     # rebuild of an existing index: retract the meta FIRST, so a crash
     # mid-rebuild leaves load_postings_index() = None (caller rebuilds)
-    # instead of a handle pointing at deleted tables
-    try:
-        metaio.IO.remove(os.path.join(path, _POSTINGS_META))
-    except FileNotFoundError:
-        pass
+    # instead of a handle pointing at deleted tables.  Numbering goes
+    # on past the retracted log, so a pre-rebuild handle's publish
+    # finds its entry taken
+    log = os.path.join(path, _POSTINGS_META)
+    prev = log_newest(log)
+    metaio.IO.remove_tree(log)
     for sub in ("postings", "doclen"):
         metaio.IO.remove_tree(os.path.join(path, sub))
     post = (build_postings(df, text_col, id_col)
@@ -324,7 +350,8 @@ def build_postings_index(df: DataFrame, path: str, text_col: str = "text",
                         float(stats["avgdl"] or 0.0), fingerprint,
                         postings_version=max(pt_post.versions()),
                         doclen_version=max(pt_len.versions()),
-                        append_epoch=0)
+                        append_epoch=0,
+                        meta_version=prev[0] + 1 if prev else 0)
     _write_postings_meta(idx)
     return idx
 
@@ -361,14 +388,17 @@ def postings_append(spark: SparkSession, index: PostingsIndex,
     lacked): both table appends are :meth:`PartitionedTable
     .idempotent_append` commits watermarked by ``append_epoch + 1``,
     and the meta — pinning the NEW versions and constants together —
-    publishes LAST via one atomic replace.  A reader holding the old
-    meta keeps scanning the old pinned versions throughout (never new
-    postings with stale n_docs/avgdl); a crash anywhere before the
-    meta swap leaves the published index bit-identical to before the
-    append, and RETRYING the same append is safe: the epoch watermark
-    turns the already-committed table inserts into dedup no-ops, the
-    constants recompute from the same batch, and the meta publish
-    completes the interrupted commit."""
+    publishes LAST as the handle's next meta entry (one exclusive
+    create).  A reader holding the old meta keeps scanning the old
+    pinned versions throughout (never new postings with stale
+    n_docs/avgdl); a crash anywhere before the meta publish leaves the
+    published index bit-identical to before the append, and RETRYING
+    the same append is safe: the epoch watermark turns the
+    already-committed table inserts into dedup no-ops, the constants
+    recompute from the same batch, and the meta publish completes the
+    interrupted commit (an identical entry already published counts
+    as done).  Appending from a handle another writer has published
+    past raises the stale-handle ValueError at the publish."""
     from cs186_query_optimization_project_spark.functions.similarity import (
         _bucket_partitioned,
     )
@@ -409,13 +439,8 @@ def postings_append(spark: SparkSession, index: PostingsIndex,
     n_docs = index.n_docs + n_new
     avgdl = ((index.n_docs * index.avgdl + dl_new) / n_docs
              if n_docs else 0.0)
-    out = PostingsIndex(index.path, index.n_buckets, n_docs, avgdl,
-                        index.source_fingerprint,
-                        postings_version=max(pt_post.versions()),
-                        doclen_version=max(pt_len.versions()),
-                        append_epoch=epoch)
-    _write_postings_meta(out)
-    return out
+    return _publish_successor(index, pt_post, pt_len, n_docs, avgdl,
+                              epoch)
 
 
 def _guard_fresh_handle(index: PostingsIndex) -> None:
@@ -466,7 +491,7 @@ def postings_remove(spark: SparkSession, index: PostingsIndex,
     corpus constants update INCREMENTALLY from the doomed documents'
     recorded lengths (``n' = n - n_rm``, ``avgdl' = (n·avgdl -
     Σ removed_dl) / n'``) — no corpus re-aggregate.  After the meta
-    swap every reader ranks exactly as a from-scratch build over the
+    publish every reader ranks exactly as a from-scratch build over the
     surviving corpus (pinned in tests).
 
     Same commit discipline as append: tables commit first, the meta —
@@ -546,13 +571,8 @@ def postings_remove(spark: SparkSession, index: PostingsIndex,
     n_docs = index.n_docs - n_rm
     avgdl = ((index.n_docs * index.avgdl - dl_rm) / n_docs
              if n_docs else 0.0)
-    out = PostingsIndex(index.path, index.n_buckets, n_docs, avgdl,
-                        index.source_fingerprint,
-                        postings_version=max(pt_post.versions()),
-                        doclen_version=max(pt_len.versions()),
-                        append_epoch=index.append_epoch)
-    _write_postings_meta(out)
-    return out
+    return _publish_successor(index, pt_post, pt_len, n_docs, avgdl,
+                              index.append_epoch)
 
 
 def _sql_id_literal(v) -> str:
@@ -594,7 +614,7 @@ def postings_remove_soft(spark: SparkSession, index: PostingsIndex,
     predicate against both tables via :meth:`PartitionedTable
     .delete_soft` — O(1) data movement; every probe then applies the
     predicate as a map-only filter on read.  Rankings after the meta
-    swap are identical to :func:`postings_remove`'s rewrite and to a
+    publish are identical to :func:`postings_remove`'s rewrite and to a
     from-scratch build over the survivors (pinned in tests and in the
     ``bm25_remove`` entry); space reclaims later when
     :func:`postings_optimize` materializes the tombstones (its
@@ -609,7 +629,7 @@ def postings_remove_soft(spark: SparkSession, index: PostingsIndex,
     Commit protocol: both ``delete_soft`` commits land first, the
     meta — pinning the tombstoned versions with constants updated
     incrementally from the doomed documents' recorded lengths —
-    publishes LAST.  A crash before the meta swap leaves the
+    publishes LAST.  A crash before the meta publish leaves the
     published index ranking as before (readers pin pre-tombstone
     versions); retrying from the pre-crash handle passes the
     staleness guard (the published meta still matches it), re-records
@@ -686,13 +706,8 @@ def postings_remove_soft(spark: SparkSession, index: PostingsIndex,
     n_docs = index.n_docs - n_rm
     avgdl = ((index.n_docs * index.avgdl - dl_rm) / n_docs
              if n_docs else 0.0)
-    out = PostingsIndex(index.path, index.n_buckets, n_docs, avgdl,
-                        index.source_fingerprint,
-                        postings_version=max(pt_post.versions()),
-                        doclen_version=max(pt_len.versions()),
-                        append_epoch=index.append_epoch)
-    _write_postings_meta(out)
-    return out
+    return _publish_successor(index, pt_post, pt_len, n_docs, avgdl,
+                              index.append_epoch)
 
 
 def postings_optimize(spark: SparkSession, index: PostingsIndex,
@@ -733,13 +748,8 @@ def postings_optimize(spark: SparkSession, index: PostingsIndex,
     pt_len = PartitionedTable(spark, index.doclen_path)
     pt_post.optimize(target_file_bytes, sort_by=("token",))
     pt_len.optimize(target_file_bytes)
-    out = PostingsIndex(index.path, index.n_buckets, index.n_docs,
-                        index.avgdl, index.source_fingerprint,
-                        postings_version=max(pt_post.versions()),
-                        doclen_version=max(pt_len.versions()),
-                        append_epoch=index.append_epoch)
-    _write_postings_meta(out)
-    return out
+    return _publish_successor(index, pt_post, pt_len, index.n_docs,
+                              index.avgdl, index.append_epoch)
 
 
 def postings_optimize_if(spark: SparkSession, index: PostingsIndex,
@@ -780,22 +790,25 @@ def postings_optimize_if(spark: SparkSession, index: PostingsIndex,
 
 
 def load_postings_index(path: str) -> PostingsIndex | None:
-    """Load a previously built postings index; None if absent/unreadable
-    or in the pre-manifest format (caller rebuilds — the index is a
-    cache of the corpus)."""
-    from cs186_query_optimization_project_spark import metaio
+    """Load a previously built postings index from its newest meta
+    entry; None if absent/unreadable or in an older layout (caller
+    rebuilds — the index is a cache of the corpus)."""
+    from cs186_query_optimization_project_spark.partitioned import (
+        log_newest,
+    )
 
     try:
-        meta = json.loads(
-            metaio.IO.read_text(os.path.join(path, _POSTINGS_META)))
-        if meta.get("format") != 2:
-            return None          # pre-manifest layout: force rebuild
+        newest = log_newest(os.path.join(path, _POSTINGS_META))
+        if newest is None:
+            return None          # absent, or an older single-file meta
+        number, meta = newest
         return PostingsIndex(path, meta["n_buckets"], meta["n_docs"],
                              meta["avgdl"],
                              meta.get("source_fingerprint", ""),
                              postings_version=meta["postings_version"],
                              doclen_version=meta["doclen_version"],
-                             append_epoch=meta.get("append_epoch", 0))
+                             append_epoch=meta.get("append_epoch", 0),
+                             meta_version=number)
     except (OSError, ValueError, KeyError):
         return None
 

@@ -315,7 +315,7 @@ def ivf_topk(df: DataFrame, query_vec: list[float], k: int = 10,
 # n_probe/n_cells (IVF) of the files.  This is the B+-tree→sorted-write
 # move (database.py docstring) applied to vector search.
 
-_META_FILE = "_ann_index_meta.json"
+_META_LOG = "_ann_meta"        # write-once v<N>.json header log
 
 
 @dataclass(frozen=True)
@@ -332,28 +332,48 @@ class AnnIndex:
     source_fingerprint: str = ""
 
 
-def _write_meta(index: AnnIndex) -> None:
-    # through the metadata seam (round 15): the ANN meta sidecar was
-    # the one lakehouse-adjacent metadata file still written with a
-    # bare open() — on a cluster it must ride the same MetadataIO the
-    # PartitionedTables underneath it use.  replace_text = atomic
-    # overwrite-publish (rebuilds re-point the meta).
-    from cs186_query_optimization_project_spark import metaio
+def _next_meta(path: str) -> int:
+    """The header entry a build of ``path`` publishes: one past the
+    newest, read before the build starts."""
+    from cs186_query_optimization_project_spark.partitioned import (
+        log_newest,
+    )
+
+    newest = log_newest(os.path.join(path, _META_LOG))
+    return newest[0] + 1 if newest else 0
+
+
+def _write_meta(index: AnnIndex, number: int) -> None:
+    """Publish the index header as entry ``number`` of its write-once
+    log; the entry taken with another header means a concurrent
+    rebuild published first."""
+    from cs186_query_optimization_project_spark.partitioned import (
+        log_publish,
+    )
 
     meta = {"kind": index.kind, "dim": index.dim, "params": index.params,
             "source_fingerprint": index.source_fingerprint}
-    metaio.IO.replace_text(os.path.join(index.path, _META_FILE),
-                           json.dumps(meta))
+    if not log_publish(os.path.join(index.path, _META_LOG), number,
+                       meta):
+        raise ValueError(
+            f"stale AnnIndex handle: header entry v{number} at "
+            f"{index.path!r} was published by a concurrent rebuild; "
+            "reload via load_ann_index()")
 
 
 def load_ann_index(path: str) -> AnnIndex | None:
-    """Load a previously built index; None if absent/unreadable (caller
-    rebuilds — an index is a cache of the corpus, never the only copy)."""
-    from cs186_query_optimization_project_spark import metaio
+    """Load a previously built index from its newest header entry;
+    None if absent/unreadable or in an older layout (caller rebuilds —
+    an index is a cache of the corpus, never the only copy)."""
+    from cs186_query_optimization_project_spark.partitioned import (
+        log_newest,
+    )
 
     try:
-        meta = json.loads(
-            metaio.IO.read_text(os.path.join(path, _META_FILE)))
+        newest = log_newest(os.path.join(path, _META_LOG))
+        if newest is None:
+            return None
+        meta = newest[1]
         return AnnIndex(meta["kind"], path, meta["dim"], meta["params"],
                         meta.get("source_fingerprint", ""))
     except (OSError, ValueError, KeyError):
@@ -368,10 +388,10 @@ def _guard_fresh_ann_handle(index: AnnIndex) -> None:
     residual codebooks): a handle a concurrent REBUILD has published
     past would insert codes that decode wrongly under the new header —
     silent recall corruption, invisible until probed.  Staleness is
-    judged against the PUBLISHED meta sidecar, not table versions: a
+    judged against the PUBLISHED header, not table versions: a
     retry of this writer's own crashed ``insert``/``overwrite`` commit
     legitimately sees newer table versions but the SAME published
-    header (append/remove never touch the sidecar) and must pass.
+    header (append/remove never publish one) and must pass.
     Handles are normalized through a JSON round-trip so tuple/list and
     int/float representation differences never false-positive."""
     published = load_ann_index(index.path)
@@ -424,6 +444,7 @@ def build_lsh_index(df: DataFrame, path: str, vec_col: str = "embedding",
     then a bucket-keyed shuffle bounds the files per hive directory (see
     ``_bucket_partitioned``; with 2^n_planes buckets the default of one
     file per bucket is right until buckets outgrow a task)."""
+    number = _next_meta(path)
     dim = _dim_of(df, vec_col)
     (_bucket_partitioned(
         df.withColumn("sig", lsh_signature(vec_col, dim, n_planes, seed)),
@@ -431,7 +452,7 @@ def build_lsh_index(df: DataFrame, path: str, vec_col: str = "embedding",
        .write.mode("overwrite").partitionBy("sig").parquet(path))
     idx = AnnIndex("lsh", path, dim,
                    {"n_planes": n_planes, "seed": seed}, fingerprint)
-    _write_meta(idx)
+    _write_meta(idx, number)
     return idx
 
 
@@ -465,12 +486,13 @@ def build_ivf_index(df: DataFrame, path: str, vec_col: str = "embedding",
                     files_per_bucket: int = 8,
                     fingerprint: str = "") -> AnnIndex:
     """Materialize the IVF index: assign each row to its nearest centroid
-    once, write partitioned by ``cell``; centroids live in the sidecar
+    once, write partitioned by ``cell``; centroids live in the header
     metadata (the IVF analog of an index header page).
 
     files_per_bucket defaults >1 here, unlike LSH: with only n_cells
     buckets each cell is corpus/n_cells — routing one to a single writer
     task would bottleneck the build at scale (``_bucket_partitioned``)."""
+    number = _next_meta(path)
     cents = centroids or ivf_centroids(df, n_cells, vec_col, id_col)
     (_bucket_partitioned(
         df.withColumn("cell", ivf_cell(vec_col, cents)),
@@ -478,7 +500,7 @@ def build_ivf_index(df: DataFrame, path: str, vec_col: str = "embedding",
        .write.mode("overwrite").partitionBy("cell").parquet(path))
     idx = AnnIndex("ivf", path, len(cents[0]),
                    {"centroids": cents}, fingerprint)
-    _write_meta(idx)
+    _write_meta(idx, number)
     return idx
 
 
@@ -997,7 +1019,7 @@ def build_ivfpq_index(df: DataFrame, path: str, vec_col: str = "embedding",
     The fp32 corpus never enters the index: at 100 TB the index is
     ~m bytes/row, probes prune to n_probe/n_cells of it, and only the
     final candidates' source rows are re-read for the exact re-rank.
-    Centroids + codebooks live in the sidecar (index header).
+    Centroids + codebooks live in the index header.
 
     The code table is hosted in a :class:`PartitionedTable` keyed on
     ``cell``, so the maintenance lifecycle inherits the manifest
@@ -1010,9 +1032,9 @@ def build_ivfpq_index(df: DataFrame, path: str, vec_col: str = "embedding",
     time travel / vacuum come for free — no bare-parquet mutation
     anywhere in the lifecycle.  A REBUILD over an existing index is
     likewise one versioned ``overwrite_partitions`` commit (no
-    delete-then-recreate window); only the retrained header sidecar
-    is swapped non-versioned, so probers racing a *rebuild* re-load
-    the index (append/remove freeze the header and keep the full
+    delete-then-recreate window); the retrained header publishes as
+    the next entry of its own write-once log, not pinned to a table
+    version, so probers racing a *rebuild* re-load the index (append/remove freeze the header and keep the full
     concurrent-prober contract).
 
     Unlike the plain IVF index (whose md5-pick centroids stay
@@ -1022,6 +1044,7 @@ def build_ivfpq_index(df: DataFrame, path: str, vec_col: str = "embedding",
     actual cell means, not random corpus vectors (measured: recall@10
     0.4→0.9 at the largest test SF).  Each iteration is one scan with
     an n_cells×dim bounded collect."""
+    number = _next_meta(path)
     cents = ivf_centroids(df, n_cells, vec_col, id_col)
     # refine with the SAME metric the router uses (ivf_cell's cosine
     # argmax), so each centroid really is the mean of the members that
@@ -1073,8 +1096,8 @@ def build_ivfpq_index(df: DataFrame, path: str, vec_col: str = "embedding",
         # published (and time-travelable) until the atomic manifest
         # swap, so a crash mid-rebuild loses nothing and a concurrent
         # prober pinned to version N keeps reading intact data — no
-        # bare rmtree window.  The sidecar HEADER (centroids +
-        # codebooks) is still swapped non-versioned below: a rebuild
+        # bare rmtree window.  The HEADER (centroids + codebooks)
+        # publishes below, not pinned to a table version: a rebuild
         # retrains, so probers racing a REBUILD (unlike append/remove,
         # whose header is frozen) are outside the concurrency
         # contract and should re-load the index.
@@ -1089,7 +1112,7 @@ def build_ivfpq_index(df: DataFrame, path: str, vec_col: str = "embedding",
         PartitionedTable.create(df.sparkSession, bucketed, path, "cell")
     idx = AnnIndex("ivfpq", path, len(cents[0]),
                    {"centroids": cents, "codebooks": books}, fingerprint)
-    _write_meta(idx)
+    _write_meta(idx, number)
     return idx
 
 

@@ -1,34 +1,35 @@
 """The metadata-filesystem seam for the lakehouse layer.
 
 Every piece of *metadata* I/O the manifest-versioned storage does —
-manifest JSON, `_stats.json` skipping sidecars, the `_clones.json`
-registry, mview sidecars and refresh locks, vacuum's directory walk —
-goes through the one :class:`LocalMetadataIO` instance below
-(``partitioned.py``, ``mview.py``, ``sources/manifest_stream.py``
-import it as ``metaio.IO``).  Executor-side *data* I/O (parquet
-scans/writes) already goes through Spark/Arrow and is NOT behind this
-seam; neither are the pyarrow footer reads in ``_dir_stats`` (stats
-collection belongs to the write job at cluster scale — Delta computes
-them inside the transaction).
+manifests, `_stats.json` skipping sidecars, the `_clones/` registry,
+view definitions, index meta logs, change cursors, vacuum's directory
+walk — goes through the one :class:`LocalMetadataIO` instance below
+(``partitioned.py``, ``mview.py``, ``sources/manifest_stream.py`` and
+the index modules import it as ``metaio.IO``).  Executor-side *data*
+I/O (parquet scans/writes) already goes through Spark/Arrow and is NOT
+behind this seam; neither are the pyarrow footer reads in
+``_dir_stats`` (stats collection belongs to the write job at cluster
+scale — Delta computes them inside the transaction).
 
 Why a seam: SCALE.md names the local-FS metadata boundary as the one
 port surface between this single-node sandbox and a 1000-executor
 deployment.  This class IS that surface — a Hadoop-FS/object-store
-port implements these ~10 operations (the same boundary Delta draws
+port implements these nine operations (the same boundary Delta draws
 with its per-filesystem ``LogStore``):
 
-- ``write_new``      → PUT-if-absent / LogStore exclusive create (the
-  commit point: first-committer-wins rides on its atomicity)
-- ``replace_text``   → rename-or-CAS (atomic pointer swap)
-- ``publish_lock``   → lock file with content-atomic publish
-- ``list_dir`` / ``exists`` / ``is_dir`` / ``remove`` /
-  ``remove_tree`` / ``make_dirs`` / ``read_text`` → the obvious LIST /
-  HEAD / DELETE / GET calls
+- ``write_new``      → PUT-if-absent / LogStore exclusive create — the
+  ONLY write of content.  Every metadata change is a new write-once
+  file (a ``v<N>.json`` log entry or a named registry entry), so
+  first-committer-wins rides on this one atomicity and no store needs
+  rename.
+- ``list_dir`` / ``exists`` / ``is_dir`` / ``file_size`` /
+  ``read_text`` / ``make_dirs`` / ``remove`` / ``remove_tree`` → the
+  obvious LIST / HEAD / GET / DELETE calls
 
 Implementations must preserve the exception contract (the callers'
-control flow rides on it): ``write_new`` and ``publish_lock`` raise
-``FileExistsError`` when the target exists; ``read_text`` and
-``remove`` raise ``FileNotFoundError`` when it does not;
+control flow rides on it): ``write_new`` raises ``FileExistsError``
+when the target exists; ``read_text``, ``file_size`` and ``remove``
+raise ``FileNotFoundError`` when it does not;
 ``make_dirs(exist_ok=False)`` raises ``FileExistsError``.  A test
 fake (``tests/test_metaio.py``) runs the same semantics suite against
 both the local implementation and an in-memory one to prove the seam
@@ -72,52 +73,6 @@ class LocalMetadataIO:
         with open(path, "x") as f:
             f.write(text)
 
-    def replace_text(self, path: str, text: str) -> None:
-        """Atomic overwrite-publish (write tmp, rename over) — readers
-        see the old content or the new, never a torn file.  Object
-        -store port: rename-or-CAS."""
-        tmp = f"{path}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            f.write(text)
-        os.replace(tmp, path)
-
-    def publish_lock(self, path: str, text: str) -> None:
-        """Create the lock ATOMICALLY WITH ITS CONTENT (hard-link a
-        fully-written tmp into place); FileExistsError = held.  A
-        plain create-then-write would expose an empty lock a reader
-        could mistake for stale.  Filesystems without hard-link
-        support (some NFS/FUSE/object-store mounts raise EPERM /
-        EOPNOTSUPP / ENOSYS / EXDEV) fall back to O_EXCL
-        create+write+fsync: the held/free signal — what every caller's
-        control flow rides on — is preserved; only content atomicity
-        narrows to a sub-millisecond write window, and lock readers
-        already treat unparseable content as held-not-stale."""
-        import errno
-
-        tmp = f"{path}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            f.write(text)
-        try:
-            os.link(tmp, path)
-        except FileExistsError:
-            raise
-        except OSError as exc:
-            if exc.errno not in (errno.EPERM, errno.EOPNOTSUPP,
-                                 errno.ENOSYS, errno.EXDEV,
-                                 errno.EACCES):
-                raise
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            try:
-                os.write(fd, text.encode())
-                os.fsync(fd)
-            finally:
-                os.close(fd)
-        finally:
-            try:
-                os.remove(tmp)
-            except FileNotFoundError:
-                pass
-
     def make_dirs(self, path: str, exist_ok: bool = False) -> None:
         os.makedirs(path, exist_ok=exist_ok)
 
@@ -153,16 +108,9 @@ class HadoopMetadataIO:
       external coordination layer — Delta's ``S3SingleDriverLogStore``
       / DynamoDB LogStore is the published answer; plugging one in
       replaces only THIS method.
-    - ``replace_text``: write tmp + ``FileContext.rename(OVERWRITE)``
-      — atomic on HDFS.  On S3A rename is copy+delete (non-atomic,
-      readers may glimpse the old object then the new — never a torn
-      one, since the copy is of a fully-written tmp).
-    - ``publish_lock``: create-exclusive then write+close.  The
-      held/free signal rides on create-exclusive atomicity (HDFS:
-      atomic); content visibility has the same sub-millisecond
-      open-to-close window as the POSIX ``O_EXCL`` fallback above, and
-      lock readers already treat unparseable/empty content as
-      held-not-stale, so the window is benign by protocol.
+    - the other eight operations are plain LIST / HEAD / GET / DELETE
+      / MKDIRS calls; no caller needs rename, so a store without an
+      atomic rename (S3A) loses nothing.
 
     Exception contract: Java ``FileNotFoundException`` /
     ``FileAlreadyExistsException`` (and the raw-local ``IOException:
@@ -173,7 +121,6 @@ class HadoopMetadataIO:
 
     def __init__(self, spark):
         self._jvm = spark._jvm
-        self._gateway = spark.sparkContext._gateway
         self._conf = spark._jsc.hadoopConfiguration()
 
     # -- plumbing -----------------------------------------------------
@@ -272,46 +219,6 @@ class HadoopMetadataIO:
             raise
         self._write_stream(out, text)
 
-    def replace_text(self, path: str, text: str) -> None:
-        jvm = self._jvm
-        p = self._path(path)
-        fs = self._fs(p)
-        tmp = self._path(f"{path}.tmp.{os.getpid()}")
-        self._write_stream(fs.create(tmp, True), text)
-        # FileContext.rename(OVERWRITE) — the public atomic-overwrite
-        # rename (FileSystem's Rename-options overload is protected);
-        # py4j varargs need an explicit Java array
-        overwrite = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
-        rename_opts = self._gateway.new_array(
-            jvm.org.apache.hadoop.fs.Options.Rename, 1)
-        rename_opts[0] = overwrite
-        # FileContext rides the raw (checksum-less) AbstractFileSystem,
-        # so on a ChecksumFileSystem (file:// LocalFileSystem) the
-        # destination's .crc sidecar would, after the rename, describe
-        # the OLD content and the tmp's .crc would be orphaned — a
-        # stale crc makes every later read throw ChecksumException.
-        # Drop both BEFORE the rename (tmp is fully written; absent
-        # sidecar = "no verification"): a crash at any point then
-        # leaves either the old file or the new one, both readable —
-        # cleanup-after-rename left a PERSISTENTLY unreadable dest if
-        # the process died between the two steps.
-        try:
-            for q in (tmp, p):
-                crc = fs.getChecksumFile(q)
-                if fs.exists(crc):
-                    fs.delete(crc, False)
-        except Exception:       # not a ChecksumFileSystem (e.g. HDFS)
-            pass
-        ctx = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-            p.toUri(), self._conf)
-        ctx.rename(tmp, p, rename_opts)
-
-    def publish_lock(self, path: str, text: str) -> None:
-        # create-exclusive IS the held/free signal; content follows in
-        # the same open-write-close breath (see class docstring for
-        # the visibility-window argument)
-        self.write_new(path, text)
-
     def make_dirs(self, path: str, exist_ok: bool = False) -> None:
         p = self._path(path)
         fs = self._fs(p)
@@ -327,9 +234,8 @@ class HadoopMetadataIO:
                 raise FileNotFoundError(path)
             # delete() returned false but the path is still there
             # (permissions, trash policy, ...) — callers like
-            # build_postings_index's retract-meta-first crash-safety
-            # step rely on remove actually removing; a silent no-op
-            # would leave a loadable meta pointing at doomed tables.
+            # detach_clone rely on remove actually removing; a silent
+            # no-op would keep protecting a detached clone's data.
             raise OSError(
                 f"delete failed but path still exists: {path}")
 

@@ -32,25 +32,20 @@ per affected bucket).  Insert-heavy loads keep the O(churned-buckets)
 shape; delete-heavy loads degrade gracefully to scoped recompute
 instead of raising or rescanning everything.
 
-Refresh is ATOMIC via a version-pointer swap: the merged buckets
-commit as a new STORE version (one ``overwrite_partitions`` commit),
-then one atomic sidecar replace flips (source_version,
-store_version) together — a reader re-opening the view sees either
-the old consistent pair or the new one, never a half-applied refresh.
-Refresh is SINGLE-WRITER: an exclusive pid lockfile held for the
-whole fold makes a concurrent ``refresh()`` raise a named
-``ConflictException`` instead of risking a stale-merge lost update
-(store-version checks alone cannot catch a loser that read the
-sidecar before the winner's swap); dead-pid locks reclaim
-automatically.  A
-refresh that crashed between the store commit and the sidecar swap is
-self-healing: the retry reads the stored aggregate at the PINNED
-sidecar version and re-folds the full outstanding CDF range, whose
-touched-bucket set is a superset of the crashed attempt's, so every
-bucket the orphaned store version altered is overwritten from
-consistent inputs.  Old store versions persist until
-:meth:`MaterializedView.vacuum` (same reachability discipline as
-``PartitionedTable.vacuum``, never reclaiming the pinned version).
+Refresh commits ONCE: the store's manifest records the source version
+the store has folded in as a ``txns`` watermark (Delta's ``txn``
+action, the same map ``PartitionedTable.idempotent_append`` uses), so
+the merged buckets and the new watermark publish together in one
+``overwrite_partitions`` commit of store version N+1 over the N the
+refresh read.  A reader sees the old (store, watermark) pair or the
+new one, never a half-applied refresh; a crash before the commit
+leaves only unreferenced directories, and the retry folds the same
+range again.  Two refreshers that both read N race for N+1:
+first-committer-wins, and the loser raises ``ConflictException``
+without touching the store.  Old store versions persist until
+:meth:`MaterializedView.vacuum`, which keeps the newest.
+``_mview.json`` is the write-once view definition (keys, aggregates,
+buckets).
 
 Store format: buckets persist (keys, mv_count, mv_sum_<c>, mv_nn_<c>,
 __mv) — the non-null counts are load-bearing for NULL-correct sums,
@@ -65,10 +60,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from cs186_query_optimization_project_spark import metaio
 from cs186_query_optimization_project_spark.errors import (
-    ConflictException,
     DatabaseException,
 )
 from cs186_query_optimization_project_spark.partitioned import (
@@ -76,7 +71,8 @@ from cs186_query_optimization_project_spark.partitioned import (
 )
 
 _META = "_mview.json"
-_LOCK = "_refresh.lock"
+#: the store manifest's ``txns`` entry: source version folded in
+_WATERMARK = "source_version"
 
 
 def _bucket_expr(keys: list[str], n_buckets: int) -> F.Column:
@@ -90,16 +86,6 @@ def _bucket_expr(keys: list[str], n_buckets: int) -> F.Column:
                   F.lit(n_buckets)).cast("int")
 
 
-def _pid_alive(pid: int) -> bool:
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True  # alive but foreign — never steal its lock
-    return True
-
-
 class MaterializedView:
     """Handle to a stored incremental aggregate view."""
 
@@ -108,17 +94,16 @@ class MaterializedView:
         self.spark = spark
         self.source = source
         self.root = root.rstrip("/")
-        if not metaio.IO.exists(os.path.join(self.root, _META)):
+        try:
+            meta = json.loads(
+                metaio.IO.read_text(os.path.join(self.root, _META)))
+        except FileNotFoundError:
             raise DatabaseException(
                 f"no materialized view at '{self.root}'; use "
-                f"MaterializedView.create")
-        meta = self._meta()
-        if "n_buckets" not in meta or "store_version" not in meta:
-            raise DatabaseException(
-                f"materialized view at '{self.root}' was written by a "
-                f"pre-bucketed build (generation-directory store); it "
-                f"cannot be opened or refreshed — rebuild it with "
-                f"MaterializedView.create")
+                f"MaterializedView.create") from None
+        if "n_buckets" not in meta:
+            raise self._rebuild_error("a pre-bucketed build "
+                                      "(generation-directory store)")
         self.keys: list[str] = meta["keys"]
         self.sum_cols: list[str] = meta["sum_cols"]
         self.var_cols: list[str] = meta.get("var_cols", [])
@@ -127,10 +112,23 @@ class MaterializedView:
         self.hll_m: int = meta.get("hll_m", 64)
         self.filter_sql: str | None = meta.get("filter_sql")
         self.n_buckets: int = meta["n_buckets"]
+        self._newest()          # a store without a watermark fails here
 
-    def _meta(self) -> dict:
-        return json.loads(
-            metaio.IO.read_text(os.path.join(self.root, _META)))
+    def _rebuild_error(self, writer: str) -> DatabaseException:
+        return DatabaseException(
+            f"materialized view at '{self.root}' was written by "
+            f"{writer}; it cannot be opened or refreshed — rebuild it "
+            f"with MaterializedView.create")
+
+    def _newest(self, store: PartitionedTable | None = None) -> dict:
+        """The store's newest manifest; its ``txns`` carry the
+        watermark."""
+        man = (store or self._store())._manifest()
+        if _WATERMARK not in man.get("txns", {}):
+            raise self._rebuild_error(
+                "an older build (refresh state in the _mview.json "
+                "sidecar)")
+        return man
 
     def _sum_like(self) -> list[str]:
         """Columns that carry (mv_sum_, mv_nn_) state: the sum columns
@@ -303,35 +301,32 @@ class MaterializedView:
         agg = cls._attach_hll(agg, base, keys, distinct_cols, hll_m) \
             .withColumn("__mv", _bucket_expr(keys, n_buckets))
         metaio.IO.make_dirs(root, exist_ok=False)
-        store = PartitionedTable.create(
-            spark, agg, os.path.join(root, "store"), "__mv")
+        PartitionedTable._create(
+            spark, agg, os.path.join(root, "store"), "__mv", None, (),
+            txns={_WATERMARK: src_version})
         metaio.IO.write_new(
             os.path.join(root, _META),
             json.dumps({"keys": keys, "sum_cols": sum_cols,
-                                "var_cols": var_cols,
-                                "minmax_cols": minmax_cols,
-                                "distinct_cols": distinct_cols,
-                                "hll_m": hll_m,
-                                "filter_sql": filter_sql,
-                                "source_version": src_version,
-                                "n_buckets": n_buckets,
-                                "store_version":
-                                    store.versions()[-1]}))
+                        "var_cols": var_cols,
+                        "minmax_cols": minmax_cols,
+                        "distinct_cols": distinct_cols,
+                        "hll_m": hll_m, "filter_sql": filter_sql,
+                        "n_buckets": n_buckets}))
         return cls(spark, source, root)
 
     # ------------------------------------------------------------------ #
     def refreshed_version(self) -> int:
-        return self._meta()["source_version"]
+        return self._newest()["txns"][_WATERMARK]
 
     def store_version(self) -> int:
-        return self._meta()["store_version"]
+        return self._newest()["version"]
 
     def read(self, with_avg: bool = False,
              with_distinct: bool = False,
              with_stddev: bool = False) -> DataFrame:
         """The stored aggregate as of the last refresh (stale reads are
         the contract — consistency is 'reflects source version N',
-        recorded and queryable).  Reads the store at the PINNED
+        recorded and queryable).  Reads the store's newest committed
         version, so an in-flight concurrent refresh is invisible.
         ``with_avg=True`` derives ``mv_avg_<c>`` the way SQL AVG does —
         sum over the NON-NULL contribution count (which the store
@@ -346,8 +341,7 @@ class MaterializedView:
         the clamp keeps float cancellation from ever surfacing as a
         negative variance or a NaN stddev; an all-NULL group reads
         NULL like AVG does."""
-        out = self._store().read(
-            version=self._meta()["store_version"]).drop("__mv")
+        out = self._store().read().drop("__mv")
         if with_avg:
             for c in self.sum_cols:
                 out = out.withColumn(
@@ -398,68 +392,20 @@ class MaterializedView:
         (manifest-pruned) and ``overwrite_partitions`` re-links every
         other bucket's directory unchanged.  Row-free source commits
         (OPTIMIZE, constraint changes, a no-op restore) advance the
-        recorded version WITHOUT a store commit; the group-key merge
+        watermark in a metadata-only store commit; the group-key merge
         join is NULL-safe (a NULL group key is an ordinary group, as
         in SQL GROUP BY).
 
-        SINGLE-REFRESHER contract, enforced by an exclusive pid
-        lockfile held for the whole fold: a concurrent ``refresh()``
-        raises ``ConflictException`` immediately (the store-version
-        check alone cannot catch every interleaving — a loser that
-        read the sidecar before the winner's swap would otherwise
-        commit a merge based on a stale pinned version and double-fold
-        churn on the next refresh).  A lock whose pid is dead (crashed
-        refresher) is reclaimed automatically; the crashed attempt's
-        orphaned store commit is absorbed as documented in the module
-        docstring."""
-        # The lock is published ATOMICALLY WITH ITS CONTENT: the pid is
-        # written to a private tmp file and linked into place with
-        # os.link (EEXIST == lock held).  open(lock, "x") would create
-        # an empty file before the pid write, and a concurrent refresh
-        # reading that window would parse pid=0, mistake the live lock
-        # for a crashed one, reclaim it, and run concurrently — the
-        # exact lost-update the lock exists to prevent.  For the same
-        # reason an unreadable/empty lockfile is treated as HELD (fail
-        # safe, raise ConflictException), never as stale; only a lock
-        # whose pid parses AND is dead is reclaimed.
-        lock = os.path.join(self.root, _LOCK)
-        try:
-            metaio.IO.publish_lock(lock, str(os.getpid()))
-        except FileExistsError:
-            try:
-                pid = int(metaio.IO.read_text(lock).strip())
-            except FileNotFoundError:
-                return self.refresh()  # holder released; retry
-            except (OSError, ValueError):
-                raise ConflictException(
-                    f"materialized view '{self.root}': refresh lock "
-                    f"'{lock}' exists but is unreadable — another "
-                    f"refresh is in progress (or mid-publish); "
-                    f"retry after it completes") from None
-            if _pid_alive(pid):
-                raise ConflictException(
-                    f"materialized view '{self.root}': refresh "
-                    f"already in progress (pid {pid}); retry after "
-                    f"it completes")
-            try:  # stale lock from a crashed refresher — reclaim
-                metaio.IO.remove(lock)
-            except FileNotFoundError:
-                pass
-            return self.refresh()
-        try:
-            return self._refresh_locked()
-        finally:
-            try:
-                metaio.IO.remove(lock)
-            except FileNotFoundError:
-                pass
-
-    def _refresh_locked(self) -> int:
-        meta = self._meta()
-        last = meta["source_version"]
+        The store commit is the refresh's one commit point (see the
+        module docstring): a concurrent ``refresh()`` that read the
+        same store version raises ``ConflictException`` from it."""
+        store = self._store()
+        man = self._newest(store)
+        last = man["txns"][_WATERMARK]
         cur = self.source.versions()[-1]
         if cur == last:
             return 0
+        txns = {**man["txns"], _WATERMARK: cur}
         # one materialization of the churn (bounded by CDF size): the
         # count, the delta aggregation, and the merge all read it.
         # The churn count AND the non-insert count ride the checkpoint
@@ -498,7 +444,10 @@ class MaterializedView:
         n_changes = int(metrics["n"])
         n_del = int(metrics["n_del"] or 0)
         if n_changes == 0:
-            self._swap_meta(dict(meta, source_version=cur))
+            store._commit(man["version"] + 1, store._pcols_of(man),
+                          T._parse_datatype_string(man["schema"]),
+                          man["parts"], txns, man.get("tombstones"),
+                          op="MVIEW REFRESH")
             return 0
         if self.distinct_cols and n_del:
             raise DatabaseException(
@@ -572,13 +521,12 @@ class MaterializedView:
                  .localCheckpoint())
         touched = sorted(obs_delta.get["__t"])
         fold = [b for b in touched if b not in del_buckets]
-        store = self._store()
         if affected_parts is not None:
             # del-bucket groups in untouched partitions join the fold:
             # read their stored rows too, keep (fold bucket) OR
             # (untouched partition)
             stored = store.read(
-                version=meta["store_version"],
+                version=man["version"],
                 partition_values=sorted(set(fold) | del_buckets))
             stored = stored.filter(
                 (F.col("__mv").isin(fold) if fold else F.lit(False))
@@ -588,7 +536,7 @@ class MaterializedView:
                     | ~F.col(prune_col).isin(affected_parts))
             delta = delta.filter(keep).drop("__mv")
         else:
-            stored = store.read(version=meta["store_version"],
+            stored = store.read(version=man["version"],
                                 partition_values=fold).drop("__mv")
             delta = delta.filter(
                 ~F.col("__mv").isin(list(del_buckets))
@@ -670,27 +618,16 @@ class MaterializedView:
                 .withColumn("__mv", self._bucket())
             merged = merged.unionByName(
                 recomp.select(*stored.columns, "__mv"))
-        # ONE store commit replaces exactly the touched buckets
-        # (concurrency is excluded by refresh()'s lockfile; a crashed
-        # refresher's orphan store version is absorbed by the next
-        # retry — see module docstring)
-        store.overwrite_partitions(
-            merged, sorted(set(touched) | del_buckets))
-        self._swap_meta(dict(meta, source_version=cur,
-                             store_version=store.versions()[-1]))
+        # ONE store commit replaces exactly the touched buckets and
+        # advances the watermark: the refresh's commit point
+        store._overwrite_partitions(
+            man, merged, sorted(set(touched) | del_buckets), txns)
         return n_changes
 
-    def _swap_meta(self, meta: dict) -> None:
-        metaio.IO.replace_text(os.path.join(self.root, _META),
-                               json.dumps(meta))  # the atomic swap
-
     def vacuum(self) -> list[str]:
-        """Reclaim store versions OLDER than the pinned one (readers
-        holding an old handle must re-open — same discipline as
+        """Reclaim every store version but the newest (readers holding
+        an old handle must re-open — same discipline as
         ``PartitionedTable.vacuum``).  Directories shared with the
-        pinned version survive (manifest reachability), so vacuum cost
-        tracks refresh churn, not store size."""
-        store = self._store()
-        pinned = self._meta()["store_version"]
-        newer = len([v for v in store.versions() if v > pinned])
-        return store.vacuum(keep_last=newer + 1)
+        newest version survive (manifest reachability), so vacuum
+        cost tracks refresh churn, not store size."""
+        return self._store().vacuum(keep_last=1)

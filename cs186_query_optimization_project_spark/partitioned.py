@@ -41,6 +41,7 @@ directory, which doubles as incremental compaction.
 from __future__ import annotations
 
 import contextlib
+import hashlib
 import json
 import os
 import re as _re
@@ -252,13 +253,53 @@ def _coalesce_tombstone(existing: list[str], cond: str) -> tuple[
     return list(existing) + [cond], True
 
 
-def listed_versions(root: str) -> list[int]:
-    """Every manifest version under ``root``, committed or not."""
+def listed_versions(log: str) -> list[int]:
+    """Every entry number of the write-once ``v<N>.json`` log directory
+    ``log``, oldest first: a table's ``_manifests`` (committed or not),
+    an index meta log or a change cursor."""
     out = []
-    for name in metaio.IO.list_dir(os.path.join(root, "_manifests")):
+    for name in metaio.IO.list_dir(log):
         if name.startswith("v") and name.endswith(".json"):
             out.append(int(name[1:-len(".json")]))
     return sorted(out)
+
+
+def log_newest(log: str) -> tuple[int, dict] | None:
+    """``(N, payload)`` of the newest entry of ``log``; None when the
+    log is absent or empty.  An entry gone between the listing and the
+    read was pruned by a newer publish, so the listing is retried."""
+    while True:
+        try:
+            vs = listed_versions(log)
+        except FileNotFoundError:
+            return None
+        if not vs:
+            return None
+        try:
+            return vs[-1], json.loads(metaio.IO.read_text(
+                os.path.join(log, f"v{vs[-1]}.json")))
+        except FileNotFoundError:
+            continue
+
+
+def log_publish(log: str, number: int, payload: dict) -> bool:
+    """Publish ``payload`` as entry ``number`` of ``log`` by exclusive
+    create, then remove the older entries.  False when a concurrent
+    publisher took ``number`` with other content (this publish lost);
+    an identical entry is this publish's own earlier attempt."""
+    text = json.dumps(payload, sort_keys=True)
+    path = os.path.join(log, f"v{number}.json")
+    metaio.IO.make_dirs(log, exist_ok=True)
+    try:
+        metaio.IO.write_new(path, text)
+    except FileExistsError:
+        if metaio.IO.read_text(path) != text:
+            return False
+    for v in listed_versions(log):
+        if v < number:
+            with contextlib.suppress(FileNotFoundError):
+                metaio.IO.remove(os.path.join(log, f"v{v}.json"))
+    return True
 
 
 def load_manifest(root: str, version: int) -> dict | None:
@@ -437,10 +478,11 @@ class PartitionedTable:
 
     @classmethod
     def _create(cls, spark: SparkSession, df: DataFrame, root: str,
-                partition_col, bloom_cols, sort_cols) -> "PartitionedTable":
+                partition_col, bloom_cols, sort_cols,
+                txns: dict[str, int] | None = None) -> "PartitionedTable":
         """:meth:`create` plus ``sort_cols``, a sort order every write
         keeps inside each file (manifest policy, like ``bloom_cols``) —
-        the catalog's ``index_columns``."""
+        the catalog's ``index_columns`` — and v0's ``txns`` map."""
         root = root.rstrip("/")
         pcols = [partition_col] if isinstance(partition_col, str) \
             else list(partition_col)
@@ -463,7 +505,7 @@ class PartitionedTable:
             # df); a failed create retracts the fresh _manifests dir
             # so a corrected retry can re-create the table
             parts = pt._write_partitions(df, pcols, op="create")
-            pt._commit(0, pcols, df.schema, parts, op="CREATE",
+            pt._commit(0, pcols, df.schema, parts, txns, op="CREATE",
                        **pt._pending)
         except Exception:
             metaio.IO.remove_tree(os.path.join(root, "_manifests"))
@@ -508,7 +550,7 @@ class PartitionedTable:
     def versions(self) -> list[int]:
         """Retained (non-vacuumed) committed version numbers, oldest
         first.  Numbers are stable across vacuum."""
-        return [v for v in listed_versions(self.root)
+        return [v for v in listed_versions(self._manifest_dir())
                 if v in self._counted or self._load(v) is not None]
 
     def _load(self, version: int) -> dict | None:
@@ -518,7 +560,7 @@ class PartitionedTable:
         return man
 
     def _manifest(self, version: int | None = None) -> dict:
-        listed = listed_versions(self.root)
+        listed = listed_versions(self._manifest_dir())
         for v in (reversed(listed) if version is None
                   else [version] if version in listed else []):
             man = self._load(v)
@@ -2038,7 +2080,16 @@ class PartitionedTable:
         the operation safe to compose (an incremental-refresh caller
         proves it only touches what it planned to touch).  Cost:
         O(|rows| write + |partitions| manifest), never O(table)."""
-        man = self._manifest()
+        return self._overwrite_partitions(self._manifest(), rows,
+                                          partition_values)
+
+    def _overwrite_partitions(self, man: dict, rows: DataFrame,
+                              partition_values: list,
+                              txns: dict[str, int] | None = None) \
+            -> "PartitionedTable":
+        """:meth:`overwrite_partitions` over manifest ``man``: commits
+        ``man``'s successor (ConflictException when another commit took
+        that number first) with ``txns`` replacing its map."""
         pcols = self._pcols_of(man)
         expected = T._parse_datatype_string(man["schema"])
         self._check_schema(expected, rows.schema, "overwrite_partitions")
@@ -2087,7 +2138,7 @@ class PartitionedTable:
             parts[key] = ds
         self._commit(man["version"] + 1, pcols,
                      T._parse_datatype_string(man["schema"]), parts,
-                     man.get("txns", {}),
+                     man.get("txns", {}) if txns is None else txns,
                      man.get("tombstones", {}), op="OVERWRITE")
         return self
 
@@ -2631,22 +2682,34 @@ class PartitionedTable:
         """Incremental CDF consumption with a durable cursor: returns
         ``(changes_df, ack)`` where the frame holds every change after
         the cursor's version up to the current version, and calling
-        ``ack()`` (atomically, write-then-rename) advances the cursor
-        — at-least-once delivery: a consumer that crashes before
-        acking re-reads the same span, one that acks after durably
-        processing gets each change exactly once.  A missing cursor
-        starts at the current version (``initial='latest'``, Delta's
-        default) or the oldest retained one (``'earliest'``)."""
+        ``ack()`` advances the cursor — at-least-once delivery: a
+        consumer that crashes before acking re-reads the same span, one
+        that acks after durably processing gets each change exactly
+        once.  The cursor is a directory of write-once ``v<N>.json``
+        entries named by the acked version, read newest-first; an ack
+        whose entry already exists was acked already.  A missing
+        cursor starts at the current version (``initial='latest'``,
+        Delta's default) or the oldest retained one
+        (``'earliest'``)."""
+        if metaio.IO.exists(cursor_path) and \
+                not metaio.IO.is_dir(cursor_path):
+            raise DatabaseException(
+                f"consume_changes: cursor '{cursor_path}' is a single "
+                f"file written by an older build; delete it to reset "
+                f"the cursor (the next read starts at `initial`)")
         vs = self.versions()
         current = vs[-1]
         try:
-            start = int(json.loads(
-                metaio.IO.read_text(cursor_path))["version"])
-        except OSError:
-            if initial not in ("latest", "earliest"):
-                raise DatabaseException(
-                    f"consume_changes: initial must be 'latest' or "
-                    f"'earliest', got {initial!r}")
+            acked = listed_versions(cursor_path)
+        except FileNotFoundError:
+            acked = []
+        if acked:
+            start = acked[-1]
+        elif initial not in ("latest", "earliest"):
+            raise DatabaseException(
+                f"consume_changes: initial must be 'latest' or "
+                f"'earliest', got {initial!r}")
+        else:
             start = current if initial == "latest" else vs[0]
         if start not in vs:
             raise DatabaseException(
@@ -2656,8 +2719,7 @@ class PartitionedTable:
         feed = self.changes(start, current)
 
         def ack() -> int:
-            metaio.IO.replace_text(cursor_path,
-                                   json.dumps({"version": current}))
+            log_publish(cursor_path, current, {"version": current})
             return current
 
         return feed, ack
@@ -3051,7 +3113,9 @@ class PartitionedTable:
         The classic Delta shallow-clone hazard — vacuuming the SOURCE
         deletes directories the clone still references — is GUARDED
         here: every clone registers its root in the source's
-        ``_clones.json``, and the source's :meth:`vacuum` treats any
+        ``_clones/`` registry BEFORE its v0 commits (one write-once
+        entry per clone, so concurrent clones cannot lose each other's
+        registration), and the source's :meth:`vacuum` treats any
         directory a registered clone's (transitively — a clone of a
         clone still points at OUR data dirs) retained manifest
         references as reachable, skipping it.  A clone deleted from
@@ -3060,10 +3124,14 @@ class PartitionedTable:
         a deep copy)."""
         man = self._manifest(version)
         dest_root = dest_root.rstrip("/")
-        metaio.IO.make_dirs(os.path.join(dest_root, "_manifests"),
-                            exist_ok=False)
+        manifests = os.path.join(dest_root, "_manifests")
+        metaio.IO.make_dirs(manifests, exist_ok=True)
+        if listed_versions(manifests):
+            raise DatabaseException(
+                f"clone: '{dest_root}' already holds a table")
         metaio.IO.make_dirs(os.path.join(dest_root, "parts"),
                             exist_ok=True)
+        self._register_clone(dest_root)
         stub = PartitionedTable(self.spark, dest_root)
         stub._commit(0, self._pcols_of(man),
                      T._parse_datatype_string(man["schema"]),
@@ -3072,39 +3140,46 @@ class PartitionedTable:
                      bloom_cols=man.get("bloom_cols", []),
                      tomb_counts=man.get("tomb_counts", {}),
                      sort_cols=man.get("sort_cols", []), op="CLONE")
-        self._register_clone(dest_root)
         return PartitionedTable(self.spark, dest_root)
 
     # ------------------------------------------------------------------ #
     # clone registry (vacuum-safety for shallow clones)
     # ------------------------------------------------------------------ #
-    def _clones_path(self) -> str:
-        return os.path.join(self.root, "_clones.json")
+    def _clone_entry(self, dest_root: str) -> str:
+        """The registry entry of one clone root, named by its hash."""
+        digest = hashlib.sha1(
+            os.path.normpath(dest_root).encode()).hexdigest()
+        return os.path.join(self.root, "_clones", f"{digest}.json")
 
     def registered_clones(self) -> list[str]:
         """Roots of shallow clones registered against this table (the
         set this table's vacuum protects)."""
+        reg = os.path.join(self.root, "_clones")
         try:
-            return list(json.loads(
-                metaio.IO.read_text(self._clones_path())))
+            names = metaio.IO.list_dir(reg)
         except FileNotFoundError:
             return []
-
-    def _write_clones(self, clones: list[str]) -> None:
-        metaio.IO.replace_text(self._clones_path(),
-                               json.dumps(sorted(set(clones))))
+        out = []
+        for name in names:
+            if name.endswith(".json"):
+                with contextlib.suppress(FileNotFoundError):
+                    out.append(json.loads(metaio.IO.read_text(
+                        os.path.join(reg, name))))
+        return sorted(out)
 
     def _register_clone(self, dest_root: str) -> None:
-        self._write_clones(self.registered_clones()
-                           + [os.path.normpath(dest_root)])
+        entry = self._clone_entry(dest_root)
+        metaio.IO.make_dirs(os.path.dirname(entry), exist_ok=True)
+        with contextlib.suppress(FileExistsError):  # registered already
+            metaio.IO.write_new(
+                entry, json.dumps(os.path.normpath(dest_root)))
 
     def detach_clone(self, dest_root: str) -> None:
         """Drop a clone registration (after deep-copying the clone's
         data out, or after deleting the clone) so this table's vacuum
         stops protecting the clone's directories."""
-        dest = os.path.normpath(dest_root)
-        self._write_clones([c for c in self.registered_clones()
-                            if os.path.normpath(c) != dest])
+        with contextlib.suppress(FileNotFoundError):
+            metaio.IO.remove(self._clone_entry(dest_root))
 
     def _clone_referenced(self) -> set[str]:
         """Directories any registered clone — transitively — still
@@ -3117,13 +3192,19 @@ class PartitionedTable:
         frontier: list["PartitionedTable"] = [self]
         while frontier:
             t = frontier.pop()
-            live = []
+            if metaio.IO.exists(os.path.join(t.root, "_clones.json")):
+                raise DatabaseException(
+                    f"vacuum '{self.root}': '{t.root}/_clones.json' is "
+                    f"a clone registry written by an older build; "
+                    f"vacuum refuses rather than delete directories "
+                    f"the clones it lists may still read — delete the "
+                    f"file once none of them is in use")
             for c in t.registered_clones():
                 c = os.path.normpath(c)
                 if not metaio.IO.is_dir(
                         os.path.join(c, "_manifests")):
-                    continue  # clone deleted — prune below
-                live.append(c)
+                    t.detach_clone(c)  # clone deleted from disk
+                    continue
                 if c in seen:
                     continue
                 seen.add(c)
@@ -3133,8 +3214,6 @@ class PartitionedTable:
                         referenced.update(os.path.normpath(d)
                                           for d in ds)
                 frontier.append(clone)
-            if live != t.registered_clones():
-                t._write_clones(live)
         return referenced
 
     def vacuum(self, keep_last: int = 1) -> list[str]:
@@ -3155,7 +3234,7 @@ class PartitionedTable:
         # every manifest from the oldest kept one up stays referenced:
         # a multi-table commit's pending one may still commit
         referenced = self._clone_referenced()
-        for v in listed_versions(self.root):
+        for v in listed_versions(self._manifest_dir()):
             if v < oldest:
                 metaio.IO.remove(self._manifest_path(v))
                 continue

@@ -32,6 +32,8 @@ replays every retained version's appends first.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
@@ -61,7 +63,7 @@ def _versions(root: str) -> list[int]:
         load_manifest,
     )
 
-    return [v for v in listed_versions(root)
+    return [v for v in listed_versions(os.path.join(root, "_manifests"))
             if load_manifest(root, v) is not None]
 
 

@@ -116,47 +116,3 @@ def test_partitioned_manifest_commits_serialize_across_instances(
         assert {r["k"]: r["x"] for r in t.read().collect()} == \
             {1: 111, 2: 222}
     assert t1.versions() == t2.versions() == [0, 1, 2]
-
-
-def test_mview_refresh_lock_serializes_across_processes(spark, tmp_path):
-    """The mview refresh lock is FILESYSTEM-scoped like the manifest
-    CAS: a lock held by another LIVE process blocks refresh with the
-    named conflict; when that process dies the lock is stale and the
-    next refresh reclaims it and proceeds."""
-    import os
-    import subprocess
-
-    import pytest
-
-    from cs186_query_optimization_project_spark.errors import (
-        ConflictException,
-    )
-    from cs186_query_optimization_project_spark.mview import (
-        MaterializedView,
-    )
-    from cs186_query_optimization_project_spark.partitioned import (
-        PartitionedTable,
-    )
-
-    df = spark.createDataFrame([(1, "A", 1.0), (2, "B", 2.0)],
-                               "id long, grp string, amt double")
-    src = PartitionedTable.create(spark, df, str(tmp_path / "s"), "grp")
-    mv = MaterializedView.create(spark, src, str(tmp_path / "mv"),
-                                 keys=["grp"], sum_cols=["amt"])
-    src.insert(spark.createDataFrame([(3, "A", 3.0)],
-                                     "id long, grp string, amt double"))
-    holder = subprocess.Popen(["sleep", "300"])  # the "other process"
-    lock = os.path.join(mv.root, "_refresh.lock")
-    try:
-        with open(lock, "x") as f:
-            f.write(str(holder.pid))
-        with pytest.raises(ConflictException, match="in progress"):
-            mv.refresh()
-        holder.kill()
-        holder.wait()                             # now the pid is dead
-        assert mv.refresh() > 0                   # stale lock reclaimed
-        assert not os.path.exists(lock)
-    finally:
-        if holder.poll() is None:
-            holder.kill()
-            holder.wait()

@@ -68,12 +68,6 @@ class MemoryMetadataIO:
             raise FileExistsError(p)
         self.files[p] = text
 
-    def replace_text(self, path, text):
-        self.files[self._norm(path)] = text
-
-    def publish_lock(self, path, text):
-        self.write_new(path, text)
-
     def make_dirs(self, path, exist_ok=False):
         p = self._norm(path)
         if p in self.dirs and not exist_ok:
@@ -96,50 +90,12 @@ class MemoryMetadataIO:
                       if q == p or q.startswith(p + "/")}
 
 
-class RenamelessMetadataIO(LocalMetadataIO):
-    """Object-store-shaped backend with NO atomic rename — the store
-    class SCALE.md's per-store matrix documents as degraded
-    (S3A-before-conditional-PUT): ``replace_text`` is the copy+delete
-    shape (PUT a tmp object, whole-object COPY onto the destination,
-    DELETE the tmp) with an injectable crash window between the
-    steps, and ``write_new`` (create-exclusive) is the ONLY atomic
-    primitive.  The copy step is a single whole-object publish of
-    fully-written bytes — modeling the object-store guarantee that a
-    reader sees the old object or the new one, never a torn one;
-    crashes inject BETWEEN operations because an object store has no
-    mid-PUT truncated state to model.  Everything else inherits the
-    POSIX calls: the point of the fake is proving the manifest/lock
-    protocol holds when rename atomicity is absent, not re-proving
-    LIST/HEAD."""
-
-    def __init__(self):
-        self.crash_after: str | None = None    # "tmp" | "copy"
-
-    def _maybe_crash(self, point: str) -> None:
-        if self.crash_after == point:
-            self.crash_after = None
-            raise RuntimeError(f"injected crash after {point}")
-
-    def replace_text(self, path, text):
-        tmp = f"{path}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:              # PUT tmp object
-            f.write(text)
-        self._maybe_crash("tmp")
-        data = open(tmp).read()                # server-side COPY =
-        with open(path, "w") as f:             # one whole-object PUT
-            f.write(data)
-        self._maybe_crash("copy")
-        os.remove(tmp)                         # DELETE tmp
-
-
-@pytest.fixture(params=["local", "memory", "hadoop", "objectstore"])
+@pytest.fixture(params=["local", "memory", "hadoop"])
 def io(request, tmp_path, spark):
     if request.param == "local":
         yield LocalMetadataIO(), str(tmp_path)
     elif request.param == "hadoop":
         yield metaio.HadoopMetadataIO(spark), str(tmp_path)
-    elif request.param == "objectstore":
-        yield RenamelessMetadataIO(), str(tmp_path)
     else:
         yield MemoryMetadataIO(), "/mem"
 
@@ -162,19 +118,13 @@ def test_seam_semantics(io):
     with pytest.raises(FileNotFoundError):
         impl.file_size(f"{root}/_manifests/v9.json")
     assert impl.list_dir(f"{root}/_manifests") == ["v0.json"]
-    # replace publishes new content under the same name
-    impl.replace_text(f"{root}/_manifests/v0.json", "{\"a\":1}")
-    assert impl.read_text(f"{root}/_manifests/v0.json") == "{\"a\":1}"
-    # locks: held = FileExistsError, content published atomically
-    impl.publish_lock(f"{root}/lock", "123")
-    with pytest.raises(FileExistsError):
-        impl.publish_lock(f"{root}/lock", "456")
-    assert impl.read_text(f"{root}/lock") == "123"
-    impl.remove(f"{root}/lock")
+    impl.remove(f"{root}/_manifests/v0.json")
     with pytest.raises(FileNotFoundError):
-        impl.remove(f"{root}/lock")
+        impl.remove(f"{root}/_manifests/v0.json")
     with pytest.raises(FileNotFoundError):
-        impl.read_text(f"{root}/lock")
+        impl.read_text(f"{root}/_manifests/v0.json")
+    # a removed entry can be created again (clone re-registration)
+    impl.write_new(f"{root}/_manifests/v0.json", "{}")
     # remove_tree is recursive and idempotent
     impl.remove_tree(root)
     impl.remove_tree(root)
@@ -216,69 +166,16 @@ def test_staging_stats_parsed_once_per_staging(spark, tmp_path,
     assert len(stats_reads) == 1
 
 
-def test_hadoop_replace_cleans_stale_checksums(spark, tmp_path):
-    """FileContext.rename rides the checksum-less raw FS, so without
-    the cleanup a ChecksumFileSystem read after replace_text would
-    throw ChecksumException against the stale .crc sidecar (the exact
-    failure the lifecycle suite hit on the Hive proxy FS's parent
-    class) — pin that replace leaves a cleanly readable file and no
-    tmp litter."""
-    io = metaio.HadoopMetadataIO(spark)
-    p = str(tmp_path / "m.json")
-    io.write_new(p, "{}")                  # writes the .crc sidecar
-    io.replace_text(p, '{"a":1}')          # must drop the stale .crc
-    assert io.read_text(p) == '{"a":1}'
-    io.replace_text(p, '{"b":2}')          # and again on re-replace
-    assert io.read_text(p) == '{"b":2}'
-    assert not [f for f in os.listdir(tmp_path) if ".tmp." in f]
-
-
 def test_hadoop_unicode_roundtrip(spark, tmp_path):
     """Manifest payloads are JSON but partition VALUES inside them can
-    be any table string — pin UTF-8 fidelity through every write verb
-    of the Hadoop backend."""
+    be any table string — pin UTF-8 fidelity through the Hadoop
+    backend's one write."""
     io = metaio.HadoopMetadataIO(spark)
     text = '{"k": "héllo — 你好 🚀 \\"quoted\\""}'
     p = str(tmp_path / "u.json")
     io.write_new(p, text)
     assert io.read_text(p) == text
     assert io.file_size(p) == len(text.encode("utf-8"))
-    io.replace_text(p, text + "2")
-    assert io.read_text(p) == text + "2"
-    io.publish_lock(str(tmp_path / "lk"), text)
-    assert io.read_text(str(tmp_path / "lk")) == text
-
-
-def test_publish_lock_without_hardlink_support(tmp_path, monkeypatch):
-    """Filesystems that refuse os.link (some NFS/FUSE/object-store
-    mounts) must still deliver the held/free lock signal via the
-    O_EXCL fallback — a raw EPERM out of publish_lock would break
-    mview.refresh entirely instead of failing safe."""
-    import errno
-    import os as _os
-
-    real_link = _os.link
-
-    def no_link(src, dst, **kw):
-        raise OSError(errno.EPERM, "Operation not permitted", dst)
-
-    monkeypatch.setattr(_os, "link", no_link)
-    impl = LocalMetadataIO()
-    lock = str(tmp_path / "lk")
-    impl.publish_lock(lock, "123")
-    assert impl.read_text(lock) == "123"        # content intact
-    with pytest.raises(FileExistsError):        # held signal intact
-        impl.publish_lock(lock, "456")
-    assert impl.read_text(lock) == "123"
-    assert not [f for f in _os.listdir(tmp_path)  # no tmp litter
-                if ".tmp." in f]
-    # an errno OUTSIDE the no-hardlink set still propagates raw
-    monkeypatch.setattr(_os, "link", lambda s, d, **kw: (_ for _ in ())
-                        .throw(OSError(errno.EIO, "I/O error", d)))
-    with pytest.raises(OSError) as ei:
-        impl.publish_lock(str(tmp_path / "lk2"), "x")
-    assert ei.value.errno == errno.EIO
-    monkeypatch.setattr(_os, "link", real_link)
 
 
 class RecordingIO(LocalMetadataIO):
@@ -296,8 +193,7 @@ def _record(name):
 
 
 for _m in ("read_text", "list_dir", "exists", "is_dir", "write_new",
-           "replace_text", "publish_lock", "make_dirs", "remove",
-           "remove_tree"):
+           "make_dirs", "remove", "remove_tree"):
     setattr(RecordingIO, _m, _record(_m))
 
 
@@ -319,8 +215,7 @@ def _crashing(name):
 
 
 for _m in ("read_text", "list_dir", "exists", "is_dir", "file_size",
-           "write_new", "replace_text", "publish_lock", "make_dirs",
-           "remove", "remove_tree"):
+           "write_new", "make_dirs", "remove", "remove_tree"):
     setattr(CrashingIO, _m, _crashing(_m))
 
 
@@ -379,6 +274,194 @@ def test_two_table_commit_atomic_at_every_crash_point(spark, tmp_path,
         assert state() == (x, x), at
 
 
+def _sweep(monkeypatch, op, crash_write=None):
+    """Crash one operation at its metadata call 1, 2, ... in turn until
+    an attempt completes, then once in its Spark write when
+    ``crash_write(root)`` names the table whose ``_write_partitions``
+    fails.  ``op()`` stages one new operation (the same shape every
+    time, so the call sequence repeats) and returns ``(run, check)``:
+    ``run()`` performs it; ``check(at)`` asserts that a fresh reader
+    sees the state before or after it, retries, and asserts the after
+    state."""
+    at, finished = 0, False
+    while not finished:
+        at += 1
+        run, check = op()
+        monkeypatch.setattr(metaio, "IO", CrashingIO(at))
+        try:
+            run()
+            finished = True
+        except RuntimeError as exc:
+            assert "crash" in str(exc), exc
+        finally:
+            monkeypatch.setattr(metaio, "IO", LocalMetadataIO())
+        check(at)
+    assert at > 3                       # the sweep really ran
+    if crash_write is None:
+        return
+    real_write = PartitionedTable._write_partitions
+
+    def failing_write(self, df, *a, **kw):
+        if crash_write(self.root):
+            raise RuntimeError("crash in the Spark write")
+        return real_write(self, df, *a, **kw)
+
+    run, check = op()
+    monkeypatch.setattr(PartitionedTable, "_write_partitions",
+                        failing_write)
+    with pytest.raises(RuntimeError, match="crash"):
+        run()
+    monkeypatch.setattr(PartitionedTable, "_write_partitions", real_write)
+    check("spark")
+
+
+def test_refresh_atomic_at_every_crash_point(spark, tmp_path,
+                                             monkeypatch):
+    """``MaterializedView.refresh`` crashed at each metadata call and
+    in its store write: a fresh view handle reads the view before the
+    refresh or after it, and a retry converges to the recompute."""
+    from cs186_query_optimization_project_spark.mview import (
+        MaterializedView,
+    )
+
+    schema = "id long, grp string, amt double"
+    src, root = str(tmp_path / "s"), str(tmp_path / "mv")
+    PartitionedTable.create(
+        spark, spark.createDataFrame([(0, "A", 1.0)], schema), src, "grp")
+    MaterializedView.create(spark, PartitionedTable(spark, src), root,
+                            keys=["grp"], sum_cols=["amt"], n_buckets=2)
+
+    def handle():
+        return MaterializedView(spark, PartitionedTable(spark, src), root)
+
+    def view():
+        return {r["grp"]: (r["mv_count"], r["mv_sum_amt"])
+                for r in handle().read().collect()}
+
+    ids = iter(range(1, 1000))
+
+    def op():
+        before = view()
+        i = next(ids)
+        PartitionedTable(spark, src).insert(spark.createDataFrame(
+            [(i, "A", float(i))], schema))
+        after = {r["grp"]: (r["n"], r["s"]) for r in
+                 PartitionedTable(spark, src).read().groupBy("grp")
+                 .agg(F.count(F.lit(1)).alias("n"),
+                      F.sum("amt").alias("s")).collect()}
+
+        def check(at):
+            assert view() in (before, after), at
+            handle().refresh()
+            assert view() == after, at
+            # keep every attempt's call count equal to the probe's
+            PartitionedTable(spark, src).vacuum(keep_last=1)
+            handle().vacuum()
+
+        return handle().refresh, check
+
+    _sweep(monkeypatch, op, lambda r: r.startswith(root))
+
+
+def test_clone_atomic_at_every_crash_point(spark, tmp_path, monkeypatch):
+    """``clone`` crashed at each metadata call (it writes no data, so
+    it has no Spark write): the clone either does not exist or reads
+    the whole source snapshot, a readable clone is always registered,
+    and a retry converges.  The source then rewrites everything and
+    vacuums: every clone still reads all its rows."""
+    from cs186_query_optimization_project_spark.errors import (
+        DatabaseException,
+    )
+
+    src = str(tmp_path / "s")
+    PartitionedTable.create(spark, spark.createDataFrame(
+        [(i, "AB"[i % 2], float(i)) for i in range(6)],
+        "id long, grp string, amt double"), src, "grp")
+    dests = []
+
+    def rows(dest):
+        registered = PartitionedTable(spark, src).registered_clones()
+        try:
+            n = PartitionedTable(spark, dest).read().count()
+        except DatabaseException:
+            return None
+        assert os.path.normpath(dest) in registered
+        return n
+
+    def op():
+        dest = str(tmp_path / f"c{len(dests)}")
+        dests.append(dest)
+
+        def check(at):
+            assert rows(dest) in (None, 6), at
+            if rows(dest) is None:
+                PartitionedTable(spark, src).clone(dest)
+            assert rows(dest) == 6, at
+
+        return lambda: PartitionedTable(spark, src).clone(dest), check
+
+    _sweep(monkeypatch, op)
+    pt = PartitionedTable(spark, src)
+    pt.delete(F.col("amt") >= 0)
+    pt.vacuum(keep_last=1)
+    assert [rows(d) for d in dests] == [6] * len(dests)
+
+
+def test_postings_append_atomic_at_every_crash_point(spark, tmp_path,
+                                                     monkeypatch):
+    """``postings_append`` crashed at each metadata call and in the
+    doclen write (after the postings table committed): a freshly
+    loaded index is the one before the append or the one after it,
+    and retrying from the pre-crash handle converges.  The final index
+    ranks as a from-scratch scoring of every document."""
+    from cs186_query_optimization_project_spark.functions import (
+        retrieval,
+    )
+
+    path = str(tmp_path / "idx")
+
+    def docs(lo, hi):    # one text: every batch hits the same buckets
+        return spark.createDataFrame(
+            [(i, "alpha beta gamma") for i in range(lo, hi)],
+            "doc_id long, text string")
+
+    retrieval.build_postings_index(spark.createDataFrame(
+        [(i, f"alpha w{i % 4}") for i in range(12)],
+        "doc_id long, text string"), path, n_buckets=4)
+
+    def state():
+        idx = retrieval.load_postings_index(path)
+        return (idx.n_docs, idx.append_epoch,
+                retrieval.doclen_table(spark, idx).count())
+
+    def op():
+        idx = retrieval.load_postings_index(path)
+        batch = docs(idx.n_docs, idx.n_docs + 1)
+        before = state()
+        after = (before[0] + 1, before[1] + 1, before[0] + 1)
+
+        def check(at):
+            assert state() in (before, after), at
+            retrieval.postings_append(spark, idx, batch)
+            assert state() == after, at
+            for sub in ("postings", "doclen"):
+                PartitionedTable(spark, os.path.join(path, sub)) \
+                    .vacuum(keep_last=1)
+
+        return (lambda: retrieval.postings_append(spark, idx, batch),
+                check)
+
+    _sweep(monkeypatch, op, lambda r: r.endswith("doclen"))
+    idx = retrieval.load_postings_index(path)
+    corpus = spark.createDataFrame(
+        [(i, f"alpha w{i % 4}") for i in range(12)],
+        "doc_id long, text string").unionByName(docs(12, idx.n_docs))
+    got = retrieval.bm25_indexed(spark, idx, "gamma w1", top_k=5)
+    want = retrieval.bm25_scores(corpus, "gamma w1", top_k=5)
+    assert sorted(map(tuple, got.collect())) == \
+        sorted(map(tuple, want.collect()))
+
+
 def test_lakehouse_lifecycle_on_hadoop_backend(spark, tmp_path,
                                                monkeypatch):
     """The SAME create→insert→read→point-lookup→delete→time-travel→
@@ -429,63 +512,12 @@ def test_lakehouse_routes_through_seam(spark, tmp_path, monkeypatch):
     assert len(stats) == 3                     # one per write job
 
 
-def test_renameless_replace_crash_window_old_or_new(tmp_path):
-    """The degraded-mode discipline SCALE.md documents for rename-less
-    stores, actually executed: a crash at EITHER point of the
-    copy+delete replace leaves the destination reading as the complete
-    old content or the complete new content — never torn, never
-    missing — and a blind retry of the same replace converges and
-    clears the tmp litter."""
-    io = RenamelessMetadataIO()
-    p = str(tmp_path / "meta.json")
-    io.write_new(p, "OLD")
-    for point, expect in (("tmp", "OLD"), ("copy", "NEW")):
-        io.replace_text(p, "OLD")              # reset to pre-state
-        for f in os.listdir(tmp_path):         # and clear litter
-            if ".tmp." in f:
-                os.remove(tmp_path / f)
-        io.crash_after = point
-        with pytest.raises(RuntimeError, match="injected crash"):
-            io.replace_text(p, "NEW")
-        assert io.read_text(p) == expect       # old-or-new, intact
-        io.replace_text(p, "NEW")              # blind retry converges
-        assert io.read_text(p) == "NEW"
-        assert not [f for f in os.listdir(tmp_path) if ".tmp." in f]
-
-
-def test_lakehouse_lifecycle_on_renameless_backend(spark, tmp_path,
-                                                   monkeypatch):
-    """The full DML lifecycle PLUS the replace_text callers (the
-    clones registry) on the rename-less backend: the commit protocol
-    must ride write_new alone, and every replace_text consumer must
-    tolerate old-or-new (non-rename) publish semantics."""
-    rio = RenamelessMetadataIO()
-    monkeypatch.setattr(metaio, "IO", rio)
-    df = spark.createDataFrame(
-        [(i, chr(65 + i % 3), float(i)) for i in range(12)],
-        "id long, grp string, amt double")
-    pt = PartitionedTable.create(spark, df, str(tmp_path / "t"), "grp")
-    pt.insert(spark.createDataFrame([(99, "A", 99.0)],
-                                    "id long, grp string, amt double"))
-    pt.delete(F.col("id") == 0)
-    assert pt.read().count() == 12
-    assert pt.read(version=0).count() == 12
-    # clone registration publishes via replace_text — the rename-less
-    # copy+delete path — and must round-trip through a fresh handle
-    clone = pt.clone(str(tmp_path / "c"))
-    assert clone.read().count() == 12
-    pt.vacuum(keep_last=1)
-    assert PartitionedTable(spark, str(tmp_path / "t")).read().count() \
-        == 12
-
-
 def test_hadoop_remove_raises_on_failed_delete(spark, tmp_path,
                                                monkeypatch):
     """fs.delete() returning False while the path still exists
     (permissions, trash policy) must surface as OSError — a silent
-    no-op would let build_postings_index's retract-meta-first
-    crash-safety step leave a loadable meta pointing at tables about
-    to be deleted."""
+    no-op would let detach_clone leave a registration in place that
+    keeps protecting a detached clone's data."""
     io = metaio.HadoopMetadataIO(spark)
     p = str(tmp_path / "x.json")
     io.write_new(p, "{}")
@@ -512,11 +544,11 @@ def test_hadoop_remove_raises_on_failed_delete(spark, tmp_path,
 
 def test_index_metadata_routes_through_seam(spark, tmp_path,
                                             monkeypatch):
-    """Round-15 seam completion: the ANN index meta sidecar and the
-    postings index meta — the last index-layer metadata files — must
-    flow through MetadataIO (replace_text publish, read_text load),
-    not bare open(), so the whole index layer works wherever the
-    manifests live."""
+    """Round-15 seam completion: the ANN index header and the
+    postings index meta — the index-layer metadata logs — must flow
+    through MetadataIO (write_new publish, read_text load), not bare
+    open(), so the whole index layer works wherever the manifests
+    live."""
     from cs186_query_optimization_project_spark.functions import (
         retrieval, similarity,
     )
@@ -529,17 +561,17 @@ def test_index_metadata_routes_through_seam(spark, tmp_path,
         "vec_id long, embedding array<float>")
     idx = similarity.build_ivf_index(
         emb, str(tmp_path / "ivf"), n_cells=4)
-    assert [p for n, p in rec.calls if n == "replace_text"
-            and p.endswith("_ann_index_meta.json")]
+    assert [p for n, p in rec.calls if n == "write_new"
+            and p.endswith(os.path.join("_ann_meta", "v0.json"))]
     rec.calls.clear()
     assert similarity.load_ann_index(str(tmp_path / "ivf")) is not None
     assert [p for n, p in rec.calls if n == "read_text"
-            and p.endswith("_ann_index_meta.json")]
+            and "_ann_meta" in p]
     docs = spark.createDataFrame(
         [(i, f"alpha beta gamma{i % 3}") for i in range(30)],
         "doc_id long, text string")
     rec.calls.clear()
     retrieval.build_postings_index(docs, str(tmp_path / "post"),
                                    n_buckets=4)
-    assert [p for n, p in rec.calls if n == "replace_text"
-            and p.endswith("_postings_index_meta.json")]
+    assert [p for n, p in rec.calls if n == "write_new"
+            and p.endswith(os.path.join("_postings_meta", "v0.json"))]

@@ -137,37 +137,21 @@ def test_refresh_null_keys_and_null_sums(spark, tmp_path):
 
 def test_refresh_rowfree_commit_is_metadata_only(src, spark, tmp_path):
     """A source commit that changes no rows (OPTIMIZE) advances the
-    recorded version WITHOUT rewriting the store generation."""
+    watermark in a store commit that writes no data directory."""
     mv = MaterializedView.create(spark, src, str(tmp_path / "mv"),
                                  keys=["grp"], sum_cols=["amt"])
     sv = mv.store_version()
+    parts = os.path.join(mv.root, "store", "parts")
+    staged = set(os.listdir(parts))
     src.optimize()
     assert mv.refresh() == 0
-    assert mv.store_version() == sv              # no store commit
+    assert set(os.listdir(parts)) == staged      # no data written
+    assert mv.store_version() == sv + 1          # metadata-only commit
+    assert mv._store()._manifest()["parts"] == \
+        mv._store()._manifest(sv)["parts"]
     assert mv.refreshed_version() == src.versions()[-1]
-
-
-def test_refresh_retry_after_crashed_sidecar_swap(src, spark, tmp_path):
-    """A refresh that committed its store version but crashed BEFORE
-    the sidecar swap must be absorbed by the retry: the retry reads
-    the stored aggregate at the PINNED version, re-folds the full
-    outstanding CDF range, and overwrites a superset of the orphaned
-    commit's buckets — converging to the recompute."""
-    import json
-
-    mv = MaterializedView.create(spark, src, str(tmp_path / "mv"),
-                                 keys=["grp"], sum_cols=["amt"])
-    pre = mv._meta()                             # pre-refresh sidecar
-    src.insert(spark.createDataFrame([(9, "A", 9.0)],
-                                     "id long, grp string, amt double"))
-    assert mv.refresh() > 0
-    # simulate the crash: roll the sidecar back (store commit stands)
-    with open(os.path.join(mv.root, "_mview.json"), "w") as f:
-        f.write(json.dumps(pre))
-    src.insert(spark.createDataFrame([(10, "B", 2.0)],
-                                     "id long, grp string, amt double"))
-    assert mv.refresh() > 0                      # the retry
-    assert _as_dict(mv) == _recompute(src)
+    assert mv.refresh() == 0                     # caught up: no commit
+    assert mv.store_version() == sv + 1
 
 
 def test_mview_random_dml_refresh_matches_recompute(spark, tmp_path):
@@ -271,36 +255,74 @@ def test_read_with_avg_uses_nonnull_count(src, spark, tmp_path):
     assert got["E"] is None        # all-NULL group -> NULL, not 0
 
 
-def test_refresh_lock_excludes_concurrent_and_reclaims_stale(
-        src, spark, tmp_path):
-    """Single-refresher contract: a live lock makes refresh raise the
-    named conflict; a dead-pid (crashed) lock is reclaimed and the
-    refresh proceeds."""
+def test_concurrent_refresh_first_committer_wins(src, spark, tmp_path,
+                                                 monkeypatch):
+    """Two handles refresh at once after both read store version N:
+    the store commit of N+1 is the refresh's commit point, so exactly
+    one commits and the other raises the named conflict without
+    touching the store; the view then equals a recompute, and the
+    loser's retry finds nothing left to fold."""
+    import threading
+
     from cs186_query_optimization_project_spark.errors import (
         ConflictException,
     )
 
     mv = MaterializedView.create(spark, src, str(tmp_path / "mv"),
                                  keys=["grp"], sum_cols=["amt"])
-    src.insert(spark.createDataFrame([(8, "A", 1.0)],
+    handles = [MaterializedView(spark, src, mv.root) for _ in range(2)]
+    src.insert(spark.createDataFrame([(8, "A", 1.0), (9, "E", 2.0)],
                                      "id long, grp string, amt double"))
-    lock = os.path.join(mv.root, "_refresh.lock")
-    with open(lock, "x") as f:
-        f.write(str(os.getpid()))          # "live" concurrent holder
-    with pytest.raises(ConflictException, match="already in progress"):
-        mv.refresh()
-    # an EMPTY lockfile is a holder mid-publish (or unreadable), never
-    # stale: reclaiming it would admit two concurrent refreshes
-    os.remove(lock)
-    open(lock, "x").close()
-    with pytest.raises(ConflictException, match="unreadable"):
-        mv.refresh()
-    os.remove(lock)
-    with open(lock, "x") as f:
-        f.write("999999999")               # dead pid -> stale
-    assert mv.refresh() > 0                # reclaimed and folded
-    assert not os.path.exists(lock)        # released after success
+    sv = mv.store_version()
+    both_read = threading.Barrier(2, timeout=60)
+    real_changes = PartitionedTable.changes
+
+    def changes(self, *a, **kw):         # runs after the store read
+        both_read.wait()
+        return real_changes(self, *a, **kw)
+
+    monkeypatch.setattr(PartitionedTable, "changes", changes)
+    outcome = [None, None]
+
+    def run(i):
+        try:
+            outcome[i] = handles[i].refresh()
+        except ConflictException as exc:
+            outcome[i] = exc
+
+    threads = [threading.Thread(target=run, args=(i,)) for i in (0, 1)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    monkeypatch.setattr(PartitionedTable, "changes", real_changes)
+    won = [o for o in outcome if isinstance(o, int)]
+    lost = [o for o in outcome if isinstance(o, ConflictException)]
+    assert len(won) == 1 and won[0] > 0 and len(lost) == 1, outcome
+    assert mv.store_version() == sv + 1
     assert _as_dict(mv) == _recompute(src)
+    loser = handles[outcome.index(lost[0])]
+    assert loser.refresh() == 0                 # nothing double-folds
+    assert _as_dict(mv) == _recompute(src)
+
+
+def test_view_from_older_build_raises_rebuild(src, spark, tmp_path):
+    """A store without the watermark (written when the refresh state
+    lived in the sidecar) cannot be opened; the error names the
+    rebuild."""
+    import json
+
+    from cs186_query_optimization_project_spark import metaio
+
+    mv = MaterializedView.create(spark, src, str(tmp_path / "mv"),
+                                 keys=["grp"], sum_cols=["amt"])
+    store = mv._store()
+    man = store._manifest()
+    path = store._manifest_path(man["version"])
+    metaio.IO.remove(path)
+    metaio.IO.write_new(path, json.dumps(dict(man, txns={})))
+    with pytest.raises(DatabaseException, match="rebuild it"):
+        MaterializedView(spark, src, mv.root)
 
 
 def test_hll_distinct_view_insert_only(spark, tmp_path):

@@ -536,6 +536,7 @@ def test_consume_changes_cursor(pt, spark, tmp_path):
     assert sorted((r["id"], r["_change_type"])
                   for r in feed2.collect()) == got
     ack2()
+    assert ack2() == pt.versions()[-1]           # re-ack: already acked
     feed3, _ = pt.consume_changes(cur)
     assert feed3.count() == 0                    # acked: consumed
 
@@ -551,6 +552,13 @@ def test_consume_changes_cursor(pt, spark, tmp_path):
     pt.vacuum(keep_last=1)                       # retains only v3
     with pytest.raises(DatabaseException, match="no longer retained"):
         pt.consume_changes(cur)
+
+    # a single-file cursor from an older build: named reset error
+    from cs186_query_optimization_project_spark import metaio
+    old = str(tmp_path / "old_cursor.json")
+    metaio.IO.write_new(old, '{"version": 0}')
+    with pytest.raises(DatabaseException, match="reset the cursor"):
+        pt.consume_changes(old)
 
 
 def test_soft_delete_tombstones(pt, spark):
@@ -747,7 +755,8 @@ def test_metadata_count_answers_without_scanning(pt, spark):
     from cs186_query_optimization_project_spark import metaio
     man = json.loads(metaio.IO.read_text(path))
     man.pop("tomb_counts", None)
-    metaio.IO.replace_text(path, json.dumps(man))
+    metaio.IO.remove(path)
+    metaio.IO.write_new(path, json.dumps(man))
     assert pt.metadata_count() is None
     assert pt.metadata_group_counts() is None
     assert pt.read().count() == 1           # the fallback path
@@ -1024,6 +1033,62 @@ def test_vacuum_protects_transitive_clone_of_clone(pt, spark, tmp_path):
     shutil.rmtree(leaf.root)
     removed = pt.vacuum(keep_last=1)
     assert removed
+
+
+def test_concurrent_clones_stay_registered_through_vacuum(
+        pt, spark, tmp_path, monkeypatch):
+    """Two clones of one source taken at once, at versions 0 and 1,
+    with any registry read forced to overlap: both registrations
+    survive, so after the source rewrites every partition and vacuums
+    to its newest version both clones still read all their rows."""
+    import contextlib
+    import threading
+
+    pt.insert(spark.createDataFrame([(6, "A", 60.0)],
+                                    "id long, grp string, amt double"))
+    overlap = threading.Barrier(2, timeout=10)
+    real = PartitionedTable.registered_clones
+
+    def overlapping(self):              # both reads finish first
+        clones = real(self)
+        with contextlib.suppress(threading.BrokenBarrierError):
+            overlap.wait()
+        return clones
+
+    monkeypatch.setattr(PartitionedTable, "registered_clones",
+                        overlapping)
+    dests = [str(tmp_path / f"c{v}") for v in (0, 1)]
+    errors = []
+
+    def clone(v):
+        try:
+            PartitionedTable(spark, pt.root).clone(dests[v], version=v)
+        except Exception as exc:        # surfaced by the assert below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=clone, args=(v,)) for v in (0, 1)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    monkeypatch.setattr(PartitionedTable, "registered_clones", real)
+    assert not errors, errors
+    assert pt.registered_clones() == sorted(dests)
+    pt.update(F.lit(True), {"amt": F.col("amt") + 1.0})  # every partition
+    pt.vacuum(keep_last=1)
+    assert [PartitionedTable(spark, d).read().count() for d in dests] \
+        == [5, 6]
+
+
+def test_vacuum_refuses_older_clone_registry(pt, spark):
+    """A single-file ``_clones.json`` registry from an older build is
+    invisible to the per-clone registry, so vacuum fails closed on it
+    instead of deleting directories its clones may still read."""
+    from cs186_query_optimization_project_spark import metaio
+
+    metaio.IO.write_new(os.path.join(pt.root, "_clones.json"), "[]")
+    with pytest.raises(DatabaseException, match="older build"):
+        pt.vacuum(keep_last=1)
 
 
 def test_bloom_point_lookup_skips_and_matches(spark, tmp_path):

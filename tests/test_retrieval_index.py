@@ -256,6 +256,23 @@ def test_postings_append_crash_retry_is_exactly_once(spark, docs,
     assert n_inc == retrieval.term_postings(spark, full, ["hash"]).count()
 
 
+def test_postings_append_from_published_past_handle_raises(
+        spark, docs, tmp_path_factory):
+    """Each publish creates the handle's next meta entry exclusively:
+    a second, different append from a handle another append already
+    published past finds that entry taken and raises the stale-handle
+    error; the published index keeps the first append."""
+    path = str(tmp_path_factory.mktemp("race") / "idx")
+    base = docs.filter(F.col("doc_id") % 5 != 0)
+    idx = retrieval.build_postings_index(base, path, n_buckets=16)
+    first = retrieval.postings_append(
+        spark, idx, docs.filter(F.col("doc_id") % 5 == 0))
+    with pytest.raises(ValueError, match="stale PostingsIndex"):
+        retrieval.postings_append(
+            spark, idx, docs.filter(F.col("doc_id") % 5 == 0).limit(1))
+    assert retrieval.load_postings_index(path) == first
+
+
 def test_postings_remove_equals_rebuild_on_survivors(spark, docs,
                                                      tmp_path_factory):
     """Right-to-be-forgotten deletion: removing a slice of documents

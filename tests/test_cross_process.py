@@ -7,7 +7,8 @@ manifests, created exclusively (partitioned.py).  Each statement
 re-reads the newest manifest, so no commit is lost across instances,
 and a true same-version race loses with ConflictException.  A fresh
 ``Database`` over the path (what a restarted process opens) sees every
-commit.
+commit.  Materialized-view refreshes from two handles on one view
+serialize the same way, through the view store's manifest.
 """
 
 from __future__ import annotations
@@ -17,6 +18,11 @@ from pyspark.sql import functions as F
 
 from cs186_query_optimization_project_spark import Database
 from cs186_query_optimization_project_spark.errors import ConflictException
+
+from cs186_query_optimization_project_spark.mview import MaterializedView
+from cs186_query_optimization_project_spark.partitioned import (
+    PartitionedTable,
+)
 
 from tests.conftest import rows
 
@@ -116,3 +122,44 @@ def test_partitioned_manifest_commits_serialize_across_instances(
         assert {r["k"]: r["x"] for r in t.read().collect()} == \
             {1: 111, 2: 222}
     assert t1.versions() == t2.versions() == [0, 1, 2]
+
+
+def test_mview_refresh_lock_serializes_across_processes(spark, tmp_path,
+                                                        monkeypatch):
+    """Refresh exclusion is storage-scoped like the manifest CAS: no
+    process-local lock or pid is involved.  Handle ``b`` (one process)
+    reads store version N; handle ``a`` (another process) refreshes and
+    commits N+1 in that window; ``b``'s commit then loses with the named
+    conflict and writes nothing.  A handle opened afterwards (a
+    restarted process) reads the winner's commit, and ``b``'s retry has
+    nothing left to fold."""
+    df = spark.createDataFrame([(1, "A", 1.0), (2, "B", 2.0)],
+                               "id long, grp string, amt double")
+    src = PartitionedTable.create(spark, df, str(tmp_path / "s"), "grp")
+    root = str(tmp_path / "mv")
+    MaterializedView.create(spark, src, root, keys=["grp"],
+                            sum_cols=["amt"])
+    a = MaterializedView(spark, src, root)
+    b = MaterializedView(spark, src, root)
+    src.insert(spark.createDataFrame([(3, "A", 3.0)],
+                                     "id long, grp string, amt double"))
+    sv = b.store_version()
+    real_changes = PartitionedTable.changes
+    interleaved = []
+
+    def changes(self, *args, **kw):      # b has read store version N
+        monkeypatch.setattr(PartitionedTable, "changes", real_changes)
+        interleaved.append(a.refresh())
+        return real_changes(self, *args, **kw)
+
+    monkeypatch.setattr(PartitionedTable, "changes", changes)
+    with pytest.raises(ConflictException):
+        b.refresh()
+    assert interleaved == [1]
+    fresh = MaterializedView(spark, src, root)
+    assert fresh.store_version() == sv + 1
+    assert fresh.refreshed_version() == src.versions()[-1]
+    assert {r["grp"]: r["mv_sum_amt"] for r in fresh.read().collect()} == \
+        {"A": 4.0, "B": 2.0}
+    assert b.refresh() == 0
+    assert fresh.store_version() == sv + 1

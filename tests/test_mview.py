@@ -255,15 +255,19 @@ def test_read_with_avg_uses_nonnull_count(src, spark, tmp_path):
     assert got["E"] is None        # all-NULL group -> NULL, not 0
 
 
-def test_concurrent_refresh_first_committer_wins(src, spark, tmp_path,
-                                                 monkeypatch):
-    """Two handles refresh at once after both read store version N:
-    the store commit of N+1 is the refresh's commit point, so exactly
-    one commits and the other raises the named conflict without
-    touching the store; the view then equals a recompute, and the
-    loser's retry finds nothing left to fold."""
+def test_refresh_lock_excludes_concurrent_and_reclaims_stale(
+        src, spark, tmp_path, monkeypatch):
+    """Single-refresher contract, held by the store commit alone.  Two
+    handles refresh at once after both read store version N: the store
+    commit of N+1 is the refresh's commit point, so exactly one commits
+    and the other raises the named conflict without touching the store;
+    the view then equals a recompute, and the loser's retry finds
+    nothing left to fold.  A refresher that dies before its store
+    commit leaves nothing to reclaim: the view still reads the old
+    version, and the next refresh folds the pending change."""
     import threading
 
+    from cs186_query_optimization_project_spark import metaio
     from cs186_query_optimization_project_spark.errors import (
         ConflictException,
     )
@@ -304,6 +308,27 @@ def test_concurrent_refresh_first_committer_wins(src, spark, tmp_path,
     loser = handles[outcome.index(lost[0])]
     assert loser.refresh() == 0                 # nothing double-folds
     assert _as_dict(mv) == _recompute(src)
+
+    src.insert(spark.createDataFrame([(10, "B", 4.0)],
+                                     "id long, grp string, amt double"))
+    sv, seen = mv.store_version(), mv.refreshed_version()
+    commit_point = mv._store()._manifest_path(sv + 1)
+    real_write = metaio.IO.write_new
+
+    def dies_at_commit(path, text):
+        if path == commit_point:
+            raise OSError("refresher died before its store commit")
+        real_write(path, text)
+
+    monkeypatch.setattr(metaio.IO, "write_new", dies_at_commit)
+    with pytest.raises(OSError, match="died"):
+        handles[0].refresh()
+    monkeypatch.setattr(metaio.IO, "write_new", real_write)
+    fresh = MaterializedView(spark, src, mv.root)
+    assert (fresh.store_version(), fresh.refreshed_version()) == (sv, seen)
+    assert fresh.refresh() > 0                  # nothing left to reclaim
+    assert fresh.store_version() == sv + 1
+    assert _as_dict(fresh) == _recompute(src)
 
 
 def test_view_from_older_build_raises_rebuild(src, spark, tmp_path):

@@ -3732,14 +3732,14 @@ def _build_or_load_index(sf_dir, src_file: str, family: str, kind: str,
     (ANN tables, postings index).
 
     The directory name is keyed by (kind, version, build params, source
-    fingerprint), under a per-uid 0700 parent (same reasoning as the
-    stats cache, database.py): a changed corpus or changed parameters
-    lands in a FRESH directory instead of overwriting one a concurrent
-    prober may be reading, and no other local user can pre-create or
-    poison the path.  Stale versions accumulate bounded garbage in /tmp,
-    like the DML copy-on-write versions — a vacuum is a directory
-    delete.  Repeated runs and separate driver subprocesses resolve the
-    same key and reuse the same on-disk index.
+    fingerprint), under a per-uid 0700 parent: a changed corpus or
+    changed parameters lands in a FRESH directory instead of
+    overwriting one a concurrent prober may be reading, and no other
+    local user can pre-create or poison the path.  Stale versions
+    accumulate bounded garbage in /tmp, like the DML copy-on-write
+    versions — a vacuum is a directory delete.  Repeated runs and
+    separate driver subprocesses resolve the same key and reuse the
+    same on-disk index.
 
     ``loader(path)`` returns the index handle or None; ``builder(path,
     fingerprint)`` materializes it.  Staleness = missing on disk OR a

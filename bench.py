@@ -56,7 +56,7 @@ def main() -> None:
                      f"queries: {unknown}; valid: {sorted(queries)}")
         queries = {**{n: queries[n] for n in first}, **queries}
 
-    # warm the session + catalog (JVM JIT, parquet footers, stats cache)
+    # warm the session + catalog (JVM JIT, parquet footers)
     entry_mod.q_scan(spark, sf_dir).count()
 
     def cleanup() -> None:

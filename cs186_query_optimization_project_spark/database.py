@@ -49,9 +49,9 @@ def ensure_private_dir(path: str) -> str:
     """``mkdir -p`` with an ownership check.  ``mode=`` on ``makedirs``
     is IGNORED when the directory already exists, so a world-readable or
     foreign-owned pre-created path would silently defeat the 0700
-    anti-poisoning guard (pickle caches, DML table versions, ANN
-    indexes all live under such parents).  Verify the dir is ours and
-    closed to group/other, failing loudly otherwise."""
+    anti-poisoning guard (the driver's cached indexes live under such
+    parents).  Verify the dir is ours and closed to group/other,
+    failing loudly otherwise."""
     import stat
 
     os.makedirs(path, mode=0o700, exist_ok=True)
@@ -150,7 +150,7 @@ class TableEntry:
     name: str
     path: str | None = None
     index_columns: tuple[str, ...] = ()
-    #: filled lazily by plans.stats.TableStats.collect
+    #: filled lazily by Database.stats
     stats: object | None = field(default=None, repr=False)
     _df: DataFrame | None = field(default=None, repr=False)
     #: zero-arg callable producing the DataFrame; used when _df is None
@@ -544,91 +544,25 @@ class Database:
         return self._entry(name).index_columns
 
     # ------------------------------------------------------------------ #
-    # stats (lazy, cached per table — plans/stats.py)
+    # stats (lazy, held per entry — plans/stats.py)
     # ------------------------------------------------------------------ #
     def stats(self, name: str, histograms: bool = False):
-        from cs186_query_optimization_project_spark.plans.stats import TableStats
+        """The entry's table statistics.  A manifest table's are derived
+        from the collected base in its own log (``version_stats``);
+        any other table's are collected once per entry."""
+        from cs186_query_optimization_project_spark.plans.stats import (
+            TableStats,
+            version_stats,
+        )
 
         entry = self._entry(name)
         if entry.stats is None or (histograms and not entry.stats.histograms):
-            entry.stats = (self._load_cached_stats(entry, histograms)
-                           or TableStats.collect(entry.df, name,
-                                                 histograms=histograms))
-            self._save_cached_stats(entry, entry.stats)
+            entry.stats = (
+                TableStats.collect(entry.df, name, histograms=histograms)
+                if entry.table is None else
+                version_stats(entry.table, entry.version, name,
+                              lambda: entry.df, histograms))
         return entry.stats
-
-    # Disk cache for table stats, keyed by (path, mtime, size) — the local
-    # analog of ANALYZE TABLE results living in a catalog.  Recomputing
-    # stats per process would otherwise dominate short optimal-path queries.
-    # Per-uid directory created 0700: pickle.load from a world-writable
-    # shared path would let another local user plant arbitrary code.
-    _STATS_CACHE_DIR = f"/tmp/spark_graft_stats_cache_{os.getuid()}"
-
-    def _stats_cache_key(self, entry: TableEntry) -> str | None:
-        # a manifest version is immutable: its file names the content
-        path = (entry.table._manifest_path(entry.version)
-                if entry.table is not None else entry.path)
-        if path is None or not os.path.exists(path):
-            return None
-        import hashlib
-
-        st = os.stat(path)
-        raw = f"{path}|{st.st_mtime_ns}|{st.st_size}"
-        if os.path.isdir(path):
-            # a directory's own mtime/size don't change when files
-            # inside a SUBDIRECTORY are rewritten in place (partitioned
-            # tables): fold every data file's identity in.  Metadata
-            # walk only — cost is one listing, the same one the scan's
-            # file index pays.
-            parts = []
-            for dirpath, _dirnames, filenames in os.walk(path):
-                for fn in filenames:
-                    if fn.startswith(("_", ".")):
-                        continue
-                    fst = os.stat(os.path.join(dirpath, fn))
-                    parts.append(f"{dirpath}/{fn}|{fst.st_mtime_ns}"
-                                 f"|{fst.st_size}")
-            raw += "||" + "|".join(sorted(parts))
-        return hashlib.md5(raw.encode()).hexdigest()
-
-    def _load_cached_stats(self, entry: TableEntry, histograms: bool):
-        key = self._stats_cache_key(entry)
-        if key is None:
-            return None
-        path = os.path.join(self._STATS_CACHE_DIR, key + ".pkl")
-        # verify BEFORE unpickling — and OUTSIDE the best-effort except:
-        # loading from a foreign-owned or open directory would execute
-        # attacker-planted bytecode, so tampering fails loudly rather
-        # than degrading to a cache miss
-        ensure_private_dir(self._STATS_CACHE_DIR)
-        try:
-            import pickle
-
-            with open(path, "rb") as f:
-                stats = pickle.load(f)
-            if histograms and not stats.histograms:
-                return None
-            return stats
-        except Exception:
-            return None
-
-    def _save_cached_stats(self, entry: TableEntry, stats) -> None:
-        key = self._stats_cache_key(entry)
-        if key is None:
-            return
-        try:
-            import pickle
-
-            ensure_private_dir(self._STATS_CACHE_DIR)
-            final = os.path.join(self._STATS_CACHE_DIR, key + ".pkl")
-            # write-then-rename: concurrent processes never observe a
-            # torn pickle (os.replace is atomic within a filesystem)
-            tmp = f"{final}.{os.getpid()}.tmp"
-            with open(tmp, "wb") as f:
-                pickle.dump(stats, f)
-            os.replace(tmp, final)
-        except Exception:
-            pass
 
     # ------------------------------------------------------------------ #
     # point reads (BPlusTree.lookupKey / containsKey,

@@ -117,7 +117,10 @@ class HadoopMetadataIO:
     ... already exists`` variant) are translated to the Python
     ``FileNotFoundError`` / ``FileExistsError`` the callers' control
     flow rides on — proven by running the same semantics suite as the
-    local backend (tests/test_metaio.py)."""
+    local backend (tests/test_metaio.py).  A ``ChecksumException`` (a
+    file whose bytes no longer match its checksum) is an ``OSError``,
+    so readers that fail open on a damaged file do so on both
+    backends."""
 
     def __init__(self, spark):
         self._jvm = spark._jvm
@@ -144,6 +147,8 @@ class HadoopMetadataIO:
         if ("FileAlreadyExistsException" in name
                 or "already exists" in msg.lower()):
             return FileExistsError(path)
+        if "ChecksumException" in name:
+            return OSError(f"{path}: {msg}")
         return None
 
     def _write_stream(self, out, text: str) -> None:
@@ -159,16 +164,16 @@ class HadoopMetadataIO:
         p = self._path(path)
         try:
             stream = self._fs(p).open(p)
+            try:
+                data = self._jvm.org.apache.commons.io.IOUtils \
+                    .toByteArray(stream)
+            finally:
+                stream.close()
         except Py4JJavaError as exc:
             py = self._translate(exc, path)
             if py is not None:
                 raise py from None
             raise
-        try:
-            data = self._jvm.org.apache.commons.io.IOUtils \
-                .toByteArray(stream)
-        finally:
-            stream.close()
         return bytes(data).decode("utf-8")
 
     def list_dir(self, path: str) -> list[str]:

@@ -1901,7 +1901,10 @@ class PartitionedTable:
         move).  Keys are the manifest's hive-encoded partition values;
         partitions with zero remaining rows are omitted, matching SQL
         GROUP BY (no empty groups).  Driver cost O(|directories|)."""
-        man = self._manifest(version)
+        return self._group_counts(self._manifest(version))
+
+    def _group_counts(self, man: dict) -> dict[str, int] | None:
+        """:meth:`metadata_group_counts` of the read manifest ``man``."""
         out: dict[str, int] = {}
         for key, ds in man["parts"].items():
             total = 0
@@ -1930,17 +1933,8 @@ class PartitionedTable:
         (the Delta deletion-vector cardinality move), so soft deletes
         no longer forfeit metadata-only COUNT.  Callers fall back to
         ``read().count()``."""
-        man = self._manifest(version)
-        total = 0
-        for ds in man["parts"].values():
-            for d in ds:
-                st = (self._staging_stats(os.path.dirname(d))
-                      .get(os.path.basename(d), {}).get("__num_rows"))
-                masked = self._masked_count(man, d)
-                if not isinstance(st, int) or masked is None:
-                    return None
-                total += st - masked
-        return total
+        counts = self._group_counts(self._manifest(version))
+        return None if counts is None else sum(counts.values())
 
     def metadata_min_max(self, column: str,
                          version: int | None = None):
@@ -1951,24 +1945,15 @@ class PartitionedTable:
         nested types never record — see ``_dir_stats``).  Values come
         back as stored in the stats (ints native; dates/timestamps as
         ISO strings)."""
-        man = self._manifest(version)
-        if any(ts for ts in man.get("tombstones", {}).values()):
+        return self._min_max(self._manifest(version), column)
+
+    def _min_max(self, man: dict, column: str):
+        """:meth:`metadata_min_max` of the read manifest ``man``."""
+        groups = self._group_min_max(man, column)
+        if not groups:
             return None
-        lo = hi = None
-        seen = False
-        for ds in man["parts"].values():
-            for d in ds:
-                stats = (self._staging_stats(os.path.dirname(d))
-                         .get(os.path.basename(d), {}))
-                if stats.get("__num_rows") == 0:
-                    continue  # empty rewrite artifact: no bounds, no rows
-                st = stats.get(column)
-                if not isinstance(st, (list, tuple)):
-                    return None
-                seen = True
-                lo = st[0] if lo is None else min(lo, st[0])
-                hi = st[1] if hi is None else max(hi, st[1])
-        return (lo, hi) if seen else None
+        return (min(lo for lo, _ in groups.values()),
+                max(hi for _, hi in groups.values()))
 
     def metadata_group_min_max(self, column: str,
                                version: int | None = None) \
@@ -1983,7 +1968,11 @@ class PartitionedTable:
         Driver cost O(|directories|) — the partition-level dashboard
         query ("newest record per day/source") answered without
         touching data."""
-        man = self._manifest(version)
+        return self._group_min_max(self._manifest(version), column)
+
+    def _group_min_max(self, man: dict, column: str) \
+            -> dict[str, tuple] | None:
+        """:meth:`metadata_group_min_max` of the read manifest ``man``."""
         if any(ts for ts in man.get("tombstones", {}).values()):
             return None
         out: dict[str, tuple] = {}

@@ -7,23 +7,43 @@ factor) estimation, and predicate/join cardinality propagation
 (``copyWithPredicate`` ``TableStats.java:197–216``, ``copyWithJoin``
 ``TableStats.java:259–262``).
 
-Everything is computed with ONE aggregation pass over the table (a second
+``TableStats.collect`` scans the table in one aggregation pass (a second
 pass only if histograms are requested) — distributed, no driver-side row
-iteration, so the same code works at 100 TB.  Distinct counts use
-``approx_count_distinct`` (HLL) like any sane engine at scale; the reference
-uses exact hash sets, which is fine at 4 KiB pages and fatal at 100 TB.
+iteration.  Distinct counts use ``approx_count_distinct`` (HLL); the
+reference uses exact hash sets, which is fine at 4 KiB pages and fatal at
+100 TB.
+
+A manifest table keeps each collected *base* in a write-once log under
+its root (``_table_stats/v<N>.json``, N the version it describes), so
+every catalog and process on the path shares it.  The statistics of any
+later version are *derived* from the newest base at or below it plus
+that version's commit metadata — exact row counts and min/max from the
+manifest and the footer sidecars, zero Spark jobs (Delta's per-file
+``numRecords``/min/max).  Distinct counts are the only figures the
+metadata cannot give; they are kept or scaled from the base, and the
+table is collected again once its row count drifts past
+``RECOLLECT_DRIFT`` of the base's (PostgreSQL's analyze threshold).
 """
 
 from __future__ import annotations
 
+import contextlib
+import datetime
 import math
+import os
 from dataclasses import dataclass, field
-from typing import Any
+from decimal import Decimal
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cs186_query_optimization_project_spark.partitioned import (
+    PartitionedTable,
+    log_newest,
+    log_publish,
+)
 from cs186_query_optimization_project_spark.predicates import PredicateOperator
 
 #: Bucket count matching the reference (``IntHistogram.java:17``).
@@ -33,6 +53,25 @@ NUM_BUCKETS = 10
 #: (reference uses per-histogram computeReductionFactor; we fall back for
 #: non-numeric ranges without histograms).
 DEFAULT_RANGE_RF = 0.3
+
+#: Log directory, under a manifest table's root, of collected bases.
+BASE_LOG = "_table_stats"
+
+#: Collect again once a version's row count differs from its base's by
+#: more than this share: PostgreSQL's ``autovacuum_analyze_scale_factor``
+#: default (re-analyze after changes pass 10% of the table).
+RECOLLECT_DRIFT = 0.1
+
+#: A column whose base distinct count is at least this share of the base
+#: rows is a key, within HLL error: its distinct count scales with rows.
+KEY_SHARE = 0.9
+
+#: Parsers from a footer bound (``partitioned._dir_stats``) to the Python
+#: type ``collect`` returns, by column type; other types keep the base's.
+_FROM_BOUND: dict[str, Callable] = {
+    "tinyint": int, "smallint": int, "int": int, "bigint": int,
+    "string": str, "date": datetime.date.fromisoformat,
+}
 
 _FIXED_WIDTHS: dict[type, int] = {
     T.BooleanType: 1,
@@ -49,6 +88,24 @@ _FIXED_WIDTHS: dict[type, int] = {
 
 def _is_numeric(dt: T.DataType) -> bool:
     return isinstance(dt, T.NumericType)
+
+
+def _encode(v: Any) -> Any:
+    """A min/max value as JSON: dates, timestamps and decimals as text."""
+    if isinstance(v, (datetime.date, datetime.datetime)):
+        return v.isoformat()
+    return str(v) if isinstance(v, Decimal) else v
+
+
+def _decode(v: Any, data_type: str) -> Any:
+    """Inverse of :func:`_encode` for a column of ``data_type``."""
+    if v is None:
+        return None
+    if data_type == "date":
+        return datetime.date.fromisoformat(v)
+    if data_type == "timestamp":
+        return datetime.datetime.fromisoformat(v)
+    return Decimal(v) if data_type.startswith("decimal") else v
 
 
 @dataclass
@@ -162,6 +219,87 @@ class TableStats:
         self.histograms = True
 
     # -------------------------------------------------------------- #
+    # bases and derived versions (manifest tables)
+    # -------------------------------------------------------------- #
+    def to_json(self) -> dict:
+        """A base log entry; the table name is the catalog's, not kept."""
+        return {
+            "num_records": self.num_records, "row_bytes": self.row_bytes,
+            "histograms": self.histograms,
+            "columns": [{"name": c.name, "data_type": c.data_type,
+                         "distinct": c.distinct, "min": _encode(c.min),
+                         "max": _encode(c.max), "avg_len": c.avg_len,
+                         "histogram": c.histogram}
+                        for c in self.columns.values()]}
+
+    @classmethod
+    def from_json(cls, payload: dict, name: str) -> "TableStats":
+        """The base a :meth:`to_json` entry holds, as table ``name``."""
+        cols = {}
+        for c in payload["columns"]:
+            dt = c["data_type"]
+            cols[c["name"]] = ColumnStats(
+                name=c["name"], data_type=dt, distinct=int(c["distinct"]),
+                min=_decode(c["min"], dt), max=_decode(c["max"], dt),
+                avg_len=c["avg_len"],
+                histogram=[tuple(b) for b in c["histogram"]])
+        return cls(table=name, num_records=int(payload["num_records"]),
+                   row_bytes=int(payload["row_bytes"]), columns=cols,
+                   histograms=bool(payload["histograms"]))
+
+    @classmethod
+    def derive(cls, base: "TableStats", table: PartitionedTable,
+               version: int) -> "TableStats | None":
+        """The stats of ``table`` at ``version`` from the collected
+        ``base`` of an earlier (or the same) version and the version's
+        manifest and footer sidecars only — zero Spark jobs.  ``None``
+        when they must be collected instead: the schema changed, the
+        metadata cannot count the rows (a tombstone of unrecorded
+        cardinality), or the count drifted past ``RECOLLECT_DRIFT``.
+
+        Row counts and int/string/date min/max are exact; distinct
+        counts are exact for partition columns, scaled with the rows for
+        key columns and kept from the base otherwise; histograms scale
+        with the rows; widths stay the base's."""
+        man = table._manifest(version)
+        shape = ",".join(f"{c.name}:{c.data_type}"
+                         for c in base.columns.values())
+        if man["schema"] != f"struct<{shape}>":
+            return None
+        groups = table._group_counts(man)
+        if groups is None:
+            return None
+        n = sum(groups.values())
+        if abs(n - base.num_records) > RECOLLECT_DRIFT * base.num_records:
+            return None
+        scale = n / base.num_records if base.num_records else 1.0
+        pcols = table._pcols_of(man)
+        # a multi-column key is '/'-joined, with no '/' in any component
+        keys = [k.split("/") if len(pcols) > 1 else [k] for k in groups]
+        cols = {}
+        for name, b in base.columns.items():
+            lo, hi = b.min, b.max
+            parse = _FROM_BOUND.get(b.data_type)
+            if lo is not None and parse is not None:
+                exact = table._min_max(man, name)
+                if exact is not None:
+                    lo, hi = parse(exact[0]), parse(exact[1])
+            if name in pcols:
+                i = pcols.index(name)
+                distinct = len({k[i] for k in keys})
+            elif b.distinct >= KEY_SHARE * base.num_records:
+                distinct = round(b.distinct * scale)
+            else:
+                distinct = b.distinct
+            cols[name] = ColumnStats(
+                name=name, data_type=b.data_type,
+                distinct=max(min(distinct, n), 1), min=lo, max=hi,
+                avg_len=b.avg_len,
+                histogram=[(x, y, round(c * scale))
+                           for x, y, c in b.histogram])
+        return cls(base.table, n, base.row_bytes, cols, base.histograms)
+
+    # -------------------------------------------------------------- #
     # selectivity (reduction factors, IntHistogram.java:201–235)
     # -------------------------------------------------------------- #
     def reduction_factor(self, column: str, op: PredicateOperator,
@@ -267,3 +405,30 @@ class TableStats:
     @property
     def total_bytes(self) -> int:
         return self.num_records * self.row_bytes
+
+
+def version_stats(table: PartitionedTable, version: int, name: str,
+                  frame: Callable[[], DataFrame],
+                  histograms: bool = False) -> TableStats:
+    """Statistics of manifest ``table`` at ``version``: derived from the
+    newest base in its log when that base is at or below ``version``
+    (and has histograms, if asked), else collected over ``frame()`` and
+    published as the base of ``version``.  A missing, corrupt or
+    schema-mismatched base falls back to the collect."""
+    log = os.path.join(table.root, BASE_LOG)
+    try:
+        newest = log_newest(log)
+        base = (TableStats.from_json(newest[1], name)
+                if newest is not None and newest[0] <= version else None)
+    except (OSError, ValueError, KeyError, TypeError):
+        base = None
+    if base is not None and (base.histograms or not histograms):
+        derived = TableStats.derive(base, table, version)
+        if derived is not None:
+            return derived
+    stats = TableStats.collect(frame(), name, histograms=histograms)
+    # a publish that lost to another writer's base is ignored, and a
+    # reader without write access still gets its statistics
+    with contextlib.suppress(OSError):
+        log_publish(log, version, stats.to_json())
+    return stats

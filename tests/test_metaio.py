@@ -178,6 +178,18 @@ def test_hadoop_unicode_roundtrip(spark, tmp_path):
     assert io.file_size(p) == len(text.encode("utf-8"))
 
 
+def test_hadoop_checksum_error_is_oserror(spark, tmp_path):
+    """A file whose bytes no longer match its checksum reads as an
+    OSError, which readers that fail open on a damaged file catch."""
+    io = metaio.HadoopMetadataIO(spark)
+    p = str(tmp_path / "c.json")
+    io.write_new(p, '{"k": 1}')
+    with open(p, "w") as f:
+        f.write('{"k": 2}')
+    with pytest.raises(OSError, match="c.json"):
+        io.read_text(p)
+
+
 class RecordingIO(LocalMetadataIO):
     """Pass-through wrapper logging every seam call."""
 

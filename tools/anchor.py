@@ -38,8 +38,8 @@ def main() -> None:
         sys.exit(f"unknown entries: {unknown}\n{usage}")
     print(f"load avg: {os.getloadavg()}")
     spark = get_spark(app_name="anchor")
-    # same session warm-up as bench.py (JVM JIT, parquet footers,
-    # stats cache) so anchors compare against in-suite numbers
+    # same session warm-up as bench.py (JVM JIT, parquet footers) so
+    # anchors compare against in-suite numbers
     entry_mod.q_scan(spark, sf_dir).count()
 
     def cleanup() -> None:

@@ -4,7 +4,8 @@ The session is configured once for the whole engine: AQE on (runtime
 re-planning, skew-join splitting, partition coalescing), Arrow on (fast
 pandas interchange for the vectorized UDF paths), UTC timestamps (oracle
 parity with DuckDB), and shuffle parallelism sized to the machine rather
-than Spark's legacy default of 200.
+than Spark's legacy default of 200.  The driver JVM compiles with C2 only
+the code that stays hot (``C2_THRESHOLD_SCALE``).
 
 On a real cluster these settings scale: AQE re-sizes shuffle partitions
 from runtime statistics, so the same code runs on local[32] at sf0.01 and
@@ -78,6 +79,55 @@ ENGINE_CONF: dict[str, str] = {
 }
 
 
+#: Factor on HotSpot's four C2 (tier-4) compile thresholds in the driver
+#: JVM, over their JDK 17 defaults.  Only code that stays hot then reaches
+#: C2; lukewarm Spark code (analysis, planning, each query's generated
+#: classes) stays in C1.  At sf0.01 an op's cost is fixed overhead, and a
+#: per-thread CPU profile of the driver JVM over perfbench's read_mix
+#: timed window put 440-970 ms of the 1.1-2.0 s of JVM CPU per op in the
+#: C2 compiler threads (py4j analysis and planning 100-250 ms, task
+#: threads 80-180 ms).  Measured with perfbench on a 4-vCPU host, read_mix,
+#: 10 interleaved triples of default/x3/x10 (seeds 11-20, medians):
+#: read_cpu_ms 1350 -> 1012 (x3) and 963 ms (x10), setup_s 18.6 -> 17.0
+#: and 18.6 s.  x10 saved 5% more read CPU than x3 but cost 1.8 s more
+#: set-up (8 of 10 triples), and it keeps code longer in the slower,
+#: profiled C1 tier, so x3.  x3 on 20 more interleaved pairs (seeds
+#: 21-40): read_mix read_cpu_ms 1429 -> 1054 ms, won 20/20; dml_mixed
+#: read_cpu_ms 385 -> 299 and op_cpu_ms 1268 -> 975 ms (6 pairs); setup_s
+#: level on both.  C1 only (-XX:TieredStopAtLevel=1) also halves CPU at
+#: sf0.01, but costs +35% wall time per op at sf0.1 (674 -> 907 ms),
+#: where hot loops need C2.
+C2_THRESHOLD_SCALE = 3
+
+#: JDK 17 defaults of the thresholds that C2_THRESHOLD_SCALE multiplies.
+_TIER4_DEFAULTS = {
+    "Tier4InvocationThreshold": 5000,
+    "Tier4MinInvocationThreshold": 600,
+    "Tier4CompileThreshold": 15000,
+    "Tier4BackEdgeThreshold": 40000,
+}
+
+#: The driver JVM's options.  A varied suite generates hundreds of codegen
+#: classes; the JVM's default 240 MB JIT code cache flushes under that
+#: load and hot loops fall back to the interpreter (measured as 5-8x
+#: tail-of-suite slowdowns on expression-heavy plans).  Peak code-cache
+#: use under the JIT policy (the CodeHeap pools' summed peaks, via JMX):
+#: 142 MB at the end of tools/check_contract.py's 230 entries, 72 MB at
+#: the end of a perfbench read_mix run -- over half the default, so the
+#: larger cache stays.
+DRIVER_JAVA_OPTIONS = " ".join(
+    ["-XX:ReservedCodeCacheSize=768m"]
+    + [f"-XX:{flag}={default * C2_THRESHOLD_SCALE}"
+       for flag, default in _TIER4_DEFAULTS.items()])
+
+
+def _join_java_options(engine: str, caller: str | None) -> str:
+    """The engine's JVM options followed by the caller's.  HotSpot honours
+    the last occurrence of a flag, so a caller's flag overrides the
+    engine's flag of the same name and leaves the others in force."""
+    return " ".join(opts for opts in (engine, (caller or "").strip()) if opts)
+
+
 def _default_driver_mem() -> str:
     """Half the host's physical memory (MemTotal), at most 16g: the
     driver heap shares the host with the OS and the Python workers, so
@@ -109,17 +159,15 @@ def get_spark(
     )
     builder = builder.config("spark.driver.memory", os.environ.get(
         "SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()))
-    # A varied suite generates hundreds of codegen classes; the JVM's
-    # default 240 MB JIT code cache flushes under that load and hot loops
-    # fall back to the interpreter (measured as 5-8x tail-of-suite
-    # slowdowns on expression-heavy plans).
-    builder = builder.config("spark.driver.extraJavaOptions",
-                             "-XX:ReservedCodeCacheSize=768m")
+    extra = dict(extra_conf or {})
+    java_options = _join_java_options(
+        DRIVER_JAVA_OPTIONS, extra.pop("spark.driver.extraJavaOptions", None))
+    builder = builder.config("spark.driver.extraJavaOptions", java_options)
     builder = builder.config("spark.ui.enabled", "false")
     builder = builder.config("spark.ui.showConsoleProgress", "false")
     for key, value in ENGINE_CONF.items():
         builder = builder.config(key, value)
-    for key, value in (extra_conf or {}).items():
+    for key, value in extra.items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1460,17 +1460,23 @@ class PartitionedTable:
         for eq, ranges, isin in norm:
             adm = self._admitted_dirs(man, schema, eq, ranges, isin,
                                       version)
-            for d, fl in self._file_prune(adm, eq, ranges,
-                                          isin).items():
-                if d not in merged:
-                    merged[d] = None if fl is None else list(fl)
-                elif merged[d] is not None:
-                    if fl is None:
-                        merged[d] = None
-                    else:
-                        merged[d].extend(
-                            f for f in fl if f not in merged[d])
+            self._union_files(merged,
+                              self._file_prune(adm, eq, ranges, isin))
         return merged
+
+    @staticmethod
+    def _union_files(merged: dict, files: dict) -> None:
+        """Fold one branch's ``{dir: admitted files | None}`` into
+        ``merged``: a directory's files are the union over branches,
+        and ``None`` (the whole directory) absorbs any list."""
+        for d, fl in files.items():
+            if d not in merged:
+                merged[d] = None if fl is None else list(fl)
+            elif merged[d] is not None:
+                if fl is None:
+                    merged[d] = None
+                else:
+                    merged[d].extend(f for f in fl if f not in merged[d])
 
     def _validate_skip_args(self, schema, eq: dict, ranges: dict,
                             isin: dict) -> None:
@@ -1610,64 +1616,23 @@ class PartitionedTable:
                      for c, vs in isin.items()
                      if c not in pcols
                      and c in man.get("bloom_cols", [])}
+        eq_stats = {c: v for c, v in eq.items() if c not in pcols}
         keep = []
         for d in dirs:
             stats = (self._staging_stats(os.path.dirname(d))
                      .get(os.path.basename(d), {}))
-            ok = True
-            for c, v in eq.items():
-                if c in pcols:
-                    continue
-                if c in probes and \
-                        not self._bloom_admits(stats, c, probes[c]):
-                    ok = False
-                    break
-                st = stats.get(c)
-                b = self._bound(v)
-                try:
-                    if isinstance(st, (list, tuple)) and \
-                            (b < st[0] or b > st[1]):
-                        ok = False  # bounds disprove the equality
-                        break
-                except TypeError:
-                    pass  # probe/stat type mismatch: fail open —
-                    # the exact filter still applies Spark's cast
-            if ok:
-                for c, vs in isin.items():
-                    if c in pcols:
-                        continue  # pruned at the manifest above
-                    admits_any = False
-                    for i, v in enumerate(vs):
-                        if c in in_probes and not self._bloom_admits(
-                                stats, c, in_probes[c][i]):
-                            continue  # this value provably absent
-                        st = stats.get(c)
-                        b = self._bound(v)
-                        try:
-                            if isinstance(st, (list, tuple)) and \
-                                    (b < st[0] or b > st[1]):
-                                continue  # bounds disprove this value
-                        except TypeError:
-                            pass  # type mismatch: fail open
-                        admits_any = True
-                        break
-                    if not admits_any:
-                        ok = False  # every IN value disproved
-                        break
-            if ok:
-                for c, (lo, hi) in ranges.items():
-                    st = stats.get(c)
-                    if not isinstance(st, (list, tuple)):
-                        continue  # fail-open: no bounds, no skip
-                    lo_b, hi_b = self._bound(lo), self._bound(hi)
-                    try:
-                        if (lo_b is not None and st[1] < lo_b) or \
-                                (hi_b is not None and st[0] > hi_b):
-                            ok = False
-                            break
-                    except TypeError:
-                        continue  # type mismatch: fail open
-            if ok:
+            if any(not self._bloom_admits(stats, c, p)
+                   for c, p in probes.items()):
+                continue  # a Bloom filter disproves an equality
+            # IN on a non-partition column: only the values its Bloom
+            # filter admits go on to the bounds check
+            in_stats = {c: [v for i, v in enumerate(vs)
+                            if c not in in_probes or self._bloom_admits(
+                                stats, c, in_probes[c][i])]
+                        for c, vs in isin.items() if c not in pcols}
+            if any(not vs for vs in in_stats.values()):
+                continue  # every IN value provably absent
+            if not self._stats_disprove(stats, eq_stats, ranges, in_stats):
                 keep.append(d)
         return keep
 
@@ -1728,21 +1693,24 @@ class PartitionedTable:
                     fl = files[d]
                     n_adm = total if fl is None else len(fl)
                     status = "scanned"
-                n_tomb = len(man.get("tombstones", {}).get(d, []))
-                masked = self._masked_count(man, d)
-                nrows = st.get("__num_rows")
-                frac = (round(masked / nrows, 6)
-                        if isinstance(masked, int)
-                        and isinstance(nrows, int) and nrows else
-                        (0.0 if masked == 0 else None))
                 out.append({**(extra or {}),
                             "key": key, "dir": d, "status": status,
                             "files_total": total,
                             "files_admitted": n_adm,
-                            "tombstones": n_tomb,
-                            "masked_rows": masked,
-                            "masked_fraction": frac})
+                            **self._debt(man, d, st.get("__num_rows"))})
         return out
+
+    def _debt(self, man: dict, d: str, nrows) -> dict:
+        """Directory ``d``'s tombstone debt: live predicate count,
+        recorded DV cardinality (None = unknown) and its fraction of the
+        footer row count ``nrows``."""
+        masked = self._masked_count(man, d)
+        frac = (round(masked / nrows, 6)
+                if isinstance(masked, int)
+                and isinstance(nrows, int) and nrows else
+                (0.0 if masked == 0 else None))
+        return {"tombstones": len(man.get("tombstones", {}).get(d, [])),
+                "masked_rows": masked, "masked_fraction": frac}
 
     def tombstone_debt(self, version: int | None = None) -> list[dict]:
         """Per-directory soft-delete debt without any predicate —
@@ -1758,21 +1726,13 @@ class PartitionedTable:
         out = []
         for key, ds in man["parts"].items():
             for d in ds:
-                n_tomb = len(man.get("tombstones", {}).get(d, []))
-                masked = self._masked_count(man, d)
                 nrows = (self._staging_stats(os.path.dirname(d))
                          .get(os.path.basename(d), {})
                          .get("__num_rows"))
-                frac = (round(masked / nrows, 6)
-                        if isinstance(masked, int)
-                        and isinstance(nrows, int) and nrows else
-                        (0.0 if masked == 0 else None))
                 out.append({"key": key, "dir": d,
-                            "tombstones": n_tomb,
-                            "masked_rows": masked,
+                            **self._debt(man, d, nrows),
                             "rows_total": nrows
-                            if isinstance(nrows, int) else None,
-                            "masked_fraction": frac})
+                            if isinstance(nrows, int) else None})
         return out
 
     def skipping_report_any(self, branches: list,
@@ -1803,15 +1763,7 @@ class PartitionedTable:
             out.extend(self._report_rows(man, adm, files,
                                          extra={"branch": i}))
             adm_union |= adm
-            for d, fl in files.items():   # same union rule as the read
-                if d not in merged:
-                    merged[d] = None if fl is None else list(fl)
-                elif merged[d] is not None:
-                    if fl is None:
-                        merged[d] = None
-                    else:
-                        merged[d].extend(
-                            f for f in fl if f not in merged[d])
+            self._union_files(merged, files)  # same union as the read
         out.extend(self._report_rows(man, adm_union, merged,
                                      extra={"branch": "union"}))
         return out

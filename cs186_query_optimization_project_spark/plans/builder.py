@@ -3,16 +3,19 @@
 Re-expresses the reference's ``QueryPlan`` builder
 (``db/query/QueryPlan.java``): verbs only *record intent*
 (``where``/``join``/``select``/``groupBy``/``count``/``sum``/``average``,
-``QueryPlan.java:80–158``); ``execute()`` assembles the naive fixed pipeline
+``QueryPlan.java:80–158``); ``execute()`` renders the naive fixed pipeline
 scan → joins → wheres → group-by → select (``QueryPlan.java:168–184``) and
-``execute_optimal()`` runs the System-R search (``QueryPlan.java:193–226``).
+``execute_optimal()`` runs the System-R search (``QueryPlan.java:193–226``)
+first.
 
 Differences from the reference, by design:
 
-- The "physical plan" we emit is a Spark *logical* plan — Catalyst applies
-  predicate pushdown, column pruning and join selection regardless of the
-  verb order, so the naive and optimal paths return identical results and
-  differ only in declared join order + join-strategy hints.
+- The "physical plan" we emit is one Spark SQL statement — the join chain
+  with a hint per join strategy, values as named parameter markers and
+  the tables as frame arguments — which Catalyst analyzes once.  It
+  applies predicate pushdown, column pruning and join selection
+  regardless of the verb order, so the naive and optimal paths return
+  identical results and differ only in declared join order + join hints.
 - Name resolution follows the reference (dot-qualified ``alias.column``,
   unqualified names resolved against all tables in scope, ambiguity is an
   error — ``db/query/QueryOperator.java:109–156``) but is done eagerly at
@@ -31,7 +34,6 @@ from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
 from cs186_query_optimization_project_spark.errors import QueryPlanException
 from cs186_query_optimization_project_spark.predicates import (
@@ -48,13 +50,31 @@ from cs186_query_optimization_project_spark.predicates import (
 JOIN_STRATEGIES = ("auto", "broadcast", "broadcast_left", "merge",
                    "shuffle_hash", "shuffle_replicate_nl")
 
-_AGG_FUNCS = {
-    "count": F.count,
-    "sum": F.sum,
-    "avg": F.avg,
-    "min": F.min,
-    "max": F.max,
-}
+#: ``join(strategy=...)`` → the Spark SQL hint that names the joined
+#: relation ("broadcast_left" hints the accumulated left side instead)
+_HINTS = {"broadcast": "BROADCAST", "merge": "MERGE",
+          "shuffle_hash": "SHUFFLE_HASH",
+          "shuffle_replicate_nl": "SHUFFLE_REPLICATE_NL"}
+
+#: Spark's join-type spellings (``DataFrame.join(how=)``, underscores
+#: dropped) → SQL join keywords
+_JOIN_SQL = {"inner": "INNER", "cross": "CROSS",
+             "outer": "FULL OUTER", "full": "FULL OUTER",
+             "fullouter": "FULL OUTER",
+             "left": "LEFT OUTER", "leftouter": "LEFT OUTER",
+             "right": "RIGHT OUTER", "rightouter": "RIGHT OUTER",
+             "semi": "LEFT SEMI", "leftsemi": "LEFT SEMI",
+             "anti": "LEFT ANTI", "leftanti": "LEFT ANTI"}
+
+
+def _braces(text: str) -> str:
+    """Escape text for the frame formatter of ``spark.sql(**frames)``."""
+    return text.replace("{", "{{").replace("}", "}}")
+
+
+def _ident(name: str) -> str:
+    """A quoted SQL identifier."""
+    return "`" + _braces(name.replace("`", "``")) + "`"
 
 
 @dataclass(frozen=True)
@@ -67,9 +87,6 @@ class ColumnRef:
     @property
     def qualified(self) -> str:
         return f"{self.alias}.{self.column}"
-
-    def spark(self) -> Column:
-        return F.col(self.qualified)
 
 
 @dataclass(frozen=True)
@@ -88,11 +105,8 @@ class WhereClause:
     op: PredicateOperator
     value: Any
 
-    def condition(self) -> Column:
-        return self.op.apply(self.ref.spark(), self.value)
-
-    def sql(self) -> str:
-        return self.op.sql(self.ref.qualified, self.value)
+    def sql(self, column_sql: str, bind) -> str:
+        return self.op.sql(column_sql, self.value, bind)
 
 
 @dataclass(frozen=True)
@@ -104,49 +118,28 @@ class AggClause:
     #: result is independent of partitioning/summation order (needed for
     #: bit-exact oracle comparison; float addition is not associative)
     exact: bool = False
-    #: expression aggregate (additive): an arbitrary Column, e.g.
-    #: ``sum(l_extendedprice * (1 - l_discount))`` — TPC-H-style revenue
-    expr: Column | None = None
+    #: expression aggregate (additive): SQL text of an arbitrary Column,
+    #: e.g. ``sum(l_extendedprice * (1 - l_discount))`` — TPC-H-style
+    #: revenue; braces are doubled for the frame formatter
+    expr: str | None = None
 
-    def spark(self) -> Column:
+    def sql(self, column_sql: str | None = None) -> str:
+        """The select item ``FUNC(arg) AS out`` — what the query runs,
+        with ``column_sql`` the FROM clause's reference to ``ref``, and
+        explain's ``agg:`` line, with ``alias.column``."""
         if self.expr is not None:
-            col = self.expr
+            arg = self.expr
         elif self.ref is None:
-            return F.count(F.lit(1)).alias(self.out)
+            arg = "*"
         else:
-            col = self.ref.spark()
-        if self.exact and self.func == "sum":
-            return F.sum(col.cast("decimal(18,4)")).cast("double") \
-                    .alias(self.out)
-        if self.exact and self.func == "avg":
-            return (F.sum(col.cast("decimal(18,4)")).cast("double")
-                    / F.count(col)).alias(self.out)
-        return _AGG_FUNCS[self.func](col).alias(self.out)
-
-    def sql(self) -> str:
-        if self.expr is not None:
-            arg = "<expr>"
+            arg = column_sql or self.ref.qualified
+        if self.exact and self.func in ("sum", "avg"):
+            item = f"CAST(SUM(CAST({arg} AS DECIMAL(18,4))) AS DOUBLE)"
+            if self.func == "avg":
+                item += f" / COUNT({arg})"
         else:
-            arg = "*" if self.ref is None else self.ref.qualified
-        return f"{self.func.upper()}({arg}) AS {self.out}"
-
-
-_COL_OPS = {
-    PredicateOperator.EQUALS: lambda a, b: a == b,
-    PredicateOperator.NOT_EQUALS: lambda a, b: a != b,
-    PredicateOperator.LESS_THAN: lambda a, b: a < b,
-    PredicateOperator.LESS_THAN_EQUALS: lambda a, b: a <= b,
-    PredicateOperator.GREATER_THAN: lambda a, b: a > b,
-    PredicateOperator.GREATER_THAN_EQUALS: lambda a, b: a >= b,
-}
-
-
-def _col_predicate(lref: ColumnRef, op: PredicateOperator,
-                   rref: ColumnRef) -> Column:
-    if op not in _COL_OPS:
-        raise QueryPlanException(
-            f"where_columns supports comparison operators only, got {op.name}")
-    return _COL_OPS[op](lref.spark(), rref.spark())
+            item = f"{self.func.upper()}({arg})"
+        return f"{item} AS {_ident(self.out)}"
 
 
 @dataclass(frozen=True)
@@ -226,6 +219,9 @@ class Query:
         if strategy not in JOIN_STRATEGIES:
             raise QueryPlanException(
                 f"unknown join strategy '{strategy}'; one of {JOIN_STRATEGIES}")
+        if how.lower().replace("_", "") not in _JOIN_SQL:
+            raise QueryPlanException(
+                f"unknown join type '{how}'; one of {sorted(_JOIN_SQL)}")
         a = alias or table
         if a in {s for s, _, _ in self._scope()}:
             raise QueryPlanException(
@@ -280,6 +276,9 @@ class Query:
             raise QueryPlanException(
                 "where_columns is outside the reference predicate surface "
                 "(strict mode)")
+        if op not in REFERENCE_OPS:
+            raise QueryPlanException(
+                f"where_columns supports comparison operators only, got {op.name}")
         self.col_wheres.append(
             (self.resolve(left_column), op, self.resolve(right_column)))
         return self
@@ -314,7 +313,9 @@ class Query:
         """SUM over a column name or an arbitrary Column expression
         (expression form is additive — TPC-H revenue style)."""
         if isinstance(column, Column):
-            self.aggs.append(AggClause("sum", None, out, exact, expr=column))
+            text = self.db.spark._jsparkSession.expression(column._jc).sql()
+            self.aggs.append(
+                AggClause("sum", None, out, exact, expr=_braces(text)))
         else:
             self.aggs.append(
                 AggClause("sum", self.resolve(column), out, exact))
@@ -372,101 +373,142 @@ class Query:
     # ------------------------------------------------------------------ #
     # assembly
     # ------------------------------------------------------------------ #
-    def _base_df(self, alias: str, table: str) -> DataFrame:
-        return self.db.table(table).alias(alias)
-
-    def _apply_strategy(self, df: DataFrame, strategy: str) -> DataFrame:
-        if strategy == "auto":
-            return df
-        if strategy == "broadcast":
-            return F.broadcast(df)
-        return df.hint(strategy)
-
     def _assemble(self, plan=None) -> DataFrame:
-        """Build the DataFrame: joins → wheres → group/agg → having →
-        select → distinct → order → limit (the reference's fixed pipeline,
-        ``QueryPlan.execute`` order, plus the additive tail).
+        """Render the whole intent as one SQL statement and analyze it
+        once: ``SELECT [hints] [DISTINCT] … FROM`` the left-deep join chain
+        ``WHERE … GROUP BY … HAVING … ORDER BY … LIMIT`` — the reference's
+        fixed pipeline (``QueryPlan.execute`` order) plus the additive
+        tail.  Each table is a frame argument of ``spark.sql``, and each
+        value a named parameter marker.
 
         With ``plan`` (optimizer.PlannedQuery) the join chain follows the
-        DP-chosen base table + left-deep step order and applies each step's
-        strategy hint; otherwise the declared order is used verbatim.
+        DP-chosen base table + left-deep step order and hints each step's
+        strategy; otherwise the declared order is used verbatim.  Join
+        hints name relations, so a ``broadcast_left`` step wraps the
+        accumulated left side as a derived table and hints that.
 
-        Predicates on the right side of a semi/anti join are pushed into
-        the right input *before* the join — those columns do not exist in
-        the join output (Spark semi/anti joins emit left columns only), so
-        filter-after-join would be unresolvable.  All other predicates keep
-        the reference's filter-after-join placement (for outer joins that
-        is the SQL WHERE semantic).
+        Predicates on the right side of a semi/anti join go into its ON
+        clause, which Catalyst pushes into the right input — those columns
+        do not exist in the join output (semi/anti joins emit left columns
+        only).  All other predicates keep the reference's filter-after-join
+        placement (for outer joins that is the SQL WHERE semantic).
         """
-        semi_anti = {"semi", "left_semi", "leftsemi", "anti", "left_anti",
-                     "leftanti"}
-        pushed_aliases = {j.alias for j in self.joins if j.how in semi_anti}
-        pushed = [w for w in self.wheres if w.ref.alias in pushed_aliases]
+        frames: dict[str, str] = {}  # table -> frame argument name
+        args: dict[str, Any] = {}
+        columns = {a: cols for a, _t, cols in self._scope()}
 
-        def right_df(alias: str, table: str, strategy: str) -> DataFrame:
-            right = self._base_df(alias, table)
-            for w in pushed:
-                if w.ref.alias == alias:
-                    right = right.filter(w.condition())
-            return self._apply_strategy(right, strategy)
+        def bind(value: Any) -> str:
+            args[f"p{len(args)}"] = value
+            return f":p{len(args) - 1}"
 
-        def do_join(df: DataFrame, alias: str, table: str, strategy: str,
-                    cond, how: str) -> DataFrame:
-            if strategy == "broadcast_left":
-                # the accumulated LEFT side is the small one; broadcast it
-                # and leave the big right side un-shuffled
-                return F.broadcast(df).join(
-                    right_df(alias, table, "auto"), cond, how)
-            return df.join(right_df(alias, table, strategy), cond, how)
+        def ref(r: ColumnRef) -> str:
+            if (r.alias, r.column) not in refs:
+                raise QueryPlanException(
+                    f"column '{r.qualified}' is not visible here (a semi/anti "
+                    f"join emits its left columns only)")
+            return refs[(r.alias, r.column)]
 
-        if plan is None:
-            df = self._base_df(self.base_alias, self.base_table)
-            for j in self.joins:
-                df = do_join(df, j.alias, j.table, j.strategy,
-                             j.left.spark() == j.right.spark(), j.how)
+        def relation(table: str, alias: str) -> tuple[str, dict]:
+            frame = frames.setdefault(table, f"t{len(frames)}")
+            return (f"{{{frame}}} AS {_ident(alias)}",
+                    {(alias, c): f"{_ident(alias)}.{_ident(c)}"
+                     for c in columns[alias]})
+
+        def hinted(hints: list[str]) -> str:
+            return f"/*+ {', '.join(hints)} */ " if hints else ""
+
+        head = plan or self
+        steps = self.joins if plan is None else plan.steps
+        # refs: each visible (alias, column) -> its SQL reference
+        source, refs = relation(head.base_table, head.base_alias)
+        hints: list[str] = []
+        pushed: set[str] = set()
+        for n, step in enumerate(steps):
+            kind = _JOIN_SQL[step.how.lower().replace("_", "")]
+            if step.strategy == "broadcast_left":
+                # project the left side under unique names, keeping each
+                # column's own name where no other visible column has it
+                names = [c for _a, c in refs]
+                items = []
+                for (a, c), sql in refs.items():
+                    out = c if names.count(c) == 1 else f"{a}.{c}"
+                    items.append(f"{sql} AS {_ident(out)}")
+                    refs[(a, c)] = f"{_ident(f'_l{n}')}.{_ident(out)}"
+                source = (f"(SELECT {hinted(hints)}{', '.join(items)} "
+                          f"FROM {source}) AS {_ident(f'_l{n}')}")
+                hints = [f"BROADCAST({_ident(f'_l{n}')})"]
+            elif step.strategy in _HINTS:
+                hints.append(f"{_HINTS[step.strategy]}({_ident(step.alias)})")
+            right, right_refs = relation(step.table, step.alias)
+            on = [f"{ref(step.left)} = "
+                  f"{right_refs[(step.right.alias, step.right.column)]}"]
+            if kind in ("LEFT SEMI", "LEFT ANTI"):
+                pushed.add(step.alias)
+                on += [w.sql(right_refs[(w.ref.alias, w.ref.column)], bind)
+                       for w in self.wheres if w.ref.alias == step.alias]
+            else:
+                refs.update(right_refs)
+            source += f" {kind} JOIN {right} ON {' AND '.join(on)}"
+
+        conds = [w.sql(ref(w.ref), bind) for w in self.wheres
+                 if w.ref.alias not in pushed]
+        conds += [f"{ref(lref)} {op.value} {ref(rref)}"
+                  for lref, op, rref in self.col_wheres]
+
+        grouped = bool(self.aggs or self.group_bys)
+        if grouped:
+            self._check_grouping()
+            keys = {(g.alias, g.column): ref(g) for g in self.group_bys}
+            picked = ([(keys[(s.ref.alias, s.ref.column)], s.out)
+                       for s in self.selects] if self.selects
+                      else [(ref(g), g.column) for g in self.group_bys])
+            outputs = {out: _ident(out) for _sql, out in picked}
         else:
-            df = self._base_df(plan.base_alias, plan.base_table)
-            for step in plan.steps:
-                df = do_join(df, step.alias, step.table, step.strategy,
-                             step.left.spark() == step.right.spark(),
-                             step.how)
+            picked = ([(ref(s.ref), s.out) for s in self.selects]
+                      if self.selects
+                      else [(sql, c) for (_a, c), sql in refs.items()])
+            outputs = {out: sql for sql, out in picked}
+        items = [f"{sql} AS {_ident(out)}" for sql, out in picked]
+        items += [a.sql(a.ref and ref(a.ref)) for a in self.aggs]
+        outputs.update({a.out: _ident(a.out) for a in self.aggs})
 
-        for w in self.wheres:
-            if w in pushed:
-                continue
-            df = df.filter(w.condition())
-
-        for lref, op, rref in self.col_wheres:
-            df = df.filter(_col_predicate(lref, op, rref))
-
-        if self.aggs or self.group_bys:
-            df = self._apply_aggregation(df)
-        elif self.selects:
-            df = df.select([s.ref.spark().alias(s.out) for s in self.selects])
-
+        havings = []
         for name, op, value in self.havings:
-            df = df.filter(op.apply(F.col(name), value))
+            if name not in outputs:
+                raise QueryPlanException(
+                    f"having: no output column '{name}' "
+                    f"(outputs: {sorted(outputs)})")
+            havings.append(op.sql(outputs[name], value, bind))
+        if not grouped:  # a filter on a projected column, before DISTINCT
+            conds, havings = conds + havings, []
 
-        if self.distinct_flag:
-            df = df.distinct()
+        text = (f"SELECT {hinted(hints)}"
+                f"{'DISTINCT ' if self.distinct_flag else ''}"
+                f"{', '.join(items)} FROM {source}")
+        if conds:
+            text += f" WHERE {' AND '.join(conds)}"
+        if self.group_bys:
+            text += f" GROUP BY {', '.join(keys.values())}"
+        if havings:
+            text += f" HAVING {' AND '.join(havings)}"
         if self.order_bys:
-            df = df.orderBy(*[
-                (F.col(self._order_name(c)).asc() if asc
-                 else F.col(self._order_name(c)).desc())
-                for c, asc in self.order_bys])
+            text += " ORDER BY " + ", ".join(
+                f"{self._order_sql(c, ref)} {'ASC' if asc else 'DESC'}"
+                for c, asc in self.order_bys)
         if self.limit_n is not None:
-            df = df.limit(self.limit_n)
-        return df
+            text += f" LIMIT {int(self.limit_n)}"
+        return self.db.spark.sql(
+            text, args=args, **{f: self.db.table(t) for t, f in frames.items()})
 
-    def _order_name(self, column: str) -> str:
+    def _order_sql(self, column: str, ref) -> str:
         """Order-by may target an agg/select output name or a scope column."""
         output_names = {s.out for s in self.selects} | {a.out for a in self.aggs}
         output_names |= {g.column for g in self.group_bys}
         if column in output_names:
-            return column
-        return self.resolve(column).qualified
+            return _ident(column)
+        return ref(self.resolve(column))
 
-    def _apply_aggregation(self, df: DataFrame) -> DataFrame:
+    def _check_grouping(self) -> None:
         if not self.aggs:
             raise QueryPlanException(
                 "group_by requires at least one aggregate "
@@ -480,34 +522,6 @@ class Query:
                     f"selected column '{s.ref.qualified}' is neither grouped "
                     f"nor aggregated (reference constraint, "
                     f"QueryPlan.java:544–547)")
-        agg_cols = [a.spark() for a in self.aggs]
-        if self.group_bys:
-            # alias each group key positionally: two tables' same-named
-            # columns (a.name, b.name) must stay distinct through the
-            # aggregate — bare g.spark() would emit two output columns
-            # both called 'name' and the projection below would raise
-            # AMBIGUOUS_REFERENCE
-            out = df.groupBy([g.spark().alias(f"__g{i}")
-                              for i, g in enumerate(self.group_bys)]
-                             ).agg(*agg_cols)
-        else:
-            out = df.agg(*agg_cols)
-
-        def group_slot(alias: str, column: str) -> str:
-            for i, g in enumerate(self.group_bys):
-                if (g.alias, g.column) == (alias, column):
-                    return f"__g{i}"
-            raise QueryPlanException(
-                f"'{alias}.{column}' is not a grouped column")
-
-        # project to selected group columns (with output aliases) + aggs
-        if self.selects:
-            keep = [F.col(group_slot(s.ref.alias, s.ref.column))
-                    .alias(s.out) for s in self.selects]
-        else:
-            keep = [F.col(f"__g{i}").alias(g.column)
-                    for i, g in enumerate(self.group_bys)]
-        return out.select(*keep, *[F.col(a.out) for a in self.aggs])
 
     # ------------------------------------------------------------------ #
     # execution entry points

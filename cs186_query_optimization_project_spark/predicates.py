@@ -11,10 +11,7 @@ IS NULL) as *additive* members — the parity subset is ``REFERENCE_OPS``.
 from __future__ import annotations
 
 import enum
-from typing import Any
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from typing import Any, Callable
 
 
 class PredicateOperator(enum.Enum):
@@ -32,61 +29,25 @@ class PredicateOperator(enum.Enum):
     IS_NULL = "is null"
     IS_NOT_NULL = "is not null"
 
-    def apply(self, column: Column, value: Any = None) -> Column:
-        """Build the Spark boolean Column for ``column <op> value``."""
-        if self is PredicateOperator.EQUALS:
-            return column == F.lit(value)
-        if self is PredicateOperator.NOT_EQUALS:
-            return column != F.lit(value)
-        if self is PredicateOperator.LESS_THAN:
-            return column < F.lit(value)
-        if self is PredicateOperator.LESS_THAN_EQUALS:
-            return column <= F.lit(value)
-        if self is PredicateOperator.GREATER_THAN:
-            return column > F.lit(value)
-        if self is PredicateOperator.GREATER_THAN_EQUALS:
-            return column >= F.lit(value)
-        if self is PredicateOperator.IN:
-            return column.isin(list(value))
-        if self is PredicateOperator.NOT_IN:
-            return ~column.isin(list(value))
-        if self is PredicateOperator.BETWEEN:
-            lo, hi = value
-            return column.between(F.lit(lo), F.lit(hi))
-        if self is PredicateOperator.LIKE:
-            return column.like(value)
-        if self is PredicateOperator.IS_NULL:
-            return column.isNull()
-        if self is PredicateOperator.IS_NOT_NULL:
-            return column.isNotNull()
-        raise ValueError(f"unhandled predicate operator {self!r}")
-
-    def sql(self, column_sql: str, value: Any = None) -> str:
-        """Render as an ANSI SQL predicate string (for explain output)."""
-        def quote(v: Any) -> str:
-            if isinstance(v, str):
-                escaped = v.replace("'", "''")
-                return f"'{escaped}'"
-            if isinstance(v, bool):
-                return "TRUE" if v else "FALSE"
-            return str(v)
-
+    def sql(self, column_sql: str, value: Any,
+            bind: Callable[[Any], str]) -> str:
+        """Render ``column_sql <op> value`` as a Spark SQL predicate.
+        ``bind`` turns each value into a parameter marker (``:p0``), so
+        values are typed as ``F.lit`` types them and never enter the
+        text."""
         if self in _SIMPLE_OPS:
-            return f"{column_sql} {self.value} {quote(value)}"
-        if self is PredicateOperator.IN:
-            return f"{column_sql} IN ({', '.join(quote(v) for v in value)})"
-        if self is PredicateOperator.NOT_IN:
-            return f"{column_sql} NOT IN ({', '.join(quote(v) for v in value)})"
+            return f"{column_sql} {self.value} {bind(value)}"
+        if self in (PredicateOperator.IN, PredicateOperator.NOT_IN):
+            if not value:  # SQL has no empty IN list; Spark's IN () is false
+                return "FALSE" if self is PredicateOperator.IN else "TRUE"
+            markers = ", ".join(bind(v) for v in value)
+            return f"{column_sql} {self.value.upper()} ({markers})"
         if self is PredicateOperator.BETWEEN:
             lo, hi = value
-            return f"{column_sql} BETWEEN {quote(lo)} AND {quote(hi)}"
+            return f"{column_sql} BETWEEN {bind(lo)} AND {bind(hi)}"
         if self is PredicateOperator.LIKE:
-            return f"{column_sql} LIKE {quote(value)}"
-        if self is PredicateOperator.IS_NULL:
-            return f"{column_sql} IS NULL"
-        if self is PredicateOperator.IS_NOT_NULL:
-            return f"{column_sql} IS NOT NULL"
-        raise ValueError(f"unhandled predicate operator {self!r}")
+            return f"{column_sql} LIKE {bind(value)}"
+        return f"{column_sql} {self.value.upper()}"
 
 
 _SIMPLE_OPS = {

@@ -246,6 +246,87 @@ def test_join_strategy_hints_same_result(db):
         assert got == base, strategy
 
 
+def test_join_strategy_hints_reach_physical_plan(db):
+    """Each pinned strategy is the join operator of the executed plan.
+    nation is tiny, so Spark would broadcast it unhinted: a plain
+    BroadcastHashJoin would not show that a hint arrived."""
+    def plan(strategy):
+        df = (db.query("lineitem")
+              .join("nation", "l_suppkey", "n_nationkey", strategy=strategy)
+              .select("n_name").execute())
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    for strategy, build in (("broadcast", "BuildRight"),
+                            ("broadcast_left", "BuildLeft")):
+        p = plan(strategy)
+        assert "BroadcastHashJoin" in p and build in p, (strategy, p)
+        # the tree prints the left child first: lineitem stays left
+        assert p.index("lineitem.parquet") < p.index("nation.parquet"), p
+    assert "SortMergeJoin" in plan("merge")
+    assert "ShuffledHashJoin" in plan("shuffle_hash")
+
+
+_ODD = ["it's", "a\\b", "{t0}", "}{", "{{x}}", ":p0", "plain"]
+
+
+def test_where_values_and_text_reach_spark_unmangled(spark):
+    """Dates, decimals, and strings holding quotes, backslashes and
+    braces survive as predicate values (=, IN, LIKE, BETWEEN) and inside
+    an expression aggregate's string literal."""
+    import datetime
+    from decimal import Decimal
+
+    from pyspark.sql import functions as F
+
+    from cs186_query_optimization_project_spark import Database
+
+    data = [(s, datetime.date(2020, 1, i + 1), Decimal(f"{i}.25"))
+            for i, s in enumerate(_ODD)]
+    db = Database(spark)
+    db.register_dataframe("odd", spark.createDataFrame(
+        data, "s string, d date, x decimal(10,2)"))
+
+    def lit(s):
+        return "'" + s.replace("'", "''") + "'"
+
+    values = ", ".join(f"({lit(s)}, DATE '{d}', CAST({x} AS DECIMAL(10,2)))"
+                       for s, d, x in data)
+    table = f"(VALUES {values}) AS odd(s, d, x)"
+    cases = [
+        (("s", EQ, "it's"), "s = 'it''s'"),
+        (("s", EQ, "a\\b"), "s = 'a\\b'"),
+        (("s", EQ, "{t0}"), "s = '{t0}'"),
+        (("s", NEQ, ":p0"), "s <> ':p0'"),
+        (("s", PredicateOperator.IN, ["}{", "{{x}}", "it's", "a\\b"]),
+         "s IN ('}{', '{{x}}', 'it''s', 'a\\b')"),
+        (("s", PredicateOperator.LIKE, "%{%"), "s LIKE '%{%'"),
+        (("s", PredicateOperator.LIKE, "%'%"), "s LIKE '%''%'"),
+        (("d", EQ, datetime.date(2020, 1, 3)), "d = DATE '2020-01-03'"),
+        (("d", GTE, datetime.date(2020, 1, 5)), "d >= DATE '2020-01-05'"),
+        (("x", EQ, Decimal("2.25")), "x = 2.25"),
+        (("x", PredicateOperator.BETWEEN, (Decimal("1.00"), Decimal("3.50"))),
+         "x BETWEEN 1.00 AND 3.50"),
+    ]
+    for (col, op, value), pred in cases:
+        got = rows(db.query("odd").where(col, op, value).execute())
+        want = duck_rows(f"SELECT * FROM {table} WHERE {pred}")
+        assert got == want and got, (col, op, value)
+
+    picked = F.when(F.col("s").isin("{t0}", "}{", "it's"), F.col("x")) \
+        .otherwise(F.lit(0))
+    got = rows(db.query("odd").sum(picked, out="total", exact=True)
+               .execute())
+    assert got == duck_rows(
+        "SELECT CAST(SUM(CAST(CASE WHEN s IN ('{t0}', '}{', 'it''s') "
+        f"THEN x ELSE 0 END AS DECIMAL(18,4))) AS DOUBLE) FROM {table}")
+
+
+def test_having_unknown_name_is_plan_error(db):
+    q = (db.query("orders").group_by("o_custkey").count()
+         .having("cnt", GTE, 5))
+    with pytest.raises(QueryPlanException, match="countAgg"):
+        q.execute()
+
 def test_explain_shapes(db):
     q = (db.query("customer")
          .join("orders", "c_custkey", "o_custkey")

@@ -30,8 +30,10 @@ Differences from the reference, by design:
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass
-from typing import Any
+from operator import attrgetter
+from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame
 
@@ -57,14 +59,18 @@ _HINTS = {"broadcast": "BROADCAST", "merge": "MERGE",
           "shuffle_replicate_nl": "SHUFFLE_REPLICATE_NL"}
 
 #: Spark's join-type spellings (``DataFrame.join(how=)``, underscores
-#: dropped) → SQL join keywords
-_JOIN_SQL = {"inner": "INNER", "cross": "CROSS",
-             "outer": "FULL OUTER", "full": "FULL OUTER",
-             "fullouter": "FULL OUTER",
-             "left": "LEFT OUTER", "leftouter": "LEFT OUTER",
-             "right": "RIGHT OUTER", "rightouter": "RIGHT OUTER",
-             "semi": "LEFT SEMI", "leftsemi": "LEFT SEMI",
-             "anti": "LEFT ANTI", "leftanti": "LEFT ANTI"}
+#: dropped) → the one spelling a ``JoinClause`` keeps
+_JOIN_TYPES = {"inner": "inner", "cross": "cross",
+               "outer": "full", "full": "full", "fullouter": "full",
+               "left": "left", "leftouter": "left",
+               "right": "right", "rightouter": "right",
+               "semi": "semi", "leftsemi": "semi",
+               "anti": "anti", "leftanti": "anti"}
+
+#: ``JoinClause.how`` → SQL join keywords
+_JOIN_SQL = {"inner": "INNER", "cross": "CROSS", "full": "FULL OUTER",
+             "left": "LEFT OUTER", "right": "RIGHT OUTER",
+             "semi": "LEFT SEMI", "anti": "LEFT ANTI"}
 
 
 def _braces(text: str) -> str:
@@ -74,7 +80,7 @@ def _braces(text: str) -> str:
 
 def _ident(name: str) -> str:
     """A quoted SQL identifier."""
-    return "`" + _braces(name.replace("`", "``")) + "`"
+    return "`" + name.replace("`", "``") + "`"
 
 
 @dataclass(frozen=True)
@@ -95,7 +101,7 @@ class JoinClause:
     alias: str
     left: ColumnRef
     right: ColumnRef
-    how: str = "inner"
+    how: str = "inner"  # a key of _JOIN_SQL
     strategy: str = "auto"
 
 
@@ -118,21 +124,24 @@ class AggClause:
     #: result is independent of partitioning/summation order (needed for
     #: bit-exact oracle comparison; float addition is not associative)
     exact: bool = False
-    #: expression aggregate (additive): SQL text of an arbitrary Column,
-    #: e.g. ``sum(l_extendedprice * (1 - l_discount))`` — TPC-H-style
-    #: revenue; braces are doubled for the frame formatter
-    expr: str | None = None
+    #: expression aggregate (additive): the SQL text of an arbitrary
+    #: Column split around its resolved column references, e.g.
+    #: ``sum(l_extendedprice * (1 - l_discount))`` — TPC-H-style revenue
+    expr: tuple[str | ColumnRef, ...] | None = None
 
-    def sql(self, column_sql: str | None = None) -> str:
-        """The select item ``FUNC(arg) AS out`` — what the query runs,
-        with ``column_sql`` the FROM clause's reference to ``ref``, and
-        explain's ``agg:`` line, with ``alias.column``."""
+    def sql(self, ref: Callable[[ColumnRef], str] = attrgetter("qualified")
+            ) -> str:
+        """The select item ``FUNC(arg) AS out``, with ``ref`` rendering
+        each column reference: what the query runs, with the FROM
+        clause's references, and explain's ``agg:`` line, with
+        ``alias.column``."""
         if self.expr is not None:
-            arg = self.expr
+            arg = "".join(p if isinstance(p, str) else ref(p)
+                          for p in self.expr)
         elif self.ref is None:
             arg = "*"
         else:
-            arg = column_sql or self.ref.qualified
+            arg = ref(self.ref)
         if self.exact and self.func in ("sum", "avg"):
             item = f"CAST(SUM(CAST({arg} AS DECIMAL(18,4))) AS DOUBLE)"
             if self.func == "avg":
@@ -219,9 +228,10 @@ class Query:
         if strategy not in JOIN_STRATEGIES:
             raise QueryPlanException(
                 f"unknown join strategy '{strategy}'; one of {JOIN_STRATEGIES}")
-        if how.lower().replace("_", "") not in _JOIN_SQL:
+        kind = _JOIN_TYPES.get(how.lower().replace("_", ""))
+        if kind is None:
             raise QueryPlanException(
-                f"unknown join type '{how}'; one of {sorted(_JOIN_SQL)}")
+                f"unknown join type '{how}'; one of {sorted(_JOIN_TYPES)}")
         a = alias or table
         if a in {s for s, _, _ in self._scope()}:
             raise QueryPlanException(
@@ -244,7 +254,7 @@ class Query:
             raise QueryPlanException(
                 f"join right column '{right_column}' not in table '{table}'")
         self.joins.append(JoinClause(table, a, left, ColumnRef(a, rname),
-                                     how, strategy))
+                                     kind, strategy))
         return self
 
     def where(self, column: str, op: PredicateOperator | str,
@@ -313,9 +323,8 @@ class Query:
         """SUM over a column name or an arbitrary Column expression
         (expression form is additive — TPC-H revenue style)."""
         if isinstance(column, Column):
-            text = self.db.spark._jsparkSession.expression(column._jc).sql()
-            self.aggs.append(
-                AggClause("sum", None, out, exact, expr=_braces(text)))
+            self.aggs.append(AggClause("sum", None, out, exact,
+                                       expr=self._expression(column)))
         else:
             self.aggs.append(
                 AggClause("sum", self.resolve(column), out, exact))
@@ -331,6 +340,32 @@ class Query:
         return self
 
     avg = average
+
+    def _expression(self, column: Column) -> tuple[str | ColumnRef, ...]:
+        """A Column's SQL text split around its column references, each
+        resolved in scope, so the query renders them as it renders every
+        other clause's columns (a ``broadcast_left`` step renames them)."""
+        jvm = self.db.spark._jvm
+        expr = self.db.spark._jsparkSession.expression(column._jc)
+        text = expr.sql()
+        # a placeholder name that nothing in the text spells
+        mark = "__ref"
+        while mark in text:
+            mark += "_"
+        marks = jvm.java.util.HashMap()  # attribute -> placeholder
+        refs: list[ColumnRef] = []
+        leaves = expr.collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if leaf.nodeName() == "UnresolvedAttribute":
+                refs.append(self.resolve(leaf.nameParts().mkString(".")))
+                marks.put(leaf, leaf.withName(f"{mark}{len(refs) - 1}"))
+        if refs:  # a Scala Map is the PartialFunction transformUp takes
+            rule = jvm.PythonUtils.toScalaMap(marks)
+            text = expr.transformUp(rule).sql()
+        parts = re.split(rf"{mark}(\d+)", text)
+        return tuple(p if i % 2 == 0 else refs[int(p)]
+                     for i, p in enumerate(parts))
 
     # ------------------------------------------------------------------ #
     # verbs — additive (beyond-reference, SURVEY.md §2.3–2.5)
@@ -379,7 +414,8 @@ class Query:
         ``WHERE … GROUP BY … HAVING … ORDER BY … LIMIT`` — the reference's
         fixed pipeline (``QueryPlan.execute`` order) plus the additive
         tail.  Each table is a frame argument of ``spark.sql``, and each
-        value a named parameter marker.
+        value a named parameter marker; braces in every other piece of
+        the text are doubled for the frame formatter.
 
         With ``plan`` (optimizer.PlannedQuery) the join chain follows the
         DP-chosen base table + left-deep step order and hints each step's
@@ -410,7 +446,7 @@ class Query:
 
         def relation(table: str, alias: str) -> tuple[str, dict]:
             frame = frames.setdefault(table, f"t{len(frames)}")
-            return (f"{{{frame}}} AS {_ident(alias)}",
+            return (f"{{{frame}}} AS {_braces(_ident(alias))}",
                     {(alias, c): f"{_ident(alias)}.{_ident(c)}"
                      for c in columns[alias]})
 
@@ -424,19 +460,20 @@ class Query:
         hints: list[str] = []
         pushed: set[str] = set()
         for n, step in enumerate(steps):
-            kind = _JOIN_SQL[step.how.lower().replace("_", "")]
+            kind = _JOIN_SQL[step.how]
             if step.strategy == "broadcast_left":
                 # project the left side under unique names, keeping each
                 # column's own name where no other visible column has it
                 names = [c for _a, c in refs]
+                derived = _ident(f"_l{n}")
                 items = []
                 for (a, c), sql in refs.items():
                     out = c if names.count(c) == 1 else f"{a}.{c}"
                     items.append(f"{sql} AS {_ident(out)}")
-                    refs[(a, c)] = f"{_ident(f'_l{n}')}.{_ident(out)}"
-                source = (f"(SELECT {hinted(hints)}{', '.join(items)} "
-                          f"FROM {source}) AS {_ident(f'_l{n}')}")
-                hints = [f"BROADCAST({_ident(f'_l{n}')})"]
+                    refs[(a, c)] = f"{derived}.{_ident(out)}"
+                source = (f"(SELECT {_braces(hinted(hints) + ', '.join(items))}"
+                          f" FROM {source}) AS {derived}")
+                hints = [f"BROADCAST({derived})"]
             elif step.strategy in _HINTS:
                 hints.append(f"{_HINTS[step.strategy]}({_ident(step.alias)})")
             right, right_refs = relation(step.table, step.alias)
@@ -448,7 +485,7 @@ class Query:
                        for w in self.wheres if w.ref.alias == step.alias]
             else:
                 refs.update(right_refs)
-            source += f" {kind} JOIN {right} ON {' AND '.join(on)}"
+            source += f" {kind} JOIN {right} ON {_braces(' AND '.join(on))}"
 
         conds = [w.sql(ref(w.ref), bind) for w in self.wheres
                  if w.ref.alias not in pushed]
@@ -469,7 +506,7 @@ class Query:
                       else [(sql, c) for (_a, c), sql in refs.items()])
             outputs = {out: sql for sql, out in picked}
         items = [f"{sql} AS {_ident(out)}" for sql, out in picked]
-        items += [a.sql(a.ref and ref(a.ref)) for a in self.aggs]
+        items += [a.sql(ref) for a in self.aggs]
         outputs.update({a.out: _ident(a.out) for a in self.aggs})
 
         havings = []
@@ -482,23 +519,25 @@ class Query:
         if not grouped:  # a filter on a projected column, before DISTINCT
             conds, havings = conds + havings, []
 
-        text = (f"SELECT {hinted(hints)}"
+        head = (f"SELECT {hinted(hints)}"
                 f"{'DISTINCT ' if self.distinct_flag else ''}"
-                f"{', '.join(items)} FROM {source}")
+                f"{', '.join(items)}")
+        tail = ""
         if conds:
-            text += f" WHERE {' AND '.join(conds)}"
+            tail += f" WHERE {' AND '.join(conds)}"
         if self.group_bys:
-            text += f" GROUP BY {', '.join(keys.values())}"
+            tail += f" GROUP BY {', '.join(keys.values())}"
         if havings:
-            text += f" HAVING {' AND '.join(havings)}"
+            tail += f" HAVING {' AND '.join(havings)}"
         if self.order_bys:
-            text += " ORDER BY " + ", ".join(
+            tail += " ORDER BY " + ", ".join(
                 f"{self._order_sql(c, ref)} {'ASC' if asc else 'DESC'}"
                 for c, asc in self.order_bys)
         if self.limit_n is not None:
-            text += f" LIMIT {int(self.limit_n)}"
+            tail += f" LIMIT {int(self.limit_n)}"
         return self.db.spark.sql(
-            text, args=args, **{f: self.db.table(t) for t, f in frames.items()})
+            f"{_braces(head)} FROM {source}{_braces(tail)}", args=args,
+            **{f: self.db.table(t) for t, f in frames.items()})
 
     def _order_sql(self, column: str, ref) -> str:
         """Order-by may target an agg/select output name or a scope column."""

@@ -287,9 +287,9 @@ def _declared_order_plan(query: "Query",
             C.table_pages(ap.stats.num_records, ap.stats.row_bytes))
         v_out = ap.stats.columns[j.right.column].distinct
         rows = max(int(rows * ap.stats.num_records / max(v_out, 1)), 1)
-        if j.how in ("left", "left_outer", "full", "full_outer"):
+        if j.how in ("left", "full"):
             rows = max(rows, access[query.base_alias].stats.num_records)
-        if j.how in ("semi", "left_semi", "anti", "left_anti"):
+        if j.how in ("semi", "anti"):
             rows = access[query.base_alias].stats.num_records
         width += ap.stats.row_bytes
         total += jcost + ap.cost_pages

@@ -314,8 +314,10 @@ def test_where_values_and_text_reach_spark_unmangled(spark):
 
     picked = F.when(F.col("s").isin("{t0}", "}{", "it's"), F.col("x")) \
         .otherwise(F.lit(0))
-    got = rows(db.query("odd").sum(picked, out="total", exact=True)
-               .execute())
+    q = db.query("odd").sum(picked, out="to{t}al", exact=True)
+    # explain's agg: line is the SQL that runs, braces as written
+    assert "'{t0}'" in q.explain() and "`to{t}al`" in q.explain()
+    got = rows(q.execute())
     assert got == duck_rows(
         "SELECT CAST(SUM(CAST(CASE WHEN s IN ('{t0}', '}{', 'it''s') "
         f"THEN x ELSE 0 END AS DECIMAL(18,4))) AS DOUBLE) FROM {table}")
@@ -326,6 +328,42 @@ def test_having_unknown_name_is_plan_error(db):
          .having("cnt", GTE, 5))
     with pytest.raises(QueryPlanException, match="countAgg"):
         q.execute()
+
+
+def test_broadcast_left_qualified_expression_aggregate(db):
+    """broadcast_left wraps the left side as a derived table, which hides
+    the aliases inside it: an expression aggregate's qualified columns
+    must still resolve, as in a self-join where they cannot go bare."""
+    from pyspark.sql import functions as F
+    mix = F.col("a.n_nationkey") * 100 + F.col("b.n_nationkey")
+    want = duck_rows(
+        "SELECT r_name, SUM(a.n_nationkey * 100 + b.n_nationkey) AS s "
+        "FROM nation a JOIN nation b ON a.n_regionkey = b.n_regionkey "
+        "JOIN region ON b.n_regionkey = r_regionkey GROUP BY r_name")
+    for strategy in ("auto", "broadcast_left"):
+        q = (db.query("nation", alias="a")
+             .join("nation", "a.n_regionkey", "n_regionkey", alias="b",
+                   strategy=strategy)
+             .join("region", "b.n_regionkey", "r_regionkey",
+                   strategy=strategy)
+             .group_by("r_name").sum(mix, out="s"))
+        assert rows(q.execute()) == want, strategy
+    with pytest.raises(QueryPlanException, match="no table aliased 'c'"):
+        db.query("nation", alias="a").sum(F.col("c.n_nationkey"))
+
+
+def test_join_type_spellings_plan_alike(db):
+    """Every accepted spelling of a join type is one join type to the
+    optimizer: explain(optimal=True) estimates the spellings alike."""
+    def explain(how):
+        return (db.query("customer")
+                .join("orders", "c_custkey", "o_custkey", how=how)
+                .explain(optimal=True))
+    for short, spellings in (("semi", ("leftsemi", "LEFT_SEMI")),
+                             ("anti", ("leftanti", "left_anti")),
+                             ("left", ("left_outer", "LeftOuter"))):
+        for how in spellings:
+            assert explain(how) == explain(short), how
 
 def test_explain_shapes(db):
     q = (db.query("customer")

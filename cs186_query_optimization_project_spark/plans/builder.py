@@ -118,16 +118,16 @@ class WhereClause:
 @dataclass(frozen=True)
 class AggClause:
     func: str  # count / sum / avg / min / max
-    ref: ColumnRef | None  # None for count(*) or expression aggregates
+    #: the argument's SQL text split around its column references:
+    #: ``("*",)`` for count(*), ``(ref,)`` for a column, and the pieces of
+    #: an arbitrary Column for an expression aggregate (additive), e.g.
+    #: ``sum(l_extendedprice * (1 - l_discount))`` — TPC-H-style revenue
+    arg: tuple[str | ColumnRef, ...]
     out: str
     #: exact mode: sum/avg over doubles go through DECIMAL(18,4) so the
     #: result is independent of partitioning/summation order (needed for
     #: bit-exact oracle comparison; float addition is not associative)
     exact: bool = False
-    #: expression aggregate (additive): the SQL text of an arbitrary
-    #: Column split around its resolved column references, e.g.
-    #: ``sum(l_extendedprice * (1 - l_discount))`` — TPC-H-style revenue
-    expr: tuple[str | ColumnRef, ...] | None = None
 
     def sql(self, ref: Callable[[ColumnRef], str] = attrgetter("qualified")
             ) -> str:
@@ -135,13 +135,7 @@ class AggClause:
         each column reference: what the query runs, with the FROM
         clause's references, and explain's ``agg:`` line, with
         ``alias.column``."""
-        if self.expr is not None:
-            arg = "".join(p if isinstance(p, str) else ref(p)
-                          for p in self.expr)
-        elif self.ref is None:
-            arg = "*"
-        else:
-            arg = ref(self.ref)
+        arg = "".join(p if isinstance(p, str) else ref(p) for p in self.arg)
         if self.exact and self.func in ("sum", "avg"):
             item = f"CAST(SUM(CAST({arg} AS DECIMAL(18,4))) AS DOUBLE)"
             if self.func == "avg":
@@ -315,19 +309,16 @@ class Query:
 
     def count(self, out: str = "countAgg") -> "Query":
         """COUNT(*) (``QueryPlan.count``, ``QueryPlan.java:118–124``)."""
-        self.aggs.append(AggClause("count", None, out))
+        self.aggs.append(AggClause("count", ("*",), out))
         return self
 
     def sum(self, column: str | Column, out: str = "sumAgg",
             exact: bool = False) -> "Query":
         """SUM over a column name or an arbitrary Column expression
         (expression form is additive — TPC-H revenue style)."""
-        if isinstance(column, Column):
-            self.aggs.append(AggClause("sum", None, out, exact,
-                                       expr=self._expression(column)))
-        else:
-            self.aggs.append(
-                AggClause("sum", self.resolve(column), out, exact))
+        arg = (self._expression(column) if isinstance(column, Column)
+               else (self.resolve(column),))
+        self.aggs.append(AggClause("sum", arg, out, exact))
         return self
 
     def average(self, column: str, out: str = "averageAgg",
@@ -336,7 +327,8 @@ class Query:
         values with ``getInt`` — ``SelectOperator.java:295–298`` — making it
         wrong for float columns; we deliberately implement real avg,
         SURVEY.md §1.2.)"""
-        self.aggs.append(AggClause("avg", self.resolve(column), out, exact))
+        self.aggs.append(AggClause("avg", (self.resolve(column),), out,
+                                   exact))
         return self
 
     avg = average
@@ -360,9 +352,8 @@ class Query:
             if leaf.nodeName() == "UnresolvedAttribute":
                 refs.append(self.resolve(leaf.nameParts().mkString(".")))
                 marks.put(leaf, leaf.withName(f"{mark}{len(refs) - 1}"))
-        if refs:  # a Scala Map is the PartialFunction transformUp takes
-            rule = jvm.PythonUtils.toScalaMap(marks)
-            text = expr.transformUp(rule).sql()
+        # a Scala Map is the PartialFunction transformUp takes
+        text = expr.transformUp(jvm.PythonUtils.toScalaMap(marks)).sql()
         parts = re.split(rf"{mark}(\d+)", text)
         return tuple(p if i % 2 == 0 else refs[int(p)]
                      for i, p in enumerate(parts))
@@ -371,11 +362,11 @@ class Query:
     # verbs — additive (beyond-reference, SURVEY.md §2.3–2.5)
     # ------------------------------------------------------------------ #
     def min(self, column: str, out: str = "minAgg") -> "Query":
-        self.aggs.append(AggClause("min", self.resolve(column), out))
+        self.aggs.append(AggClause("min", (self.resolve(column),), out))
         return self
 
     def max(self, column: str, out: str = "maxAgg") -> "Query":
-        self.aggs.append(AggClause("max", self.resolve(column), out))
+        self.aggs.append(AggClause("max", (self.resolve(column),), out))
         return self
 
     def having(self, column: str, op: PredicateOperator | str,

@@ -4244,7 +4244,7 @@ def q_phrase_search(spark, sf_dir):
                                    "slow hash batch")
 
 
-_POSTINGS_INDEX_VERSION = 3   # v3: meta is a write-once _postings_meta/ log
+_POSTINGS_INDEX_VERSION = 4   # v4: constants ride the postings manifest
 
 
 def _postings_index(spark, sf_dir):
@@ -4293,10 +4293,10 @@ def q_bm25_incremental(spark, sf_dir):
     (``retrieval.postings_append`` — new docs commit as additional
     manifest-versioned files inside the existing token buckets, doc
     lengths append alongside, and N/avgdl update incrementally:
-    O(new docs) growth, no rebuild, no corpus re-aggregate; round 14
-    put both tables on PartitionedTable manifests with the meta
-    publish pinning versions LAST, so appends are crash-safe and
-    exactly-once-retryable).  Builds on the ``doc_id % 5 != 0``
+    O(new docs) growth, no rebuild, no corpus re-aggregate; both
+    tables and the new constants publish as one multi-table commit,
+    so a crashed append leaves nothing visible and a retry from the
+    pre-crash handle converges).  Builds on the ``doc_id % 5 != 0``
     four-fifths, appends the held-out fifth, then runs the standard
     BM25 query against the APPENDED index.  In-entry contracts raise
     (must survive ``python -O``): (a) a reader handle loaded BEFORE
@@ -4347,7 +4347,8 @@ def q_bm25_remove(spark, sf_dir):
     survivors of the ``doc_id % 7 == 0`` seventh rewrite through one
     versioned ``overwrite_partitions`` commit per table, corpus
     constants update incrementally from the doomed docs' recorded
-    lengths, meta publishes last.  Tier 2 — tombstone
+    lengths, and both tables publish with the constants as one
+    multi-table commit.  Tier 2 — tombstone
     (``retrieval.postings_remove_soft``, the zero-rewrite high-churn
     path the rewrite's cost note names): the ``doc_id % 70 == 1``
     slice of the survivors soft-deletes via ``PartitionedTable
@@ -4358,8 +4359,8 @@ def q_bm25_remove(spark, sf_dir):
     survive ``python -O``): (a) rewrite-tier constants equal the
     survivor corpus's exactly; (b) a reader handle loaded BEFORE the
     deletes still reads the intact pre-delete doc-length table
-    (version pinning); (c) the single-writer staleness guard fires —
-    a handle the soft delete published past raises ValueError;
+    (version pinning); (c) the stale-handle guard fires — a handle
+    the soft delete committed past raises ValueError;
     (d) soft-tier constants decrement exactly by the tombstoned
     docs; (e) optimize preserves the soft ranking byte-for-byte and
     the constants bit-for-bit.  The oracle replays BM25 over the

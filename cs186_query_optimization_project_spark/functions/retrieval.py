@@ -15,6 +15,12 @@ Shapes at scale:
   frequencies, and doc lengths — three aggregates off the postings
   table; the query side filters postings to the query's terms FIRST, so
   scoring touches |postings(query terms)| rows, not the corpus.
+- The **materialized index** keeps postings and doc lengths as two
+  manifest tables.  Its build and every maintenance op (append,
+  rewrite or tombstone delete, optimize) publish both tables and the
+  BM25 constants with one multi-table commit
+  (``partitioned.commit_together``), so a reader sees the index before
+  an op or after it, never a mix.
 """
 
 from __future__ import annotations
@@ -181,13 +187,11 @@ def similar_docs(df: DataFrame, query_id, text_col: str = "text",
 # 3-term query reads ≤ 3/n_buckets of the postings files instead of
 # re-tokenizing the corpus.  Doc lengths and the corpus stats BM25 needs
 # (N, avgdl) are computed at build time: doc lengths as a compact
-# sidecar table, N/avgdl as metadata constants — query-time scoring
-# touches only the matched posting lists, never a corpus-wide
-# aggregate.  The bucket hash is the portable md5 60-bit family
-# (sketches._H60), so the driver routes a literal term to its bucket in
-# plain Python and external oracles can replay the layout.
-
-_POSTINGS_META = "_postings_meta"   # write-once v<N>.json log
+# sidecar table, N/avgdl as constants in the postings manifest —
+# query-time scoring touches only the matched posting lists, never a
+# corpus-wide aggregate.  The bucket hash is the portable md5 60-bit
+# family (sketches._H60), so the driver routes a literal term to its
+# bucket in plain Python and external oracles can replay the layout.
 
 
 @dataclass(frozen=True)
@@ -196,19 +200,17 @@ class PostingsIndex:
     :class:`~cs186_query_optimization_project_spark.partitioned
     .PartitionedTable`\\ s (postings keyed on token bucket, doc
     lengths keyed on an id-hash bucket) plus the BM25 corpus
-    constants, bound together by a meta entry that PINS the table
-    versions this handle reads.  The meta is a write-once
-    ``v<N>.json`` log read newest-first; ``meta_version`` is this
-    handle's entry, and a handle's successor publishes entry N+1.
+    constants.  The build and every maintenance op publish both
+    tables with ONE :func:`~cs186_query_optimization_project_spark
+    .partitioned.commit_together`; that commit's postings manifest
+    carries the constants and the doclen version it pairs with, and
+    a handle PINS the two versions.
 
-    The pinned versions are the torn-read protection: a reader
-    resolves the meta once and then scans both tables at the recorded
-    versions, so an in-flight append (which commits new table versions
-    FIRST and publishes the meta LAST) is invisible until its meta
-    publish — new postings can never be scored against stale
-    n_docs/avgdl.  ``append_epoch`` drives the exactly-once append
-    watermark (:meth:`PartitionedTable.idempotent_append`), making a
-    crashed append safely retryable with no duplicate postings."""
+    The pins are the torn-read protection: a reader scans both tables
+    at the versions it loaded, so an in-flight op is invisible until
+    its commit record lands — new postings can never be scored
+    against stale n_docs/avgdl.  A maintenance op runs only from the
+    newest committed handle (else the stale-handle ValueError)."""
 
     path: str                      # root; postings/ + doclen/ under it
     n_buckets: int
@@ -217,8 +219,6 @@ class PostingsIndex:
     source_fingerprint: str = ""
     postings_version: int = 0      # pinned commit of postings/
     doclen_version: int = 0        # pinned commit of doclen/
-    append_epoch: int = 0          # idempotent-append watermark
-    meta_version: int = 0          # this handle's meta log entry
 
     @property
     def postings_path(self) -> str:
@@ -255,42 +255,37 @@ def _doclen_bucket_col(id_col: str):
     return F.pmod(F.abs(F.hash(F.col(id_col))), F.lit(_DOCLEN_BUCKETS))
 
 
-def _write_postings_meta(idx: PostingsIndex) -> None:
-    """Publish ``idx`` as meta entry ``idx.meta_version`` — the ONE
-    commit point binding both table versions and the corpus constants
-    (readers load it exactly once).  The entry taken with other
-    content means another writer published from the same handle."""
+def _staging(index: PostingsIndex):
+    """One maintenance op's deferred-commit scope, based on the
+    handle's pinned versions: a verb that stages on top of another
+    writer's commit (landed after the op's stale-handle check) raises
+    ConflictException."""
     from cs186_query_optimization_project_spark.partitioned import (
-        log_publish,
+        deferred_commits,
     )
 
-    if not log_publish(
-            os.path.join(idx.path, _POSTINGS_META), idx.meta_version,
-            {"format": 2, "n_buckets": idx.n_buckets,
-             "n_docs": idx.n_docs, "avgdl": idx.avgdl,
-             "source_fingerprint": idx.source_fingerprint,
-             "postings_version": idx.postings_version,
-             "doclen_version": idx.doclen_version,
-             "append_epoch": idx.append_epoch}):
-        raise ValueError(
-            f"stale PostingsIndex handle: meta entry "
-            f"v{idx.meta_version} at {idx.path!r} was published by "
-            "another writer since this handle loaded; reload via "
-            "load_postings_index() and re-issue")
+    return deferred_commits(base={index.postings_path:
+                                  index.postings_version,
+                                  index.doclen_path:
+                                  index.doclen_version})
 
 
-def _publish_successor(index: PostingsIndex, pt_post, pt_len,
-                       n_docs: int, avgdl: float,
-                       append_epoch: int) -> PostingsIndex:
-    """Publish the handle after ``index``: both tables' newest
-    versions with the given constants, as meta entry N+1."""
-    out = replace(index, n_docs=n_docs, avgdl=avgdl,
-                  postings_version=max(pt_post.versions()),
-                  doclen_version=max(pt_len.versions()),
-                  append_epoch=append_epoch,
-                  meta_version=index.meta_version + 1)
-    _write_postings_meta(out)
-    return out
+def _publish(index: PostingsIndex, staged: list, n_docs: int,
+             avgdl: float) -> PostingsIndex:
+    """Publish one op's two staged commits as ONE ``commit_together``
+    — the index's commit point — and return the new handle.  The
+    postings manifest carries the constants (``meta``), so it commits
+    last and lists the doclen version it pairs with (``partners``)."""
+    from cs186_query_optimization_project_spark.partitioned import (
+        commit_together,
+    )
+
+    landed = commit_together(staged, meta={index.postings_path: {
+        "n_buckets": index.n_buckets, "n_docs": n_docs, "avgdl": avgdl,
+        "source_fingerprint": index.source_fingerprint}})
+    return replace(index, n_docs=n_docs, avgdl=avgdl,
+                   postings_version=landed[index.postings_path],
+                   doclen_version=landed[index.doclen_path])
 
 
 def build_postings_index(df: DataFrame, path: str, text_col: str = "text",
@@ -299,61 +294,52 @@ def build_postings_index(df: DataFrame, path: str, text_col: str = "text",
                          fingerprint: str = "") -> PostingsIndex:
     """Materialize the postings index as two manifest-versioned
     :class:`PartitionedTable`\\ s: one corpus pass tokenizes and
-    commits postings partitioned by token bucket (``_bucket_
+    stages postings partitioned by token bucket (``_bucket_
     partitioned`` bounds files per directory, same as the ANN builds);
     doc lengths and the corpus stats are then aggregated off the
-    committed postings' (tb, doc_id) columns — a column-pruned second
-    read, not a second tokenization pass.  The meta publish pinning
-    both version-0 commits is the build's single commit point."""
+    staged postings' (tb, doc_id) columns — a column-pruned second
+    read, not a second tokenization pass.  Both tables publish with
+    one commit.  A rebuild deletes the old postings manifests before
+    any data file, so a crash mid-rebuild leaves
+    ``load_postings_index()`` = None (the caller rebuilds), never a
+    handle over deleted files."""
+    from pyspark.sql import Observation
+
     from cs186_query_optimization_project_spark import metaio
     from cs186_query_optimization_project_spark.functions.similarity import (
         _bucket_partitioned,
     )
     from cs186_query_optimization_project_spark.partitioned import (
-        PartitionedTable, log_newest,
+        PartitionedTable, deferred_commits,
     )
 
     spark = df.sparkSession
-    # rebuild of an existing index: retract the meta FIRST, so a crash
-    # mid-rebuild leaves load_postings_index() = None (caller rebuilds)
-    # instead of a handle pointing at deleted tables.  Numbering goes
-    # on past the retracted log, so a pre-rebuild handle's publish
-    # finds its entry taken
-    log = os.path.join(path, _POSTINGS_META)
-    prev = log_newest(log)
-    metaio.IO.remove_tree(log)
-    for sub in ("postings", "doclen"):
+    for sub in (os.path.join("postings", "_manifests"), "postings",
+                "doclen"):
         metaio.IO.remove_tree(os.path.join(path, sub))
     post = (build_postings(df, text_col, id_col)
             .withColumn("tb", _token_bucket_col(n_buckets))
             .select(id_col, "pos", "token", "tb"))
-    pt_post = PartitionedTable.create(
-        spark, _bucket_partitioned(post, "tb", id_col, files_per_bucket),
-        os.path.join(path, "postings"), "tb")
-    from pyspark.sql import Observation
-
     # corpus constants ride the doclen write job as OBSERVED metrics
     # (count/avg of the very rows being written) instead of a separate
-    # read-back aggregation job over the committed files
+    # read-back aggregation job over the written files
     obs = Observation()
-    doc_len = (pt_post.read()
-               .groupBy(id_col).agg(F.count(F.lit(1)).alias("__dl"))
-               .withColumn("db", _doclen_bucket_col(id_col))
-               .select(id_col, "__dl", "db")
-               .observe(obs, F.count(F.lit(1)).alias("n"),
-                        F.avg("__dl").alias("avgdl")))
-    pt_len = PartitionedTable.create(
-        spark, doc_len.repartition("db"),
-        os.path.join(path, "doclen"), "db")
+    with deferred_commits() as staged:
+        pt_post = PartitionedTable.create(
+            spark, _bucket_partitioned(post, "tb", id_col,
+                                       files_per_bucket),
+            os.path.join(path, "postings"), "tb")
+        doc_len = (pt_post.read_staged()
+                   .groupBy(id_col).agg(F.count(F.lit(1)).alias("__dl"))
+                   .withColumn("db", _doclen_bucket_col(id_col))
+                   .select(id_col, "__dl", "db")
+                   .observe(obs, F.count(F.lit(1)).alias("n"),
+                            F.avg("__dl").alias("avgdl")))
+        PartitionedTable.create(spark, doc_len.repartition("db"),
+                                os.path.join(path, "doclen"), "db")
     stats = obs.get
-    idx = PostingsIndex(path, n_buckets, int(stats["n"]),
-                        float(stats["avgdl"] or 0.0), fingerprint,
-                        postings_version=max(pt_post.versions()),
-                        doclen_version=max(pt_len.versions()),
-                        append_epoch=0,
-                        meta_version=prev[0] + 1 if prev else 0)
-    _write_postings_meta(idx)
-    return idx
+    return _publish(PostingsIndex(path, n_buckets, 0, 0.0, fingerprint),
+                    staged, int(stats["n"]), float(stats["avgdl"] or 0.0))
 
 
 def postings_append(spark: SparkSession, index: PostingsIndex,
@@ -377,28 +363,18 @@ def postings_append(spark: SparkSession, index: PostingsIndex,
     indexed corpus (duplicate ids would double-count term
     frequencies); the caller owns that contract, same as every
     log-append ingest.  Chain appends from the RETURNED handle (or a
-    fresh ``load_postings_index``): appending two DIFFERENT batches
-    from the same stale handle reuses its epoch, and the second
-    batch's inserts would dedup away as a presumed replay — the
-    single-writer discipline every epoch-watermarked log requires.
-    Retrying the SAME batch after a crash is exactly what the reuse
-    is for (see below).
+    fresh ``load_postings_index``).
 
-    Commit protocol (the torn-append protection the bare-hive layout
-    lacked): both table appends are :meth:`PartitionedTable
-    .idempotent_append` commits watermarked by ``append_epoch + 1``,
-    and the meta — pinning the NEW versions and constants together —
-    publishes LAST as the handle's next meta entry (one exclusive
-    create).  A reader holding the old meta keeps scanning the old
-    pinned versions throughout (never new postings with stale
-    n_docs/avgdl); a crash anywhere before the meta publish leaves the
-    published index bit-identical to before the append, and RETRYING
-    the same append is safe: the epoch watermark turns the
-    already-committed table inserts into dedup no-ops, the constants
-    recompute from the same batch, and the meta publish completes the
-    interrupted commit (an identical entry already published counts
-    as done).  Appending from a handle another writer has published
-    past raises the stale-handle ValueError at the publish."""
+    Both table appends and the new constants publish as one commit,
+    so a reader holding the old handle keeps scanning the old pinned
+    versions throughout.  A crash before the commit record leaves
+    nothing visible, and retrying from the pre-crash handle
+    converges.  Once the commit has landed, a retry from that handle
+    — like any op from a handle another writer has committed past —
+    raises the stale-handle ValueError instead; either way no
+    postings are duplicated."""
+    from pyspark.sql import Observation
+
     from cs186_query_optimization_project_spark.functions.similarity import (
         _bucket_partitioned,
     )
@@ -406,66 +382,48 @@ def postings_append(spark: SparkSession, index: PostingsIndex,
         PartitionedTable,
     )
 
-    epoch = index.append_epoch + 1
+    _guard_fresh_handle(index)
     post = (build_postings(new_df, text_col, id_col)
             .withColumn("tb", _token_bucket_col(index.n_buckets))
             .select(id_col, "pos", "token", "tb")
             .localCheckpoint())  # one tokenization feeds both writes
-    pt_post = PartitionedTable(spark, index.postings_path)
-    pt_post.idempotent_append(
-        _bucket_partitioned(post, "tb", id_col, files_per_bucket),
-        "postings_append", epoch)
-    from pyspark.sql import Observation
-
     new_lens = (post.groupBy(id_col)
                 .agg(F.count(F.lit(1)).alias("__dl"))
                 .withColumn("db", _doclen_bucket_col(id_col))
                 .select(id_col, "__dl", "db"))
-    pt_len = PartitionedTable(spark, index.doclen_path)
     # the constants increment rides the doclen append job as OBSERVED
-    # metrics; a dedup'd replay (idempotent_append False — no write
-    # job ran, so the metrics never materialize) falls back to the
-    # explicit aggregation over the checkpointed tokenization
+    # metrics
     obs = Observation()
-    if pt_len.idempotent_append(
+    with _staging(index) as staged:
+        PartitionedTable(spark, index.postings_path).insert(
+            _bucket_partitioned(post, "tb", id_col, files_per_bucket))
+        PartitionedTable(spark, index.doclen_path).insert(
             new_lens.observe(obs, F.count(F.lit(1)).alias("n"),
                              F.sum("__dl").alias("s"))
-            .repartition("db"), "postings_append", epoch):
-        inc = obs.get
-    else:
-        inc = new_lens.agg(F.count(F.lit(1)).alias("n"),
-                           F.sum("__dl").alias("s")).first()
+            .repartition("db"))
+    inc = obs.get
     n_new, dl_new = int(inc["n"]), float(inc["s"] or 0.0)
     n_docs = index.n_docs + n_new
     avgdl = ((index.n_docs * index.avgdl + dl_new) / n_docs
              if n_docs else 0.0)
-    return _publish_successor(index, pt_post, pt_len, n_docs, avgdl,
-                              epoch)
+    return _publish(index, staged, n_docs, avgdl)
 
 
 def _guard_fresh_handle(index: PostingsIndex) -> None:
-    """Single-writer staleness guard for the delete paths: their
-    constants decrement from the handle's PINNED doclen snapshot, so
-    a handle another writer has PUBLISHED past would produce
-    constants diverging from the table content.  Staleness is judged
-    against the published META, not raw table versions — a retry of
-    this writer's own crashed commit legitimately sees newer
-    *unpublished* table versions and must be allowed through (the
-    retry converges; see the callers' commit-protocol docstrings)."""
+    """Every maintenance op derives the new constants from its
+    handle, so it runs only from the index's newest committed handle.
+    If another writer commits between this check and the op's commit,
+    the op loses with ConflictException (see :func:`_staging`)."""
     published = load_postings_index(index.path)
-    if published is not None and (
-            published.postings_version != index.postings_version
-            or published.doclen_version != index.doclen_version
-            or published.append_epoch != index.append_epoch):
+    if published != index:
+        now = ("none" if published is None
+               else f"postings v{published.postings_version}")
         raise ValueError(
-            "stale PostingsIndex handle: the published meta pins "
-            f"postings v{published.postings_version}/doclen "
-            f"v{published.doclen_version}/epoch "
-            f"{published.append_epoch} but this handle holds "
-            f"v{index.postings_version}/v{index.doclen_version}/"
-            f"epoch {index.append_epoch} — another writer committed "
+            f"stale PostingsIndex handle: the newest commit of "
+            f"{index.path!r} is {now}, this handle holds postings "
+            f"v{index.postings_version} — another writer committed "
             "since it loaded; reload via load_postings_index() and "
-            "re-issue the delete")
+            "re-issue")
 
 
 def postings_remove(spark: SparkSession, index: PostingsIndex,
@@ -477,41 +435,27 @@ def postings_remove(spark: SparkSession, index: PostingsIndex,
     .ivfpq_remove``): the token buckets OWNING the doomed documents'
     postings are found with one broadcast semi-join, and ONLY those
     bucket partitions rewrite (anti-join survivors through one
-    versioned :meth:`PartitionedTable.overwrite_partitions` commit);
+    :meth:`PartitionedTable.overwrite_partitions` per table);
     every untouched bucket's files stay byte-identical.  Honest cost
     note: a document's tokens hash across ALL buckets, so unlike the
     IVF-PQ case (one cell per vector) a postings deletion typically
     rewrites the whole postings table — O(index), the same cost
     class as Lucene's forced merge after deletes.  BATCH deletion
     requests and run them as one call; for high-churn corpora the
-    tombstone path (:meth:`PartitionedTable.delete_soft` + periodic
+    tombstone path (:func:`postings_remove_soft` + periodic
     :func:`postings_optimize`) trades read-time filtering for
     zero-rewrite deletes.  The doc-length table DOES prune (one
     id-hash bucket per doomed doc), and the
     corpus constants update INCREMENTALLY from the doomed documents'
     recorded lengths (``n' = n - n_rm``, ``avgdl' = (n·avgdl -
-    Σ removed_dl) / n'``) — no corpus re-aggregate.  After the meta
-    publish every reader ranks exactly as a from-scratch build over the
-    surviving corpus (pinned in tests).
+    Σ removed_dl) / n'``) — no corpus re-aggregate.  After the
+    commit every reader ranks exactly as a from-scratch build over
+    the surviving corpus (pinned in tests).
 
-    Same commit discipline as append: tables commit first, the meta —
-    pinning the post-delete versions with the updated constants —
-    publishes LAST, so a crash anywhere leaves the published index
-    bit-identical and a RETRY from the pre-crash handle recomputes
-    the same constants (the doomed lengths are read at the handle's
-    PINNED doclen version, which still contains them) and converges.
-    Same single-writer discipline too — and unlike append it is
-    GUARDED: the constants decrement from the handle's pinned doclen
-    snapshot, so a handle another writer has published past would
-    produce constants diverging from the rewritten table content.
-    The guard compares the handle against the PUBLISHED meta (not raw
-    table versions — a retry of this writer's own crashed remove
-    legitimately sees newer unpublished table commits) and raises
-    ValueError on a stale handle; reload via
-    :func:`load_postings_index` and re-issue.  Ghost removals (no
-    requested id is indexed) return the handle unchanged — no table
-    commit, no meta republish, constants bit-identical.
-    Returns the new handle."""
+    Both rewrites and the new constants publish as one commit; crash
+    and retry behave as in :func:`postings_append`.  Ghost removals
+    (no requested id is indexed) return the handle unchanged — no
+    commit, constants bit-identical.  Returns the new handle."""
     from cs186_query_optimization_project_spark.functions.similarity import (
         _bucket_partitioned,
     )
@@ -527,16 +471,8 @@ def postings_remove(spark: SparkSession, index: PostingsIndex,
     ids = ids_df.select(F.col(id_col)).distinct().localCheckpoint()
     pt_post = PartitionedTable(spark, index.postings_path)
     pt_len = PartitionedTable(spark, index.doclen_path)
-    # ONE pass over the PINNED doclen version yields both the doomed
-    # constants (crash-retry reads the same values even after the
-    # delete commits) and the touched doclen buckets — the old shape
-    # paid a second doclen scan for the bucket-discovery collect.
-    # Commit-protocol note: because the buckets come from the PINNED
-    # version, a crash-retry that runs after the doclen overwrite
-    # already committed re-discovers the same buckets and rewrites
-    # byte-identical content as one extra (harmless) version — the
-    # retry converges but is no longer a table no-op; the accepted
-    # price for constants that cannot drift under retry
+    # ONE pass over the doclen table yields both the doomed constants
+    # and the touched doclen buckets
     rm_rows = (pt_len.read(version=index.doclen_version)
                .join(F.broadcast(ids), id_col)
                .groupBy("db")
@@ -545,34 +481,30 @@ def postings_remove(spark: SparkSession, index: PostingsIndex,
     n_rm = sum(int(r["n"]) for r in rm_rows)
     dl_rm = sum(float(r["s"] or 0.0) for r in rm_rows)
     if not n_rm:
-        # ghost removal: nothing indexed matches — skip the table
-        # commits AND the meta republish so the constants stay
-        # bit-identical (n*avgdl/n re-rounding is not a no-op in
-        # IEEE-754) and no version churn is published
+        # ghost removal: nothing indexed matches — no commit, so the
+        # constants stay bit-identical (n*avgdl/n re-rounding is not
+        # a no-op in IEEE-754)
         return index
     touched_len = sorted(r["db"] for r in rm_rows)
-    for pt, bucket_col, cols, fpb, touched in (
-            (pt_post, "tb", [id_col, "pos", "token", "tb"],
-             files_per_bucket, None),
-            (pt_len, "db", [id_col, "__dl", "db"], 1, touched_len)):
-        if touched is None:
-            touched = [r[bucket_col] for r in
-                       (pt.read().join(F.broadcast(ids), id_col)
-                        .select(bucket_col).distinct().collect())]
-        if touched:
+    with _staging(index) as staged:
+        for pt, bucket_col, cols, fpb, touched in (
+                (pt_post, "tb", [id_col, "pos", "token", "tb"],
+                 files_per_bucket, None),
+                (pt_len, "db", [id_col, "__dl", "db"], 1, touched_len)):
+            if touched is None:
+                touched = [r[bucket_col] for r in
+                           (pt.read().join(F.broadcast(ids), id_col)
+                            .select(bucket_col).distinct().collect())]
             survivors = (pt.read(partition_values=touched)
-                         .join(F.broadcast(ids), id_col,
-                               "left_anti")
+                         .join(F.broadcast(ids), id_col, "left_anti")
                          .select(*cols))
             pt.overwrite_partitions(
-                _bucket_partitioned(survivors, bucket_col, id_col,
-                                    fpb),
+                _bucket_partitioned(survivors, bucket_col, id_col, fpb),
                 touched)
     n_docs = index.n_docs - n_rm
     avgdl = ((index.n_docs * index.avgdl - dl_rm) / n_docs
              if n_docs else 0.0)
-    return _publish_successor(index, pt_post, pt_len, n_docs, avgdl,
-                              index.append_epoch)
+    return _publish(index, staged, n_docs, avgdl)
 
 
 def _sql_id_literal(v) -> str:
@@ -613,8 +545,8 @@ def postings_remove_soft(spark: SparkSession, index: PostingsIndex,
     tokens hash into (O(index)), record one ``id IN (...)`` tombstone
     predicate against both tables via :meth:`PartitionedTable
     .delete_soft` — O(1) data movement; every probe then applies the
-    predicate as a map-only filter on read.  Rankings after the meta
-    publish are identical to :func:`postings_remove`'s rewrite and to a
+    predicate as a map-only filter on read.  Rankings after the
+    commit are identical to :func:`postings_remove`'s rewrite and to a
     from-scratch build over the survivors (pinned in tests and in the
     ``bm25_remove`` entry); space reclaims later when
     :func:`postings_optimize` materializes the tombstones (its
@@ -626,26 +558,9 @@ def postings_remove_soft(spark: SparkSession, index: PostingsIndex,
     SMALL right-to-be-forgotten batches.  Bulk deletions belong on
     the rewrite path, whose id set stays distributed.
 
-    Commit protocol: both ``delete_soft`` commits land first, the
-    meta — pinning the tombstoned versions with constants updated
-    incrementally from the doomed documents' recorded lengths —
-    publishes LAST.  A crash before the meta publish leaves the
-    published index ranking as before (readers pin pre-tombstone
-    versions); retrying from the pre-crash handle passes the
-    staleness guard (the published meta still matches it), re-records
-    the same predicate (a duplicate tombstone is a semantic no-op —
-    its visible-row count is 0 on the retry), recomputes the same
-    constants from the PINNED doclen snapshot, and converges.  Same
-    single-writer guard as the rewrite path: a handle another writer
-    has published past raises ValueError.
-
-    Single-writer discipline (same as every maintenance op here): an
-    interrupted delete must be RETRIED to completion — or its table
-    commits rolled back — before the writer issues any OTHER
-    maintenance operation; abandoning it and appending from a fresh
-    handle would fold the half-committed tombstone versions into the
-    next publish's version pins with constants that never accounted
-    for them."""
+    Both tombstones and the constants, updated incrementally from the
+    doomed documents' recorded lengths, publish as one commit; crash
+    and retry behave as in :func:`postings_append`."""
     from cs186_query_optimization_project_spark.partitioned import (
         PartitionedTable,
     )
@@ -696,18 +611,19 @@ def postings_remove_soft(spark: SparkSession, index: PostingsIndex,
                         if int(r["db"]) == b)
     pred = (f"{id_col} IN "
             f"({', '.join(_sql_id_literal(v) for v in id_list)})")
-    pt_post = PartitionedTable(spark, index.postings_path)
-    # postings cardinality (doomed TOKEN occurrences per token bucket)
-    # is unknowable without a postings scan — decline it (fail-closed
-    # metadata COUNT on the postings table, which nothing uses; the
-    # ranking constants live in the meta, not the manifest)
-    pt_post.delete_soft(pred, masked_counts=None)
-    pt_len.delete_soft(pred, masked_counts=claims)
+    with _staging(index) as staged:
+        # postings cardinality (doomed TOKEN occurrences per token
+        # bucket) is unknowable without a postings scan — decline it
+        # (fail-closed metadata COUNT on the postings table, which
+        # nothing uses; the ranking constants live in the commit's
+        # postings manifest)
+        PartitionedTable(spark, index.postings_path).delete_soft(
+            pred, masked_counts=None)
+        pt_len.delete_soft(pred, masked_counts=claims)
     n_docs = index.n_docs - n_rm
     avgdl = ((index.n_docs * index.avgdl - dl_rm) / n_docs
              if n_docs else 0.0)
-    return _publish_successor(index, pt_post, pt_len, n_docs, avgdl,
-                              index.append_epoch)
+    return _publish(index, staged, n_docs, avgdl)
 
 
 def postings_optimize(spark: SparkSession, index: PostingsIndex,
@@ -716,21 +632,15 @@ def postings_optimize(spark: SparkSession, index: PostingsIndex,
     """Compact the index after append accretion: each ``postings_
     append`` adds one directory per touched bucket, so a bucket probed
     after N appends reads N+1 directories.  Runs
-    :meth:`PartitionedTable.optimize` on both tables (each a versioned
-    commit — concurrent readers pinned to prior versions keep reading
-    intact data) and republishes the meta pinning the POST-compaction
-    versions with the corpus constants unchanged — rankings are
-    byte-identical before and after (pinned in tests), only the file
-    layout changes.  Old versions remain time-travelable until
-    ``PartitionedTable.vacuum``.
-
-    Staleness-guarded like both remove paths: optimize REPUBLISHES
-    the handle's ``n_docs``/``avgdl``, so an optimize issued from a
-    handle another writer's soft delete published past would
-    materialize that writer's tombstones while republishing
-    pre-delete constants — resurrecting the deleted documents in the
-    corpus constants.  A stale handle raises ValueError; reload via
-    :func:`load_postings_index` and re-issue.
+    :meth:`PartitionedTable.optimize` on both tables and publishes the
+    POST-compaction versions in one commit with the corpus constants
+    unchanged — rankings are byte-identical before and after (pinned
+    in tests), only the file layout changes; readers pinned to prior
+    versions keep reading intact data.  A table with nothing to
+    compact republishes its pinned version (zero data movement); with
+    nothing to compact at all the handle comes back unchanged.  Old
+    versions remain time-travelable until ``PartitionedTable.vacuum``.
+    A stale handle raises ValueError, as for every maintenance op.
 
     The postings rewrite re-clusters each bucket BY TOKEN (``optimize
     (sort_by=("token",))`` — OPTIMIZE ... ZORDER's 1-D analog): the
@@ -744,12 +654,19 @@ def postings_optimize(spark: SparkSession, index: PostingsIndex,
     )
 
     _guard_fresh_handle(index)
-    pt_post = PartitionedTable(spark, index.postings_path)
-    pt_len = PartitionedTable(spark, index.doclen_path)
-    pt_post.optimize(target_file_bytes, sort_by=("token",))
-    pt_len.optimize(target_file_bytes)
-    return _publish_successor(index, pt_post, pt_len, index.n_docs,
-                              index.avgdl, index.append_epoch)
+    tables = ((PartitionedTable(spark, index.postings_path),
+               index.postings_version, ("token",)),
+              (PartitionedTable(spark, index.doclen_path),
+               index.doclen_version, ()))
+    with _staging(index) as staged:
+        compacted = [pt.optimize(target_file_bytes, sort_by=sort_by)
+                     for pt, _, sort_by in tables]
+        if not any(compacted):
+            return index
+        for (pt, version, _), done in zip(tables, compacted):
+            if not done:
+                pt.restore(version)
+    return _publish(index, staged, index.n_docs, index.avgdl)
 
 
 def postings_optimize_if(spark: SparkSession, index: PostingsIndex,
@@ -773,7 +690,7 @@ def postings_optimize_if(spark: SparkSession, index: PostingsIndex,
     debt accumulate, and reserve the fraction threshold for
     doclen-side wasted-scan policy.  Staleness-guarded like every
     maintenance op: checking (or compacting) through a handle another
-    writer published past raises ValueError."""
+    writer committed past raises ValueError."""
     from cs186_query_optimization_project_spark.partitioned import (
         PartitionedTable,
     )
@@ -790,27 +707,28 @@ def postings_optimize_if(spark: SparkSession, index: PostingsIndex,
 
 
 def load_postings_index(path: str) -> PostingsIndex | None:
-    """Load a previously built postings index from its newest meta
-    entry; None if absent/unreadable or in an older layout (caller
+    """Load the index's newest committed handle from its postings
+    manifest; None if absent/unreadable or in an older layout (caller
     rebuilds — the index is a cache of the corpus)."""
     from cs186_query_optimization_project_spark.partitioned import (
-        log_newest,
+        listed_versions, load_manifest,
     )
 
+    root = os.path.join(path, "postings")
     try:
-        newest = log_newest(os.path.join(path, _POSTINGS_META))
-        if newest is None:
-            return None          # absent, or an older single-file meta
-        number, meta = newest
-        return PostingsIndex(path, meta["n_buckets"], meta["n_docs"],
-                             meta["avgdl"],
-                             meta.get("source_fingerprint", ""),
-                             postings_version=meta["postings_version"],
-                             doclen_version=meta["doclen_version"],
-                             append_epoch=meta.get("append_epoch", 0),
-                             meta_version=number)
+        for v in reversed(listed_versions(os.path.join(root,
+                                                       "_manifests"))):
+            man = load_manifest(root, v)
+            if man is not None:
+                meta = man["meta"]
+                return PostingsIndex(
+                    path, meta["n_buckets"], meta["n_docs"],
+                    meta["avgdl"], meta["source_fingerprint"],
+                    postings_version=v,
+                    doclen_version=man["partners"][0])
     except (OSError, ValueError, KeyError):
-        return None
+        pass
+    return None
 
 
 def term_postings(spark: SparkSession, index: PostingsIndex,

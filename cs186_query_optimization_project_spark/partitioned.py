@@ -41,6 +41,7 @@ directory, which doubles as incremental compaction.
 from __future__ import annotations
 
 import contextlib
+import contextvars
 import hashlib
 import json
 import os
@@ -327,23 +328,59 @@ def _abort(record: str) -> bool:
         return metaio.IO.read_text(record) == "aborted"
 
 
-def commit_together(commits: list) -> None:
+#: The open :func:`deferred_commits` scope: (staged pairs, base
+#: versions), or None.
+_DEFERRED: contextvars.ContextVar[tuple[list, dict] | None] = \
+    contextvars.ContextVar("deferred_commits", default=None)
+
+
+@contextlib.contextmanager
+def deferred_commits(base: dict[str, int] | None = None):
+    """Stage instead of publish: every verb that commits inside the
+    scope writes its data as usual, but its manifest is held back as a
+    ``(table, commit_args)`` pair appended to the yielded list, ready
+    for one :func:`commit_together` after the scope.  A table takes at
+    most one staged commit per scope.  ``base`` maps a table root to
+    the version its staged commit must follow: a verb that staged on
+    top of a newer commit (another writer's, landed since the caller
+    read ``base``) raises ConflictException."""
+    staged: list = []
+    token = _DEFERRED.set((staged, base or {}))
+    try:
+        yield staged
+    finally:
+        _DEFERRED.reset(token)
+
+
+def commit_together(commits: list,
+                    meta: dict[str, dict] | None = None) -> dict[str, int]:
     """Publish ``(table, commit_args)`` pairs from
-    :meth:`PartitionedTable._prepare` as ONE commit.  Several tables
-    each get a manifest naming one record under the first table's
-    ``_commits/``; creating it as ``committed`` is the commit point, so
-    a crash before leaves every table on its old version.  A lost race
-    on any table raises ConflictException."""
+    :meth:`PartitionedTable._prepare` or :func:`deferred_commits` as
+    ONE commit; returns the version each table landed at, by root.
+    Several tables each get a manifest naming one record under the
+    first table's ``_commits/``; creating it as ``committed`` is the
+    commit point, so a crash before leaves every table on its old
+    version.  Each manifest lists as ``partners`` the versions the
+    tables before it landed at (a table moves past a number held by a
+    commit that never committed).  ``meta`` maps a table root to a
+    payload its manifest carries (that version only); those tables
+    publish last, so their ``partners`` name every other table's
+    version.  A lost race on any table raises ConflictException."""
+    meta = meta or {}
+    commits = sorted(commits, key=lambda c: c[0].root in meta)
     if len(commits) == 1:
         table, args = commits[0]
-        table._commit(**args)
-        return
+        return {table.root: table._commit(**args,
+                                          meta=meta.get(table.root))}
     record = os.path.join(commits[0][0].root, "_commits",
                           f"{uuid.uuid4().hex}.json")
     metaio.IO.make_dirs(os.path.dirname(record), exist_ok=True)
+    landed: dict[str, int] = {}
     try:
         for table, args in commits:
-            table._commit(**args, commit=record)
+            landed[table.root] = table._commit(
+                **args, commit=record, partners=list(landed.values()),
+                meta=meta.get(table.root))
     except Exception:
         with contextlib.suppress(Exception):
             _abort(record)   # best effort: the next writer claims it
@@ -355,6 +392,7 @@ def commit_together(commits: list) -> None:
             "multi-table commit was claimed aborted by a concurrent "
             "writer of one of its tables; retry on a fresh "
             "snapshot") from None
+    return landed
 
 
 def merge_source(source: DataFrame, keys: list[str],
@@ -584,19 +622,41 @@ class PartitionedTable:
                 bloom_cols: list[str] | None = None,
                 tomb_counts: dict[str, int] | None = None,
                 op: str = "WRITE", sort_cols: list[str] | None = None,
-                commit: str | None = None) -> None:
-        """Publish: create v<version>.json atomically-exclusively.  All
-        data dirs are already fully written, so the manifest's
-        appearance IS the commit point; a concurrent committer of the
-        same version number hits FileExistsError → first-committer-wins
-        (optimistic, like ``transactions.py``) — unless that version's
-        multi-table commit never committed: then it is claimed aborted
-        and the next number tried.  ``commit``: see
-        :func:`commit_together`.  ``txns`` is the exactly-once
-        watermark map for streaming sinks (Delta's ``txn`` action):
-        highest committed batch id per sink id — DML commits must carry
-        the caller's manifest's map forward or replay protection would
-        be lost."""
+                commit: str | None = None, meta: dict | None = None,
+                partners: list[int] | None = None) -> int:
+        """Publish: create v<version>.json atomically-exclusively and
+        return the version it landed at.  All data dirs are already
+        fully written, so the manifest's appearance IS the commit
+        point; a concurrent committer of the same version number hits
+        FileExistsError → first-committer-wins (optimistic, like
+        ``transactions.py``) — unless that version's multi-table commit
+        never committed: then it is claimed aborted and the next number
+        tried.  Inside :func:`deferred_commits` the arguments are
+        staged instead.  ``commit`` and ``partners``: see
+        :func:`commit_together`.  ``meta`` is a caller's payload
+        published with this version only (never carried forward).
+        ``txns`` is the exactly-once watermark map for streaming sinks
+        (Delta's ``txn`` action): highest committed batch id per sink
+        id — DML commits must carry the caller's manifest's map forward
+        or replay protection would be lost."""
+        scope = _DEFERRED.get()
+        if scope is not None and commit is None:
+            staged, base = scope
+            if any(t.root == self.root for t, _ in staged):
+                raise DatabaseException(
+                    f"'{self.root}' already has a deferred commit")
+            if self.root in base and version != base[self.root] + 1:
+                raise ConflictException(
+                    f"partitioned table '{self.root}' is at version "
+                    f"{version - 1}, not the expected "
+                    f"{base[self.root]}; retry on a fresh read")
+            staged.append((self, {
+                "version": version, "partition_cols": partition_cols,
+                "schema": schema, "parts": parts, "txns": txns,
+                "tombstones": tombstones, "constraints": constraints,
+                "bloom_cols": bloom_cols, "tomb_counts": tomb_counts,
+                "op": op, "sort_cols": sort_cols}))
+            return version
         try:
             cur = self._manifest()
         except DatabaseException:
@@ -648,6 +708,8 @@ class PartitionedTable:
             "bloom_cols": sorted(bloom_cols),
             **({"sort_cols": list(sort_cols)} if sort_cols else {}),
             **({"commit": commit} if commit else {}),
+            **({"partners": partners} if partners else {}),
+            **({"meta": meta} if meta is not None else {}),
             # audit fields (DESCRIBE HISTORY): never read by any
             # correctness path, so the wall-clock stamp is harmless
             "op": op,
@@ -657,7 +719,7 @@ class PartitionedTable:
             try:
                 metaio.IO.write_new(self._manifest_path(version),
                                     json.dumps(payload))
-                return
+                return version
             except FileExistsError:
                 try:
                     record = json.loads(metaio.IO.read_text(
@@ -1154,6 +1216,17 @@ class PartitionedTable:
         dirs = [d for ds in parts.values() for d in ds]
         return self._scan(dirs, T._parse_datatype_string(man["schema"]),
                           man.get("tombstones", {}))
+
+    def read_staged(self) -> DataFrame:
+        """Scan this table's commit staged in the open
+        :func:`deferred_commits` scope, before it publishes."""
+        scope = _DEFERRED.get()
+        for table, args in scope[0] if scope else []:
+            if table.root == self.root:
+                return self._scan(
+                    [d for ds in args["parts"].values() for d in ds],
+                    args["schema"], args["tombstones"] or {})
+        raise DatabaseException(f"'{self.root}' has no deferred commit")
 
     def _match_keys(self, parts: dict, partition_values,
                     pcols: list[str]) -> set[str]:

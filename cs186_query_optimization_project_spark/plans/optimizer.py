@@ -38,13 +38,13 @@ from cs186_query_optimization_project_spark.predicates import (
     REFERENCE_OPS,
     PredicateOperator,
 )
+from cs186_query_optimization_project_spark.session import (
+    BROADCAST_THRESHOLD_BYTES,
+)
 
 if TYPE_CHECKING:  # pragma: no cover
     from cs186_query_optimization_project_spark.plans.builder import ColumnRef, Query
 
-#: Broadcast the build side below this many estimated bytes (mirrors
-#: spark.sql.autoBroadcastJoinThreshold set in session.py).
-BROADCAST_THRESHOLD_BYTES = 64 * 1024 * 1024
 #: Prefer shuffle-hash when the build side is this much smaller than probe.
 SHUFFLE_HASH_RATIO = 3.0
 

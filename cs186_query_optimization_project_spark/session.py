@@ -1,10 +1,11 @@
 """SparkSession construction with scale-appropriate defaults.
 
-The session is configured once for the whole engine: AQE on (runtime
-re-planning, skew-join splitting, partition coalescing), Arrow on (fast
+The session is configured once for the whole engine: Arrow on (fast
 pandas interchange for the vectorized UDF paths), UTC timestamps (oracle
 parity with DuckDB), and shuffle parallelism sized to the machine rather
-than Spark's legacy default of 200.  The driver JVM compiles with C2 only
+than Spark's legacy default of 200.  AQE (runtime re-planning, skew-join
+splitting, partition coalescing) and parquet filter pushdown are Spark's
+defaults and are not restated here.  The driver JVM compiles with C2 only
 the code that stays hot (``C2_THRESHOLD_SCALE``).
 
 On a real cluster these settings scale: AQE re-sizes shuffle partitions
@@ -21,14 +22,13 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = max(os.cpu_count() or 8, 8)
 
+#: Broadcast a join side below this many bytes: Spark's
+#: ``autoBroadcastJoinThreshold`` below, and the optimizer's cost rule.
+BROADCAST_THRESHOLD_BYTES = 64 * 1024 * 1024
+
 #: Configs applied to every session the engine creates.  Each is safe on a
 #: multi-executor cluster; none assume local mode.
 ENGINE_CONF: dict[str, str] = {
-    # Adaptive query execution: re-plan from runtime stats (partition
-    # coalescing, SMJ->broadcast conversion, skew-join splitting).
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
     # Arrow for every pandas interchange (pandas_udf, applyInPandas, toPandas).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Deterministic timestamps for the DuckDB oracle.
@@ -39,10 +39,8 @@ ENGINE_CONF: dict[str, str] = {
     # TIMESTAMP(MICROS) (read natively as TIMESTAMP_NTZ), so this is
     # normally inert.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # Parity with the reference's in-order, ANSI-ish comparison semantics.
-    "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
-    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    "spark.sql.autoBroadcastJoinThreshold": str(BROADCAST_THRESHOLD_BYTES),
     # managed tables (bucketed writes) land outside the repo
     "spark.sql.warehouse.dir": "/tmp/spark_graft_warehouse",
     # The generated-code cache defaults to 100 entries; a session running

@@ -40,6 +40,11 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from cs186_query_optimization_project_spark.partitioned import (
+    listed_versions,
+    load_manifest,
+)
+
 
 class _DirPartition(InputPartition):
     def __init__(self, directory: str, columns: list[str]):
@@ -47,22 +52,9 @@ class _DirPartition(InputPartition):
         self.columns = columns
 
 
-def _read_manifest(root: str, version: int) -> dict:
-    from cs186_query_optimization_project_spark.partitioned import (
-        load_manifest,
-    )
-
-    return load_manifest(root, version)
-
-
 def _versions(root: str) -> list[int]:
     """The committed versions (a manifest of a multi-table commit that
     never committed is not part of the table's history)."""
-    from cs186_query_optimization_project_spark.partitioned import (
-        listed_versions,
-        load_manifest,
-    )
-
     return [v for v in listed_versions(os.path.join(root, "_manifests"))
             if load_manifest(root, v) is not None]
 
@@ -108,12 +100,12 @@ class ManifestStreamReader(DataSourceStreamReader):
         vs = [v for v in retained if lo <= v <= hi]
         added: list[str] = []
         if start.get("snapshot") == "pending":
-            first = _read_manifest(self.root, lo)
+            first = load_manifest(self.root, lo)
             for ds in first["parts"].values():
                 added.extend(ds)
-        prev = _read_manifest(self.root, lo)
+        prev = load_manifest(self.root, lo)
         for v in vs[1:]:
-            cur = _read_manifest(self.root, v)
+            cur = load_manifest(self.root, v)
             old_tombs = prev.get("tombstones", {})
             new_tombs = cur.get("tombstones", {})
             for key, new_ds in cur["parts"].items():
@@ -195,7 +187,7 @@ class ManifestStreamDataSource(DataSource):
         root = opts.get("root")
         if not root:
             raise ValueError("manifest_stream requires option 'root'")
-        return _read_manifest(root, _versions(root)[-1])["schema"]
+        return load_manifest(root, _versions(root)[-1])["schema"]
 
     def streamReader(self, schema) -> ManifestStreamReader:
         opts = {k.lower(): v for k, v in dict(self.options).items()}

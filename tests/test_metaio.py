@@ -210,16 +210,21 @@ for _m in ("read_text", "list_dir", "exists", "is_dir", "write_new",
 
 
 class CrashingIO(LocalMetadataIO):
-    """Pass-through that counts seam calls and, once ``at`` is reached,
-    fails that call and every later one — a process dying mid-commit."""
+    """Pass-through that counts seam calls (only the mutating ones when
+    ``writes_only``) and, once ``at`` is reached, fails that call and
+    every later one — a process dying mid-commit."""
 
-    def __init__(self, at=None):
-        self.at, self.calls = at, 0
+    def __init__(self, at=None, writes_only=False):
+        self.at, self.calls, self.writes_only = at, 0, writes_only
+
+
+_MUTATING = {"write_new", "make_dirs", "remove", "remove_tree"}
 
 
 def _crashing(name):
     def wrapper(self, path, *a, **kw):
-        self.calls += 1
+        if not self.writes_only or name in _MUTATING:
+            self.calls += 1
         if self.at is not None and self.calls >= self.at:
             raise RuntimeError(f"crash at metadata call {self.calls}")
         return getattr(LocalMetadataIO, name)(self, path, *a, **kw)
@@ -286,12 +291,15 @@ def test_two_table_commit_atomic_at_every_crash_point(spark, tmp_path,
         assert state() == (x, x), at
 
 
-def _sweep(monkeypatch, op, crash_write=None):
+def _sweep(monkeypatch, op, crash_write=None, writes_only=False):
     """Crash one operation at its metadata call 1, 2, ... in turn until
     an attempt completes, then once in its Spark write when
     ``crash_write(root)`` names the table whose ``_write_partitions``
-    fails.  ``op()`` stages one new operation (the same shape every
-    time, so the call sequence repeats) and returns ``(run, check)``:
+    fails.  ``writes_only`` counts only the mutating calls: a crash at
+    a read leaves the same files as a crash at the next write, so this
+    reaches every on-disk state in fewer attempts.  ``op()`` stages
+    one new operation (the same shape every time, so the call
+    sequence repeats) and returns ``(run, check)``:
     ``run()`` performs it; ``check(at)`` asserts that a fresh reader
     sees the state before or after it, retries, and asserts the after
     state."""
@@ -299,7 +307,7 @@ def _sweep(monkeypatch, op, crash_write=None):
     while not finished:
         at += 1
         run, check = op()
-        monkeypatch.setattr(metaio, "IO", CrashingIO(at))
+        monkeypatch.setattr(metaio, "IO", CrashingIO(at, writes_only))
         try:
             run()
             finished = True
@@ -422,10 +430,11 @@ def test_clone_atomic_at_every_crash_point(spark, tmp_path, monkeypatch):
 def test_postings_append_atomic_at_every_crash_point(spark, tmp_path,
                                                      monkeypatch):
     """``postings_append`` crashed at each metadata call and in the
-    doclen write (after the postings table committed): a freshly
-    loaded index is the one before the append or the one after it,
-    and retrying from the pre-crash handle converges.  The final index
-    ranks as a from-scratch scoring of every document."""
+    doclen write (after the postings table staged): a freshly loaded
+    index is the one before the append or the one after it.  Retrying
+    from the pre-crash handle converges before the commit and raises
+    the stale-handle error after it.  The final index ranks as a
+    from-scratch scoring of every document."""
     from cs186_query_optimization_project_spark.functions import (
         retrieval,
     )
@@ -443,18 +452,21 @@ def test_postings_append_atomic_at_every_crash_point(spark, tmp_path,
 
     def state():
         idx = retrieval.load_postings_index(path)
-        return (idx.n_docs, idx.append_epoch,
-                retrieval.doclen_table(spark, idx).count())
+        return (idx.n_docs, retrieval.doclen_table(spark, idx).count())
 
     def op():
         idx = retrieval.load_postings_index(path)
         batch = docs(idx.n_docs, idx.n_docs + 1)
         before = state()
-        after = (before[0] + 1, before[1] + 1, before[0] + 1)
+        after = (before[0] + 1, before[0] + 1)
 
         def check(at):
             assert state() in (before, after), at
-            retrieval.postings_append(spark, idx, batch)
+            if state() == before:
+                retrieval.postings_append(spark, idx, batch)
+            else:
+                with pytest.raises(ValueError, match="stale PostingsIndex"):
+                    retrieval.postings_append(spark, idx, batch)
             assert state() == after, at
             for sub in ("postings", "doclen"):
                 PartitionedTable(spark, os.path.join(path, sub)) \
@@ -472,6 +484,107 @@ def test_postings_append_atomic_at_every_crash_point(spark, tmp_path,
     want = retrieval.bm25_scores(corpus, "gamma w1", top_k=5)
     assert sorted(map(tuple, got.collect())) == \
         sorted(map(tuple, want.collect()))
+
+
+def _abandoned_op_sweep(spark, tmp_path, monkeypatch, maintain,
+                        compacts=False, crash_write=None):
+    """Crash ``maintain(idx, doomed)`` — a postings maintenance op on a
+    tiny index that removes document ``doomed``, or compacts when
+    ``compacts`` — at each mutating metadata call in turn (see
+    :func:`_sweep`),
+    abandon it, and append one document from a freshly loaded handle.
+    The index must then count exactly the documents its doc-length
+    table holds and rank as a from-scratch scoring of them."""
+    from cs186_query_optimization_project_spark.functions import (
+        retrieval,
+    )
+
+    path = str(tmp_path / "idx")
+    text = {i: f"alpha w{i % 4}" for i in range(12)}
+    text.update((i, "alpha beta gamma") for i in range(12, 24))
+    held = set(text)
+
+    def frame(ids):
+        return spark.createDataFrame([(i, text[i]) for i in sorted(ids)],
+                                     "doc_id long, text string")
+
+    def append_one(idx):    # one text: every append hits the same buckets
+        i = len(text)
+        text[i] = "alpha beta gamma"
+        held.add(i)
+        return retrieval.postings_append(spark, idx, frame([i]))
+
+    retrieval.build_postings_index(frame(held), path, n_buckets=4)
+
+    def op():
+        idx = retrieval.load_postings_index(path)
+        if compacts:
+            idx = append_one(idx)            # something to compact
+        doomed = min(i for i in held if i >= 12)
+
+        def check(at):
+            if not compacts and retrieval.load_postings_index(path) != idx:
+                held.discard(doomed)         # the op committed
+            out = append_one(retrieval.load_postings_index(path))
+            assert out.n_docs == len(held) \
+                == retrieval.doclen_table(spark, out).count(), at
+            got = retrieval.bm25_indexed(spark, out, "gamma w1", top_k=5)
+            want = retrieval.bm25_scores(frame(held), "gamma w1", top_k=5)
+            assert list(map(tuple, got.collect())) == \
+                list(map(tuple, want.collect())), at
+            if compacts:    # every attempt starts from a compact index
+                retrieval.postings_optimize(spark, out)
+            for sub in ("postings", "doclen"):
+                PartitionedTable(spark, os.path.join(path, sub)) \
+                    .vacuum(keep_last=1)
+
+        return lambda: maintain(idx, doomed), check
+
+    _sweep(monkeypatch, op, crash_write, writes_only=True)
+
+
+def test_postings_remove_abandoned_at_every_crash_point(spark, tmp_path,
+                                                         monkeypatch):
+    """An abandoned ``postings_remove`` — crashed at each metadata call
+    or in its doclen write — never skews the constants of the next
+    append."""
+    from cs186_query_optimization_project_spark.functions import (
+        retrieval,
+    )
+
+    _abandoned_op_sweep(
+        spark, tmp_path, monkeypatch,
+        lambda idx, d: retrieval.postings_remove(
+            spark, idx, spark.createDataFrame([(d,)], "doc_id long")),
+        crash_write=lambda r: r.endswith("doclen"))
+
+
+def test_postings_remove_soft_abandoned_at_every_crash_point(
+        spark, tmp_path, monkeypatch):
+    """An abandoned ``postings_remove_soft`` crashed at each metadata
+    call never skews the constants of the next append (the op writes
+    no data, so it has no Spark write to crash)."""
+    from cs186_query_optimization_project_spark.functions import (
+        retrieval,
+    )
+
+    _abandoned_op_sweep(
+        spark, tmp_path, monkeypatch,
+        lambda idx, d: retrieval.postings_remove_soft(spark, idx, [d]))
+
+
+def test_postings_optimize_abandoned_at_every_crash_point(
+        spark, tmp_path, monkeypatch):
+    """An abandoned ``postings_optimize`` — crashed at each metadata
+    call or in its doclen rewrite — never skews the next append."""
+    from cs186_query_optimization_project_spark.functions import (
+        retrieval,
+    )
+
+    _abandoned_op_sweep(
+        spark, tmp_path, monkeypatch,
+        lambda idx, _: retrieval.postings_optimize(spark, idx),
+        compacts=True, crash_write=lambda r: r.endswith("doclen"))
 
 
 def test_lakehouse_lifecycle_on_hadoop_backend(spark, tmp_path,
@@ -557,10 +670,10 @@ def test_hadoop_remove_raises_on_failed_delete(spark, tmp_path,
 def test_index_metadata_routes_through_seam(spark, tmp_path,
                                             monkeypatch):
     """Round-15 seam completion: the ANN index header and the
-    postings index meta — the index-layer metadata logs — must flow
-    through MetadataIO (write_new publish, read_text load), not bare
-    open(), so the whole index layer works wherever the manifests
-    live."""
+    postings index commit — its manifests and the multi-table commit
+    record — must flow through MetadataIO (write_new publish,
+    read_text load), not bare open(), so the whole index layer works
+    wherever the manifests live."""
     from cs186_query_optimization_project_spark.functions import (
         retrieval, similarity,
     )
@@ -585,5 +698,14 @@ def test_index_metadata_routes_through_seam(spark, tmp_path,
     rec.calls.clear()
     retrieval.build_postings_index(docs, str(tmp_path / "post"),
                                    n_buckets=4)
-    assert [p for n, p in rec.calls if n == "write_new"
-            and p.endswith(os.path.join("_postings_meta", "v0.json"))]
+    written = [p for n, p in rec.calls if n == "write_new"]
+    assert os.path.join(str(tmp_path / "post"), "postings", "_manifests",
+                        "v0.json") in written
+    assert [p for p in written
+            if os.path.dirname(p).endswith(os.sep + "_commits")]
+    rec.calls.clear()
+    assert retrieval.load_postings_index(str(tmp_path / "post")) \
+        is not None
+    assert [p for n, p in rec.calls if n == "read_text"
+            and p.endswith(os.path.join("postings", "_manifests",
+                                        "v0.json"))]

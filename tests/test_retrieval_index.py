@@ -188,9 +188,9 @@ def test_postings_reader_pinned_across_append(spark, docs,
 def test_postings_rebuild_crash_forces_clean_rebuild(spark, docs,
                                                      tmp_path_factory,
                                                      monkeypatch):
-    """A crash mid-REBUILD must not leave a loadable meta pointing at
-    deleted tables: the meta retracts first, so load returns None and
-    the caller rebuilds from scratch."""
+    """A crash mid-REBUILD must not leave a loadable handle pointing
+    at deleted tables: the old tables go first, so load returns None
+    and the caller rebuilds from scratch."""
     from cs186_query_optimization_project_spark import partitioned
 
     path = str(tmp_path_factory.mktemp("rb") / "idx")
@@ -216,27 +216,38 @@ def test_postings_rebuild_crash_forces_clean_rebuild(spark, docs,
 def test_postings_append_crash_retry_is_exactly_once(spark, docs,
                                                      tmp_path_factory,
                                                      monkeypatch):
-    """A crash AFTER the table commits but BEFORE the meta publish
-    leaves the published index untouched; retrying the same append
-    completes it with no duplicate postings (the append-epoch
-    watermark turns the replayed inserts into dedup no-ops)."""
+    """A crash AFTER both tables' manifests but BEFORE the commit
+    record leaves the published index untouched; retrying the same
+    append from the reloaded handle completes it exactly once (the
+    crashed attempt's manifests never count, so no postings
+    duplicate)."""
+    from cs186_query_optimization_project_spark import metaio
+
     path = str(tmp_path_factory.mktemp("crash") / "idx")
     base = docs.filter(F.col("doc_id") % 5 != 0)
     tail = docs.filter(F.col("doc_id") % 5 == 0)
     idx = retrieval.build_postings_index(base, path, n_buckets=16)
 
-    real_meta = retrieval._write_postings_meta
+    real_io = metaio.IO
 
-    def crash_once(i):
-        monkeypatch.setattr(retrieval, "_write_postings_meta", real_meta)
-        raise RuntimeError("simulated crash before meta publish")
+    class CrashAtRecord:
+        """Fails every write of a ``_commits/`` record."""
 
-    monkeypatch.setattr(retrieval, "_write_postings_meta", crash_once)
+        def __getattr__(self, name):
+            return getattr(real_io, name)
+
+        def write_new(self, p, text):
+            if f"{os.sep}_commits{os.sep}" in p:
+                raise RuntimeError("simulated crash before the record")
+            return real_io.write_new(p, text)
+
+    monkeypatch.setattr(metaio, "IO", CrashAtRecord())
     with pytest.raises(RuntimeError, match="simulated crash"):
         retrieval.postings_append(spark, idx, tail)
+    monkeypatch.setattr(metaio, "IO", real_io)
     # published index is bit-identical to before the torn append
     torn = retrieval.load_postings_index(path)
-    assert torn.n_docs == idx.n_docs and torn.append_epoch == 0
+    assert torn == idx
     assert rows(retrieval.bm25_indexed(spark, torn, "hash batch window",
                                        top_k=10)) \
         == rows(retrieval.bm25_scores(base, "hash batch window",
@@ -254,14 +265,14 @@ def test_postings_append_crash_retry_is_exactly_once(spark, docs,
         docs, str(tmp_path_factory.mktemp("crash") / "full"),
         n_buckets=16)
     assert n_inc == retrieval.term_postings(spark, full, ["hash"]).count()
+    assert (idx2.n_docs, idx2.avgdl) == (full.n_docs, full.avgdl)
 
 
 def test_postings_append_from_published_past_handle_raises(
         spark, docs, tmp_path_factory):
-    """Each publish creates the handle's next meta entry exclusively:
-    a second, different append from a handle another append already
-    published past finds that entry taken and raises the stale-handle
-    error; the published index keeps the first append."""
+    """A second, different append from a handle another append
+    already committed past raises the stale-handle error; the
+    published index keeps the first append."""
     path = str(tmp_path_factory.mktemp("race") / "idx")
     base = docs.filter(F.col("doc_id") % 5 != 0)
     idx = retrieval.build_postings_index(base, path, n_buckets=16)
@@ -271,6 +282,88 @@ def test_postings_append_from_published_past_handle_raises(
         retrieval.postings_append(
             spark, idx, docs.filter(F.col("doc_id") % 5 == 0).limit(1))
     assert retrieval.load_postings_index(path) == first
+
+
+def test_postings_op_raced_past_its_guard_raises_conflict(
+        spark, docs, tmp_path_factory, monkeypatch):
+    """Another writer's append that commits after an op's stale-handle
+    check but before the op stages its tables makes the op raise
+    ConflictException; the racer's commit stands and the index's
+    constants count exactly the documents its tables hold."""
+    from cs186_query_optimization_project_spark.errors import (
+        ConflictException,
+    )
+
+    path = str(tmp_path_factory.mktemp("raced") / "idx")
+    retrieval.build_postings_index(
+        docs.filter(F.col("doc_id") % 10 >= 5), path, n_buckets=8)
+    real_guard = retrieval._guard_fresh_handle
+    racers, landed = [], []
+
+    def guard_then_race(index):
+        real_guard(index)
+        if racers:
+            landed.append(retrieval.postings_append(spark, index,
+                                                    racers.pop()))
+
+    monkeypatch.setattr(retrieval, "_guard_fresh_handle", guard_then_race)
+    doomed = [r["doc_id"] for r in docs.filter(F.col("doc_id") % 10 == 9)
+              .select("doc_id").limit(5).collect()]
+    ops = [
+        lambda h: retrieval.postings_append(
+            spark, h, docs.filter(F.col("doc_id") % 10 == 4)),
+        lambda h: retrieval.postings_remove_soft(spark, h, doomed),
+        lambda h: retrieval.postings_remove(
+            spark, h, spark.createDataFrame([(i,) for i in doomed],
+                                            "doc_id long")),
+        lambda h: retrieval.postings_optimize(spark, h),
+    ]
+    for k, op in enumerate(ops):
+        racers.append(docs.filter(F.col("doc_id") % 10 == k))
+        handle = retrieval.load_postings_index(path)
+        with pytest.raises(ConflictException):
+            op(handle)
+        now = retrieval.load_postings_index(path)
+        assert now == landed[-1]
+        assert now.n_docs == retrieval.doclen_table(spark, now).count()
+    held = docs.filter(F.col("doc_id") % 10 != 4)   # every racer
+    assert rows(retrieval.bm25_indexed(spark, now, "hash batch window",
+                                       top_k=10)) \
+        == rows(retrieval.bm25_scores(held, "hash batch window",
+                                      top_k=10))
+
+
+def test_postings_rebuild_crash_inside_delete_forces_clean_rebuild(
+        spark, docs, tmp_path_factory, monkeypatch):
+    """A rebuild that crashes while deleting the old postings table,
+    after some data directories went, leaves no loadable handle: the
+    postings manifests are deleted before any data file."""
+    from cs186_query_optimization_project_spark import metaio
+
+    path = str(tmp_path_factory.mktemp("rbdel") / "idx")
+    retrieval.build_postings_index(docs.limit(50), path, n_buckets=8)
+    real_io = metaio.IO
+    postings = os.path.join(path, "postings")
+
+    class CrashInDelete:
+        """Deletes the postings data directories, then crashes."""
+
+        def __getattr__(self, name):
+            return getattr(real_io, name)
+
+        def remove_tree(self, p):
+            if p == postings:
+                for name in os.listdir(p):
+                    if name != "_manifests":
+                        real_io.remove_tree(os.path.join(p, name))
+                raise RuntimeError("simulated crash inside the delete")
+            return real_io.remove_tree(p)
+
+    monkeypatch.setattr(metaio, "IO", CrashInDelete())
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        retrieval.build_postings_index(docs.limit(50), path, n_buckets=8)
+    monkeypatch.setattr(metaio, "IO", real_io)
+    assert retrieval.load_postings_index(path) is None
 
 
 def test_postings_remove_equals_rebuild_on_survivors(spark, docs,
@@ -333,7 +426,7 @@ def test_postings_optimize_compacts_without_changing_ranks(
         spark, docs, tmp_path_factory):
     """After two appends a probed bucket reads 3 directories;
     postings_optimize compacts each bucket to one and republishes the
-    meta at the post-compaction versions — rankings byte-identical,
+    index at the post-compaction versions — rankings byte-identical,
     pre-optimize readers still pinned to intact old versions."""
     path = str(tmp_path_factory.mktemp("opt") / "idx")
     idx = retrieval.build_postings_index(
@@ -662,6 +755,6 @@ def test_postings_optimize_if_debt_policy(spark, docs,
             ._manifest()["tombstones"]       # debt cleared
     assert rows(retrieval.bm25_indexed(spark, out, "hash batch",
                                        top_k=5)) == want
-    # stale handle (superseded by the compaction's meta publish)
+    # stale handle (superseded by the compaction's commit)
     with pytest.raises(ValueError, match="stale PostingsIndex"):
         retrieval.postings_optimize_if(spark, idx, max_tombstones=0)

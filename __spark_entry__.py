@@ -3645,10 +3645,11 @@ _ANN_PARAMS = {"lsh": {"n_planes": 4}, "ivf": {"n_cells": 16},
 #: bump when the index CONTENT semantics change without a parameter
 #: change (e.g. v2: ivf_centroids switched from xxhash64 to the portable
 #: md5 pick; v3: the ivfpq code table moved onto PartitionedTable; v4:
-#: the header moved to a write-once ``_ann_meta/`` log) —
+#: the header moved to a write-once ``_ann_meta/`` log; v5: the header
+#: rides the table manifest and LSH/IVF moved onto PartitionedTable) —
 #: keeps a stale on-disk index from silently serving the old layout to
 #: a probe whose oracle assumes the new one
-_ANN_INDEX_VERSION = 4
+_ANN_INDEX_VERSION = 5
 
 #: bump to invalidate the shared lakehouse skipping fixture below
 _LAKE_FIXTURE_VERSION = 1
@@ -5044,16 +5045,14 @@ def _ivfpq_base_index(spark, sf_dir) -> similarity.AnnIndex:
 
 def _clone_ivfpq(spark, base_idx: similarity.AnnIndex,
                  dest: str) -> similarity.AnnIndex:
-    """Shallow-clone the base index's code table to ``dest`` and wrap
-    it in an AnnIndex handle carrying the same frozen header."""
+    """Shallow-clone the base index's code table to ``dest``; the
+    clone's manifest carries the same frozen header."""
     from cs186_query_optimization_project_spark.partitioned import (
         PartitionedTable,
     )
 
     PartitionedTable(spark, base_idx.path).clone(dest)
-    return similarity.AnnIndex("ivfpq", dest, base_idx.dim,
-                               base_idx.params,
-                               base_idx.source_fingerprint)
+    return similarity.load_ann_index(dest)
 
 
 def q_ivfpq_append(spark, sf_dir):

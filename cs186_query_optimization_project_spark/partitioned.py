@@ -257,7 +257,7 @@ def _coalesce_tombstone(existing: list[str], cond: str) -> tuple[
 def listed_versions(log: str) -> list[int]:
     """Every entry number of the write-once ``v<N>.json`` log directory
     ``log``, oldest first: a table's ``_manifests`` (committed or not),
-    an index meta log or a change cursor."""
+    the ``_table_stats/`` log or a change cursor."""
     out = []
     for name in metaio.IO.list_dir(log):
         if name.startswith("v") and name.endswith(".json"):
@@ -363,9 +363,10 @@ def commit_together(commits: list,
     version.  Each manifest lists as ``partners`` the versions the
     tables before it landed at (a table moves past a number held by a
     commit that never committed).  ``meta`` maps a table root to a
-    payload its manifest carries (that version only); those tables
-    publish last, so their ``partners`` name every other table's
-    version.  A lost race on any table raises ConflictException."""
+    payload its manifest carries (later commits that pass none carry
+    it forward); those tables publish last, so their ``partners``
+    name every other table's version.  A lost race on any table
+    raises ConflictException."""
     meta = meta or {}
     commits = sorted(commits, key=lambda c: c[0].root in meta)
     if len(commits) == 1:
@@ -633,8 +634,9 @@ class PartitionedTable:
         never committed: then it is claimed aborted and the next number
         tried.  Inside :func:`deferred_commits` the arguments are
         staged instead.  ``commit`` and ``partners``: see
-        :func:`commit_together`.  ``meta`` is a caller's payload
-        published with this version only (never carried forward).
+        :func:`commit_together`.  ``meta`` is a caller's payload (an
+        index header); like the table policy below, ``None`` carries
+        the current manifest's forward.
         ``txns`` is the exactly-once watermark map for streaming sinks
         (Delta's ``txn`` action): highest committed batch id per sink
         id — DML commits must carry the caller's manifest's map forward
@@ -662,8 +664,10 @@ class PartitionedTable:
         except DatabaseException:
             cur = {}  # first commit of a fresh table
         # table POLICY — CHECK constraints, bloom-index and sort-order
-        # declarations — carries forward unless a caller explicitly
-        # changes it (add/drop/clone pass their own)
+        # declarations, the caller's meta — carries forward unless a
+        # caller explicitly changes it (add/drop/clone pass their own)
+        if meta is None:
+            meta = cur.get("meta")
         if constraints is None:
             constraints = cur.get("constraints", {})
         if bloom_cols is None:
@@ -3093,12 +3097,13 @@ class PartitionedTable:
     def restore(self, version: int) -> "PartitionedTable":
         """Delta ``RESTORE``: publish a NEW version whose content is
         exactly the retained ``version``'s (parts, tombstones,
-        partition column, schema) — history only rolls FORWARD, so the
-        bad intermediate versions stay readable for audit, and the
-        restore itself is one manifest write: O(metadata), zero data
-        movement at any table size.  The streaming ``txns`` watermark
-        map carries forward from the CURRENT version, not the restored
-        one — exactly-once replay protection must survive a rollback.
+        partition column, schema, ``meta``) — history only rolls
+        FORWARD, so the bad intermediate versions stay readable for
+        audit, and the restore itself is one manifest write:
+        O(metadata), zero data movement at any table size.  The
+        streaming ``txns`` watermark map carries forward from the
+        CURRENT version, not the restored one — exactly-once replay
+        protection must survive a rollback.
         ``changes()`` across the restore commit reports exactly the
         rows that came back or disappeared (it is an ordinary manifest
         diff).  CHECK constraints are NOT re-validated against the
@@ -3112,7 +3117,7 @@ class PartitionedTable:
                      old["parts"], txns=cur.get("txns"),
                      tombstones=old.get("tombstones"),
                      tomb_counts=old.get("tomb_counts", {}),
-                     op=f"RESTORE (to v{version})")
+                     meta=old.get("meta"), op=f"RESTORE (to v{version})")
         return self
 
     def clone(self, dest_root: str,
@@ -3153,7 +3158,8 @@ class PartitionedTable:
                      constraints=man.get("constraints", {}),
                      bloom_cols=man.get("bloom_cols", []),
                      tomb_counts=man.get("tomb_counts", {}),
-                     sort_cols=man.get("sort_cols", []), op="CLONE")
+                     sort_cols=man.get("sort_cols", []),
+                     meta=man.get("meta"), op="CLONE")
         return PartitionedTable(self.spark, dest_root)
 
     # ------------------------------------------------------------------ #

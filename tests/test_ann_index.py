@@ -1,12 +1,12 @@
 """Materialized ANN indexes: build-once partitioned tables probed via
-partition pruning (the vector-search analog of the sorted-write "index",
+manifest pruning (the vector-search analog of the sorted-write "index",
 database.py docstring / SURVEY.md §2.11).
 
-The scale claim under test is the PLAN, not just the rows: a probe's
-filter on the hive partition column must show up as ``PartitionFilters``
-on the scan (Catalyst prunes the directory listing), so at 100 TB the
-probe reads 1/2^n_planes (LSH) or n_probe/n_cells (IVF) of the files
-instead of re-hashing the corpus.
+The scale claim under test is the SCAN, not just the rows: a probe's
+input files must all lie in the manifest directories of the probed
+buckets (unprobed buckets are never listed), so at 100 TB the probe
+reads 1/2^n_planes (LSH) or n_probe/n_cells (IVF) of the files instead
+of re-hashing the corpus.
 """
 
 from __future__ import annotations
@@ -39,8 +39,20 @@ def _query_of(vectors, vec_id=0):
             .collect()[0]["embedding"]]
 
 
-def _scan_plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+def _probed_within(spark, idx, buckets, probe) -> dict:
+    """Assert every input file of ``probe`` lies in a manifest
+    directory of ``buckets``; returns the index's manifest."""
+    from cs186_query_optimization_project_spark.partitioned import (
+        PartitionedTable,
+    )
+
+    man = PartitionedTable(spark, idx.path)._manifest()
+    allowed = {os.path.normpath(d) for b in buckets
+               for d in man["parts"].get(str(b), [])}
+    got_dirs = {os.path.normpath(os.path.dirname(
+        f.removeprefix("file:"))) for f in probe.inputFiles()}
+    assert got_dirs and got_dirs <= allowed
+    return man
 
 
 def test_lsh_index_probe_matches_in_scan_path(spark, vectors, tmp_path):
@@ -56,15 +68,13 @@ def test_lsh_probe_plan_prunes_partitions(spark, vectors, tmp_path):
     q = _query_of(vectors)
     idx = similarity.build_lsh_index(vectors, str(tmp_path / "lsh"),
                                      n_planes=4, fingerprint="test-fp")
-    plan = _scan_plan(similarity.lsh_probe(spark, idx, q, k=5))
-    # the sig equality must be a PartitionFilter (directory pruning), not
-    # a post-scan Filter over all buckets
-    assert "PartitionFilters" in plan
-    pf = next(ln for ln in plan.splitlines() if "PartitionFilters" in ln)
-    assert "sig" in pf.split("PartitionFilters", 1)[1][:120]
-    # and the layout really is one directory per signature bucket
-    sig_dirs = [d for d in os.listdir(idx.path) if d.startswith("sig=")]
-    assert len(sig_dirs) > 1
+    qsig = similarity._query_signature(
+        similarity._hyperplanes(idx.dim, 4, 42), q)
+    # the scan reads only the query's signature bucket ...
+    man = _probed_within(spark, idx, [qsig],
+                         similarity.lsh_probe(spark, idx, q, k=5))
+    # ... of an index with more than one bucket
+    assert len(man["parts"]) > 1
 
 
 def test_ivf_index_probe_matches_in_scan_path(spark, vectors, tmp_path):
@@ -83,12 +93,11 @@ def test_ivf_probe_plan_prunes_partitions(spark, vectors, tmp_path):
     q = _query_of(vectors)
     idx = similarity.build_ivf_index(vectors, str(tmp_path / "ivf"),
                                      n_cells=8, fingerprint="test-fp")
-    plan = _scan_plan(similarity.ivf_probe(spark, idx, q, k=5, n_probe=2))
-    assert "PartitionFilters" in plan
-    pf = next(ln for ln in plan.splitlines() if "PartitionFilters" in ln)
-    assert "cell" in pf.split("PartitionFilters", 1)[1][:120]
-    cell_dirs = [d for d in os.listdir(idx.path) if d.startswith("cell=")]
-    assert len(cell_dirs) > 2  # probe reads 2 of these, prunes the rest
+    probe_cells = similarity._nearest_cells(idx.params["centroids"], q, 2)
+    man = _probed_within(spark, idx, probe_cells,
+                         similarity.ivf_probe(spark, idx, q, k=5,
+                                              n_probe=2))
+    assert len(man["parts"]) > 2  # probe reads 2 of these, prunes the rest
 
 
 def test_index_load_and_staleness(spark, vectors, tmp_path):
@@ -139,25 +148,15 @@ def test_ivfpq_probe_recall_and_pruning(spark, vectors, tmp_path):
     all live in directories the manifest maps to PROBED cells — the
     unprobed cells' directories are never even listed (stronger than a
     PartitionFilters entry over a full file listing)."""
-    from cs186_query_optimization_project_spark.partitioned import (
-        PartitionedTable,
-    )
-
     q = _query_of(vectors)
     idx = similarity.build_ivfpq_index(vectors, str(tmp_path / "ivfpq"),
                                        n_cells=4, m=2, k=4,
                                        fingerprint="test-fp")
     probe_cells = similarity._nearest_cells(
         idx.params["centroids"], q, 2)
-    cand = similarity.ivfpq_probe(spark, idx, q, n_probe=2)
-    man = PartitionedTable(spark, idx.path)._manifest()
-    allowed = {os.path.normpath(d)
-               for c in probe_cells
-               for d in man["parts"][str(c)]}
+    man = _probed_within(spark, idx, probe_cells,
+                         similarity.ivfpq_probe(spark, idx, q, n_probe=2))
     assert len(man["parts"]) == 4          # index has unprobed cells
-    got_dirs = {os.path.normpath(os.path.dirname(
-        f.removeprefix("file:"))) for f in cand.inputFiles()}
-    assert got_dirs and got_dirs <= allowed
     top = similarity.ivfpq_topk(spark, idx, vectors, q, k=5, n_probe=4)
     got = [r["vec_id"] for r in top.collect()]
     exact = {r["vec_id"] for r in
@@ -320,10 +319,6 @@ def test_ivfpq_batch_matches_per_query(spark, vectors, tmp_path):
     exactly what the single-query ADC probe and exact re-rank return;
     the probe scan must list only the UNION of probed cells'
     manifest directories."""
-    from cs186_query_optimization_project_spark.partitioned import (
-        PartitionedTable,
-    )
-
     idx = similarity.build_ivfpq_index(vectors, str(tmp_path / "bat"),
                                        n_cells=8, m=2, k=4,
                                        fingerprint="test-fp")
@@ -345,12 +340,7 @@ def test_ivfpq_batch_matches_per_query(spark, vectors, tmp_path):
     union = {c for _, qv in queries
              for c in similarity._nearest_cells(
                  idx.params["centroids"], qv, 2)}
-    man = PartitionedTable(spark, idx.path)._manifest()
-    allowed = {os.path.normpath(d) for c in union
-               for d in man["parts"].get(str(c), [])}
-    got_dirs = {os.path.normpath(os.path.dirname(
-        f.removeprefix("file:"))) for f in cand.inputFiles()}
-    assert got_dirs and got_dirs <= allowed
+    _probed_within(spark, idx, union, cand)
     # exact re-rank parity
     top = similarity.ivfpq_topk_batch(spark, idx, vectors, queries,
                                       k=5, n_probe=4)
@@ -569,3 +559,85 @@ def test_ivfpq_maintenance_stale_handle_guard(spark, vectors, tmp_path):
         n_probe=8).collect()
     assert len(got) >= 3    # candidate set for the exact re-rank
     assert any(r["vec_id"] >= 150 for r in got)  # appended rows live
+
+
+def test_ivfpq_maintenance_raced_by_rebuild_raises_conflict(
+        spark, vectors, tmp_path, monkeypatch):
+    """A rebuild that commits a new header after a maintenance op's
+    staleness check, but before the op commits, makes the op raise
+    ConflictException: the rebuild's codes and header stand, and a
+    fresh load probes them correctly."""
+    from cs186_query_optimization_project_spark.errors import (
+        ConflictException,
+    )
+
+    path = str(tmp_path / "race")
+    base = vectors.filter(F.col("vec_id") < 150)
+    similarity.build_ivfpq_index(base, path, n_cells=4, m=2, k=4,
+                                 fingerprint="v0")
+    real_guard = similarity._guard_fresh_ann_handle
+    rebuilds = iter([8, 6])
+    landed = []
+
+    def guard_then_rebuild(index):
+        version = real_guard(index)
+        n_cells = next(rebuilds)
+        landed.append(similarity.build_ivfpq_index(
+            base, path, n_cells=n_cells, m=2, k=4,
+            fingerprint=f"v{n_cells}"))
+        return version
+
+    monkeypatch.setattr(similarity, "_guard_fresh_ann_handle",
+                        guard_then_rebuild)
+    late = vectors.filter(F.col("vec_id") >= 150)
+    ops = [lambda h: similarity.ivfpq_append(h, late),
+           lambda h: similarity.ivfpq_remove(
+               spark, h, base.filter(F.col("vec_id") < 10)
+               .select("vec_id"))]
+    for op in ops:
+        with pytest.raises(ConflictException):
+            op(similarity.load_ann_index(path))
+        now = similarity.load_ann_index(path)
+        assert now == landed[-1]
+        assert similarity.ivfpq_codes(spark, now).count() == base.count()
+    n_cells = len(now.params["centroids"])
+    got = similarity.ivfpq_topk(spark, now, base, _query_of(vectors, 7),
+                                k=3, n_probe=n_cells)
+    assert got.collect()[0]["vec_id"] == 7
+
+
+def test_ann_rebuild_crash_inside_delete_forces_clean_rebuild(
+        spark, vectors, tmp_path, monkeypatch):
+    """A rebuild that must replace the old table (here an IVF index
+    rebuilt as IVF-PQ, a schema change) and crashes while deleting it,
+    after the data directories went, leaves no loadable index: the
+    manifests, which carry the header, are deleted before any data
+    directory."""
+    from cs186_query_optimization_project_spark import metaio
+
+    path = str(tmp_path / "idx")
+    similarity.build_ivf_index(vectors, path, n_cells=4)
+    real_io = metaio.IO
+
+    class CrashInDelete:
+        """Deletes the index's data directories, then crashes."""
+
+        def __getattr__(self, name):
+            return getattr(real_io, name)
+
+        def remove_tree(self, p):
+            if p == path:
+                for name in os.listdir(p):
+                    if name != "_manifests":
+                        real_io.remove_tree(os.path.join(p, name))
+                raise RuntimeError("simulated crash inside the delete")
+            return real_io.remove_tree(p)
+
+    monkeypatch.setattr(metaio, "IO", CrashInDelete())
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        similarity.build_ivfpq_index(vectors, path, n_cells=4, m=2, k=4)
+    monkeypatch.setattr(metaio, "IO", real_io)
+    assert similarity.load_ann_index(path) is None
+    rebuilt = similarity.build_ivfpq_index(vectors, path, n_cells=4, m=2,
+                                           k=4)
+    assert similarity.load_ann_index(path) == rebuilt

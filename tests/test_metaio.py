@@ -486,6 +486,57 @@ def test_postings_append_atomic_at_every_crash_point(spark, tmp_path,
         sorted(map(tuple, want.collect()))
 
 
+@pytest.mark.parametrize("kind", ["ivfpq", "ivf"])
+def test_ann_rebuild_atomic_at_every_crash_point(spark, tmp_path,
+                                                 monkeypatch, kind):
+    """An ANN rebuild from 4 cells to 8, crashed at each metadata call
+    and in its Spark write: a freshly loaded index carries the old
+    header and probes as the old index, or the new header and probes
+    as the new one — never a header over codes it did not encode.  A
+    retry converges to the new index."""
+    from cs186_query_optimization_project_spark.functions import (
+        similarity,
+    )
+
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 7) - 3, float(i % 5) - 2, float(i % 3) - 1,
+              1.0 + i % 2]) for i in range(100)],
+        "vec_id long, embedding array<float>")
+    q = [2.0, -1.0, 0.5, 1.0]
+
+    def build(path, n_cells):
+        if kind == "ivf":
+            return similarity.build_ivf_index(vecs, path, n_cells=n_cells)
+        return similarity.build_ivfpq_index(vecs, path, n_cells=n_cells,
+                                            refine_iters=0, m=2, k=4)
+
+    def answer(idx):
+        n = len(idx.params["centroids"])
+        probe = (similarity.ivf_probe(spark, idx, q, n_probe=n)
+                 if kind == "ivf" else
+                 similarity.ivfpq_probe(spark, idx, q, n_probe=n))
+        return idx.params, [tuple(r) for r in probe.collect()]
+
+    old = answer(build(str(tmp_path / "old"), 4))
+    new = answer(build(str(tmp_path / "new"), 8))
+    assert old != new
+    path = str(tmp_path / "idx")
+    build(path, 4)
+
+    def op():
+        def check(at):
+            got = answer(similarity.load_ann_index(path))
+            assert got in (old, new), at
+            build(path, 8)
+            assert answer(similarity.load_ann_index(path)) == new, at
+            # every attempt rebuilds from the 4-cell version
+            PartitionedTable(spark, path).restore(0)
+
+        return lambda: build(path, 8), check
+
+    _sweep(monkeypatch, op, lambda r: True)
+
+
 def _abandoned_op_sweep(spark, tmp_path, monkeypatch, maintain,
                         compacts=False, crash_write=None):
     """Crash ``maintain(idx, doomed)`` — a postings maintenance op on a
@@ -669,11 +720,11 @@ def test_hadoop_remove_raises_on_failed_delete(spark, tmp_path,
 
 def test_index_metadata_routes_through_seam(spark, tmp_path,
                                             monkeypatch):
-    """Round-15 seam completion: the ANN index header and the
-    postings index commit — its manifests and the multi-table commit
-    record — must flow through MetadataIO (write_new publish,
-    read_text load), not bare open(), so the whole index layer works
-    wherever the manifests live."""
+    """Round-15 seam completion: the ANN index commit — its manifest,
+    which carries the header — and the postings index commit — its
+    manifests and the multi-table commit record — must flow through
+    MetadataIO (write_new publish, read_text load), not bare open(),
+    so the whole index layer works wherever the manifests live."""
     from cs186_query_optimization_project_spark.functions import (
         retrieval, similarity,
     )
@@ -684,14 +735,12 @@ def test_index_metadata_routes_through_seam(spark, tmp_path,
         [(i, [float(i % 7), float(i % 5), float(i % 3)])
          for i in range(40)],
         "vec_id long, embedding array<float>")
-    idx = similarity.build_ivf_index(
-        emb, str(tmp_path / "ivf"), n_cells=4)
-    assert [p for n, p in rec.calls if n == "write_new"
-            and p.endswith(os.path.join("_ann_meta", "v0.json"))]
+    similarity.build_ivf_index(emb, str(tmp_path / "ivf"), n_cells=4)
+    ivf_v0 = os.path.join(str(tmp_path / "ivf"), "_manifests", "v0.json")
+    assert ivf_v0 in [p for n, p in rec.calls if n == "write_new"]
     rec.calls.clear()
     assert similarity.load_ann_index(str(tmp_path / "ivf")) is not None
-    assert [p for n, p in rec.calls if n == "read_text"
-            and "_ann_meta" in p]
+    assert ivf_v0 in [p for n, p in rec.calls if n == "read_text"]
     docs = spark.createDataFrame(
         [(i, f"alpha beta gamma{i % 3}") for i in range(30)],
         "doc_id long, text string")

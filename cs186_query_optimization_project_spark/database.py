@@ -572,18 +572,34 @@ class Database:
     def lookup(self, table: str, column: str, value: object) -> DataFrame:
         """Point read: all records with ``column == value``.
 
-        The reference descends a B+ tree (``BPlusTree.java:106–121``); the
-        scale-out analog is a pushed equality predicate over files sorted
-        on the key at write time, so the scan skips every row group whose
-        min/max excludes the key — at 100 TB a handful of row groups read
-        instead of the table.
+        The reference descends a B+ tree to one leaf page
+        (``BPlusTree.java:106–121``).  On a manifest table, with a probe
+        of the column's own type, the files of the entry's version that
+        the key's manifest entry, Bloom filter and per-file bounds admit
+        are read on the driver when they total at most
+        ``partitioned.DRIVER_READ_MAX_BYTES`` (1 MiB): the result is a
+        local relation, and collecting it runs no Spark job
+        (``PartitionedTable._read_if_small``).  Larger admitted sets,
+        other probes and other entries scan with Spark: a pushed
+        equality predicate over files sorted on the key at write time,
+        so the scan skips every row group whose min/max excludes the
+        key — at 100 TB a handful of row groups read instead of the
+        table.  Either way the rows equal
+        ``table(table).where(col == value)``.
         """
+        entry = self._entry(table)
+        if entry.table is not None:
+            local = entry.table._read_if_small(
+                entry.table._manifest(entry.version), column, value)
+            if local is not None:
+                return local
         return self.table(table).where(F.col(column) == F.lit(value))
 
     def contains(self, table: str, column: str, value: object) -> bool:
         """``containsKey`` (``BPlusTree.java:123–128``): does any record
-        with this key exist?  ``take(1)`` plans a limit-1 scan that stops
-        at the first hit."""
+        with this key exist?  ``take(1)`` of :meth:`lookup`: no Spark job
+        when the lookup reads on the driver, else a limit-1 scan that
+        stops at the first hit."""
         return bool(self.lookup(table, column, value).take(1))
 
     # ------------------------------------------------------------------ #

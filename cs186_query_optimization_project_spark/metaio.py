@@ -7,9 +7,16 @@ walk — goes through the one :class:`LocalMetadataIO` instance below
 (``partitioned.py``, ``mview.py``, ``sources/manifest_stream.py`` and
 the index modules import it as ``metaio.IO``).  Executor-side *data*
 I/O (parquet scans/writes) already goes through Spark/Arrow and is NOT
-behind this seam; neither are the pyarrow footer reads in
-``_dir_stats`` (stats collection belongs to the write job at cluster
-scale — Delta computes them inside the transaction).
+behind this seam; neither are two driver-side pyarrow reads of data
+files:
+
+- the footer reads in ``_dir_stats`` (stats collection belongs to the
+  write job at cluster scale — Delta computes them inside the
+  transaction);
+- ``PartitionedTable._read_local``, which reads a small version's
+  admitted parquet files (and their sizes) for point lookups and view
+  reads that run no Spark job.  A file it cannot stat as a local path
+  sends the read back to Spark.
 
 Why a seam: SCALE.md names the local-FS metadata boundary as the one
 port surface between this single-node sandbox and a 1000-executor

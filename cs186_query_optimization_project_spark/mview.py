@@ -327,7 +327,12 @@ class MaterializedView:
         """The stored aggregate as of the last refresh (stale reads are
         the contract — consistency is 'reflects source version N',
         recorded and queryable).  Reads the store's newest committed
-        version, so an in-flight concurrent refresh is invisible.
+        version, so an in-flight concurrent refresh is invisible.  A
+        store whose files total at most
+        ``partitioned.DRIVER_READ_MAX_BYTES`` (1 MiB) is read on the
+        driver into a local relation, so collecting the view runs no
+        Spark job (``PartitionedTable._read_if_small``); a larger one
+        scans with Spark.
         ``with_avg=True`` derives ``mv_avg_<c>`` the way SQL AVG does —
         sum over the NON-NULL contribution count (which the store
         maintains), not over the row count — so an all-NULL group
@@ -341,7 +346,10 @@ class MaterializedView:
         the clamp keeps float cancellation from ever surfacing as a
         negative variance or a NaN stddev; an all-NULL group reads
         NULL like AVG does."""
-        out = self._store().read().drop("__mv")
+        store = self._store()
+        man = store._manifest()
+        out = store._read_if_small(man)
+        out = (store._read(man) if out is None else out).drop("__mv")
         if with_avg:
             for c in self.sum_cols:
                 out = out.withColumn(
@@ -447,7 +455,7 @@ class MaterializedView:
             store._commit(man["version"] + 1, store._pcols_of(man),
                           T._parse_datatype_string(man["schema"]),
                           man["parts"], txns, man.get("tombstones"),
-                          op="MVIEW REFRESH")
+                          op="MVIEW REFRESH", base=man)
             return 0
         if self.distinct_cols and n_del:
             raise DatabaseException(

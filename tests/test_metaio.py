@@ -688,6 +688,41 @@ def test_lakehouse_routes_through_seam(spark, tmp_path, monkeypatch):
     assert len(stats) == 3                     # one per write job
 
 
+def test_write_verb_reads_manifest_once(spark, tmp_path, monkeypatch):
+    """Each write verb plans, writes and commits on the one manifest
+    it read: one ``_manifests`` listing and one manifest parse per
+    call, also on a table declaring Bloom and sort columns."""
+    schema = "id long, grp string, amt double"
+    df = spark.createDataFrame(
+        [(i, chr(65 + i % 3), float(i)) for i in range(12)], schema)
+    pt = PartitionedTable._create(spark, df, str(tmp_path / "t"), "grp",
+                                  ["id"], ["id"])
+    rec = RecordingIO()
+    monkeypatch.setattr(metaio, "IO", rec)
+    verbs = {
+        "insert": lambda: pt.insert(spark.createDataFrame(
+            [(20, "A", 1.0)], schema)),
+        "delete": lambda: pt.delete(F.col("id") == 1),
+        "overwrite_partitions": lambda: pt.overwrite_partitions(
+            spark.createDataFrame([(21, "B", 2.0)], schema), ["B"]),
+        "update": lambda: pt.update(F.col("id") == 2,
+                                    {"amt": F.lit(9.0)}),
+        "merge": lambda: pt.merge(spark.createDataFrame(
+            [(3, "A", 3.5), (22, "C", 4.0)], schema), "id"),
+        "delete_soft": lambda: pt.delete_soft("id = 4"),
+    }
+    for name, verb in verbs.items():
+        rec.calls.clear()
+        verb()
+        listings = [p for m, p in rec.calls
+                    if m == "list_dir" and p.endswith("_manifests")]
+        parses = [p for m, p in rec.calls if m == "read_text"
+                  and os.path.basename(os.path.dirname(p))
+                  == "_manifests"]
+        assert (len(listings), len(parses)) == (1, 1), name
+    assert pt.read().count() == 11
+
+
 def test_hadoop_remove_raises_on_failed_delete(spark, tmp_path,
                                                monkeypatch):
     """fs.delete() returning False while the path still exists
